@@ -265,24 +265,17 @@ def main() -> None:
 
         # Extras — measured and reported, but kept OUT of the headline wall so
         # `value` stays comparable across rounds (same query set since r1):
-        # (a/b) the claimed 100×-scale fallbacks: chunked-broadcast forced to
-        # 4 chunks (what auto engages when the broadcast score matrix blows
-        # its budget) and the driver-free cogrouped-kernel strategy;
-        # (c) the corpus-curation operators added in r4.
+        # (a) the 100×-scale fallback: the batch forced to 4 chunks of whole
+        # queries (what search() does when the broadcast score matrix blows
+        # its budget), one funnel per chunk;
+        # (b) the corpus-curation operators added in r4.
         est = 8 * n_q * idx.meta.k * 4  # QUERY_MAX_TOKENS * queries * K * 4B
         chunked_searcher = BatchSearcher(
             idx, SearchParams(top_k=10, n_full_scores=256),
-            approx_strategy="chunked", broadcast_budget_bytes=max(1, est // 4),
+            broadcast_budget_bytes=max(1, est // 4),
         )
         timed(extras, f"plaid_search_batch{n_q}_chunked4",
               lambda: force(chunked_searcher.search(encode_queries(batch_queries))))
-
-        kernel_searcher = BatchSearcher(
-            idx, SearchParams(top_k=10, n_full_scores=256),
-            approx_strategy="kernel",
-        )
-        timed(extras, f"plaid_search_batch{n_q}_kernel",
-              lambda: force(kernel_searcher.search(encode_queries(batch_queries))))
 
         # doc_id-bucketed token storage payoff (SCALING.md's cluster-scale
         # layout claim, measured): the headline index is the BUCKETED build

@@ -6,21 +6,27 @@ sum over query tokens:
 
     score(Q, D) = Σ_{q ∈ Q} max_{d ∈ D} q·d
 
-Two implementations:
+Implementations, all bit-identical under one float discipline (float64
+dots folded sequentially over dim; per-token maxima folded in ascending
+order from 0.0):
 
-1. ``maxsim_relational`` — pure DataFrame ops (join → groupBy max → groupBy
-   sum). Oracle-checkable in ANSI SQL, and the brute-force *exact* baseline
-   used to validate the ANN funnel (SURVEY.md §7 phase 1).
+1. ``maxsim_scores_relational`` — pure DataFrame ops (cross join → groupBy
+   max → sorted-fold sum). Oracle-checkable in ANSI SQL, and the reference
+   the kernels and the IVF funnel are tested against (SURVEY.md §7 phase 1).
 
-2. ``maxsim_pandas`` — Arrow-batched grouped kernel: one BLAS GEMM
-   ``Q @ D.T`` per (query, doc-chunk), ``max(axis)`` + ``sum`` — the Spark
-   analog of the reference's rayon/BLAS path. Used by the funnel's exact
-   rerank stage (search.rs:481-493) where the candidate set is small.
+2. ``maxsim_scores_by_token`` — the relational form with dots computed once
+   per distinct (query-token, doc-token) text pair; the explicit-pair
+   rerank (operators/rerank.py) runs on it.
 
-Scale note: the relational form shuffles |q_tokens × candidate_doc_tokens|
-rows; it is intended for *post-candidate-generation* scoring (thousands of
-candidate docs per query), never the full corpus at 100 TB — that is what the
-IVF funnel (operators/search.py) is for.
+3. ``maxsim_brute_kernel`` (``brute_force_search``) — exact top-k as one
+   doc-parallel ``mapInPandas`` kernel with the query batch broadcast: one
+   corpus scan, no pair shuffle. The funnel's exact rerank stage
+   (plans/searcher.py Q9) is the same kernel over survivor docs.
+
+Scale note: the relational forms shuffle |q_tokens × candidate_doc_tokens|
+rows; they are intended for *post-candidate-generation* scoring (thousands
+of candidate docs per query), never the full corpus at 100 TB — that is what
+the IVF funnel (plans/searcher.py) is for.
 """
 
 from __future__ import annotations
@@ -279,24 +285,8 @@ def maxsim_brute_kernel(query_tokens: DataFrame, doc_tokens: DataFrame,
 
 def brute_force_search(
     query_tokens: DataFrame, doc_tokens: DataFrame, k: int = 10,
-    *, strategy: str = "kernel",
 ) -> DataFrame:
-    """Exact top-k MaxSim over the full corpus — the funnel's recall oracle.
-
-    ``strategy="kernel"`` (default) — the doc-parallel broadcast kernel
-    (bit-identical results, one corpus scan, no pair shuffle).
-    ``"relational"`` — pure DataFrame ops (token-deduped when both sides
-    carry the ``token`` column); kept for plan comparison and environments
-    without Python workers."""
-    if strategy == "kernel":
-        return maxsim_brute_kernel(query_tokens, doc_tokens, k)
-    if "token" in query_tokens.columns and "token" in doc_tokens.columns:
-        scores = maxsim_scores_by_token(query_tokens, doc_tokens)
-    else:
-        scores = maxsim_scores_relational(query_tokens, doc_tokens)
-    return topk(scores, k)
-
-
-# (A pre-joined applyInPandas GEMM variant, maxsim_pandas, used to live
-# here; it was dead code with a row-at-a-time inner loop — removed in r5.
-# The exact rerank stage lives in plans/searcher.py Q9.)
+    """Exact top-k MaxSim over the full corpus — the funnel's recall oracle:
+    the doc-parallel broadcast kernel (one corpus scan, no pair shuffle).
+    ``topk(maxsim_scores_relational(...), k)`` returns the same rows."""
+    return maxsim_brute_kernel(query_tokens, doc_tokens, k)

@@ -13,19 +13,26 @@ Reference lifecycle (next-plaid/src/search.rs:327-516, SURVEY.md §2.4):
   Q9  exact MaxSim on decompressed survivors
   Q10 final top-k
 
-Spark realization: every step is a join/groupBy/window over the query
-DataFrame — batch search (Q11) is the natural mode, not a loop. The probe
-(Q1/Q2) is the only UDF stage (argpartition over a [q_tokens, K] GEMM);
-everything downstream is Catalyst-planned. Column pruning means Q6 never
-reads the ``residual`` column — the Parquet scan for the approx stage fetches
-(doc_id, code) only, the analog of the reference's codes-only pass.
+Spark realization: batch search (Q11) is the natural mode, not a loop —
+the query batch is the small side, collected once to the driver and
+broadcast. Q1–Q3 run driver-side in NumPy over the batch's [q_tokens, K]
+centroid-score matrix; Q5+Q6 are one doc-parallel ``mapInPandas`` kernel
+over each candidate doc's code list; Q7/Q8 are a rank window; Q9 is a
+second doc-parallel kernel over the survivors' (code, residual) lists;
+Q10 is a rank window. Column pruning means Q6 never reads the ``residual``
+column — the Parquet scan for the approx stage fetches (doc_id, code) only,
+the analog of the reference's codes-only pass. A batch whose score matrix
+is over budget runs as chunks of whole queries, one funnel each.
 
-Skew note (SURVEY §7): natural-language IVF cells are Zipfian. The Q5/Q6
-joins run with AQE skew-join splitting; at extreme skew, salt ``code``.
+Skew note (SURVEY §7): natural-language IVF cells are Zipfian. Both kernels
+scan each candidate doc once per batch, so a hot cell adds docs to scan,
+not a per-cell serialization point.
 """
 
 from __future__ import annotations
 
+import functools
+import math
 import os
 from dataclasses import dataclass
 
@@ -34,7 +41,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from next_plaid_spark.functions.vector import dot
 from next_plaid_spark.operators.codec import decompress
 from next_plaid_spark.operators.maxsim import maxsim_scores_relational, topk
 from next_plaid_spark.sources.index_store import PlaidIndex
@@ -102,19 +108,6 @@ def _topn_mask(scores: np.ndarray, n: int) -> np.ndarray:
     return strict | (tie & (tie_rank <= need[:, None]))
 
 
-def _sorted_fold(col) -> "F.Column":
-    """Σ over a group in ascending-value order: collect, sort, sequential
-    double fold — the deterministic-order twin of F.sum, bit-identical to
-    DuckDB's list_reduce(list_prepend(0.0, list_sort(list(x)))). Used for
-    the approximate scores so every Q6 strategy (and the oracle) folds the
-    per-token maxima identically."""
-    return F.aggregate(
-        F.array_sort(F.collect_list(col)),
-        F.lit(0.0).cast("double"),
-        lambda acc, v: acc + v,
-    )
-
-
 @dataclass
 class SearchParams:
     """Defaults mirror search.rs:54-69."""
@@ -131,58 +124,36 @@ class SearchParams:
     keep_best_cell: bool = False
 
 
-# query-side size budget for the broadcast approx strategy: the precomputed
-# [q_tokens, K] float64 centroid-score matrix (built once driver-side, then
-# broadcast) must stay comfortably broadcastable. 256 MB holds a
-# 500-query × 8-token batch against K=4096 cells; bigger batches fall to
-# the chunked strategy, which splits by whole queries and stays
-# bit-identical.
+# query-side size budget for one funnel pass: the precomputed [q_tokens, K]
+# float64 centroid-score matrix (built once driver-side, then broadcast)
+# must stay comfortably broadcastable. 256 MB holds a 500-query × 8-token
+# batch against K=4096 cells; bigger batches run as chunks of whole
+# queries, which stays bit-identical.
 BROADCAST_SCORES_BUDGET_BYTES = 256 << 20
 
-# row budget for the Q9 vocab dot tables — the funnel's only nested-loop
-# join (|distinct surviving quantized vecs| × |query vocab| rows). Fine at
-# defaults; a pathological batch (huge vocab × huge survivor set) falls
-# back to the per-query equi-join form, which computes dots only for
-# surviving (query, doc) pairs and contains no cartesian product.
-RERANK_DOT_BUDGET_ROWS = 64 << 20
+_QT_COLS = ("query_id", "token_idx", "vec")
+_RESULT_SCHEMA = "query_id long, doc_id long, score double, rank int"
+
+
+def _collect_sorted(query_tokens: DataFrame):
+    """The query tokens as a driver pdf sorted by (query_id, token_idx) —
+    the form both funnel kernels read."""
+    return query_tokens.select(*_QT_COLS).sort("query_id", "token_idx").toPandas()
 
 
 class BatchSearcher:
     def __init__(self, index: PlaidIndex, params: SearchParams | None = None,
-                 *, approx_strategy: str = "auto",
-                 broadcast_budget_bytes: int | None = None):
-        """approx_strategy:
-        'auto' (default) — 'broadcast' while the query batch's centroid-score
-        matrix fits the broadcast budget, else 'chunked'.
-        'broadcast' — query side (token matrix + surviving cells) collected
-        and broadcast; one doc-parallel kernel scans each candidate doc's
-        code list exactly once for the whole batch. The scalable batch mode:
-        the query batch is the small side by construction, the corpus never
-        re-shuffles per query.
-        'chunked' — the over-budget fallback: the query batch is split into
-        broadcast-budget-sized chunks of whole queries, each running the
-        broadcast kernel; results union. Bounded driver memory at any batch
-        size, and each chunk still scans candidate docs once (measured ~1.5×
-        the broadcast wall for a same-size batch split 4 ways).
-        'kernel' — cogrouped Arrow kernel, the analog of the reference's
-        sparse codes-only scoring (search.rs:256-302); fully driver-free
-        but materializes the (query × doc) candidate pairs, duplicating
-        each candidate doc's code list per query (shipped as INT to halve
-        the shuffle). Measured ~2-2.5× the broadcast wall at sf0.1
-        batch500 — a worst case for this strategy: at that SF the probe is
-        non-selective (~every doc is a candidate of every query, 2.5M
-        pairs for 500×5k), so the pair shuffle carries the whole corpus
-        per query while broadcast scans each doc once per batch. On a
-        selective corpus (real K, candidates ≪ N) the pair volume is
-        n_queries × candidates, the strategy's intended regime. Kept for
-        truly unbounded batches where even per-chunk driver collection is
-        unwanted, and for plan comparison.
-        'relational' — pure Catalyst joins; same results, quadratically more
-        shuffled rows (kept for plan comparison and environments without
-        Python workers)."""
+                 *, broadcast_budget_bytes: int | None = None):
+        """Search is one funnel: the query side (token matrix + surviving
+        cells) is collected and broadcast, and one doc-parallel kernel scans
+        each candidate doc's code list exactly once for the whole batch —
+        the query batch is the small side by construction, and the corpus
+        never re-shuffles per query. ``broadcast_budget_bytes`` bounds the
+        batch's [q_tokens, K] centroid-score matrix; a batch over it is
+        split into chunks of whole queries, each running the same funnel,
+        so driver memory stays bounded at any batch size."""
         self.index = index
         self.params = params or SearchParams()
-        self.approx_strategy = approx_strategy
         self.broadcast_budget_bytes = (
             BROADCAST_SCORES_BUDGET_BYTES if broadcast_budget_bytes is None
             else broadcast_budget_bytes
@@ -211,90 +182,14 @@ class BatchSearcher:
                 pass
         self._live_caches.clear()
 
-    # -- Q6 strategies ------------------------------------------------------
-    def _approx_kernel(self, query_tokens: DataFrame, candidates: DataFrame,
-                       doc_codes: DataFrame) -> DataFrame:
-        """Codes-only approximate MaxSim as a cogrouped Arrow kernel: per
-        query, one [q_tokens, K] GEMM against the broadcast centroids, then
-        a vectorized gather+max over each candidate doc's code list. Row
-        volume is |candidates| (one row per (query, doc) with a small int
-        array), vs the relational strategy's |candidates × doc_codes ×
-        q_tokens| shuffle. ``doc_codes`` is (doc_id, codes ARRAY) — the
-        precomputed index artifact (or equivalent aggregation), NOT
-        re-derived from the token table per batch."""
-        import numpy as np
-        import pandas as pd
-
-        c64 = self._centroids64
-        # codes are centroid ids (K ≤ 2^18 in any real config): shipping the
-        # per-pair code list as INT halves the cogroup shuffle — the
-        # strategy's dominant cost — with identical downstream values
-        cand_with_codes = candidates.join(
-            doc_codes.select("doc_id",
-                             F.col("codes").cast("array<int>").alias("codes")),
-            "doc_id")
-
-        def score(key, cand_pdf, qt_pdf):
-            if not len(cand_pdf) or not len(qt_pdf):
-                return pd.DataFrame(
-                    {"query_id": [], "doc_id": [], "approx_score": []}
-                ).astype({"query_id": "int64", "doc_id": "int64",
-                          "approx_score": "float64"})
-            q = np.asarray(
-                [np.asarray(v, dtype=np.float64)
-                 for v in qt_pdf.sort_values("token_idx")["vec"]]
-            )
-            # [K, q_tokens] (transposed): the per-code gather below pulls
-            # whole contiguous rows instead of strided columns — same
-            # values, much better cache behavior on the hot gather.
-            # float64 sequential fold — bit-identical to the broadcast
-            # strategy's driver matrix and the DuckDB oracle.
-            scores_t = np.ascontiguousarray(_seq_centroid_scores(q, c64).T)
-            # segment-max over the flattened code lists — no per-doc Python
-            # loop (maximum.reduceat segments at each doc's offset)
-            code_lists = [np.asarray(cs, dtype=np.int64) for cs in cand_pdf["codes"]]
-            lens = np.fromiter((len(cs) for cs in code_lists), dtype=np.int64)
-            keep_mask = lens > 0
-            flat = np.concatenate([cs for cs in code_lists if len(cs)]) if keep_mask.any() else np.array([], dtype=np.int64)
-            if not len(flat):
-                return pd.DataFrame(
-                    {"query_id": [], "doc_id": [], "approx_score": []}
-                ).astype({"query_id": "int64", "doc_id": "int64",
-                          "approx_score": "float64"})
-            offsets = np.zeros(int(keep_mask.sum()), dtype=np.int64)
-            np.cumsum(lens[keep_mask][:-1], out=offsets[1:])
-            seg_max = np.maximum.reduceat(scores_t[flat], offsets, axis=0)
-            # ascending-value sequential fold of the per-token maxima —
-            # same fold as _sorted_fold / the broadcast kernel / the oracle
-            vals = np.sort(seg_max, axis=1)
-            approx = np.zeros(len(vals), dtype=np.float64)
-            for t in range(vals.shape[1]):
-                approx += vals[:, t]
-            return pd.DataFrame(
-                {"query_id": key[0],
-                 "doc_id": np.asarray(cand_pdf["doc_id"])[keep_mask],
-                 "approx_score": approx}
-            )
-
-        # rename one side's key: candidates descends from query_tokens, and
-        # cogroup on the same attribute trips the ambiguous-self-join check
-        qt_side = query_tokens.select(
-            F.col("query_id").alias("qid"), "token_idx", "vec"
-        )
-        return cand_with_codes.groupBy("query_id").cogroup(
-            qt_side.groupBy("qid")
-        ).applyInPandas(
-            score, schema="query_id long, doc_id long, approx_score double"
-        )
-
-    def _approx_broadcast(self, query_tokens: DataFrame, n_probe: int,
-                          p: "SearchParams", ivf: DataFrame,
-                          prune_to: int | None = None,
+    # -- funnel stages -----------------------------------------------------
+    def _approx_broadcast(self, qt_pdf, n_probe: int, p: "SearchParams",
+                          ivf: DataFrame, prune_to: int | None = None,
                           eligible_mask: np.ndarray | None = None,
-                          qt_pdf=None, spread: bool = True) -> DataFrame:
+                          spread: bool = True) -> DataFrame:
         """Q1–Q6 with the query side broadcast.
 
-        Collects the batch's query tokens to the driver (the small side of
+        Takes the batch's query tokens as a driver pdf (the small side of
         batch search by construction) and precomputes the [q_tokens, K]
         centroid-score matrix ONCE — which makes the probe (Q1/Q2: per-token
         argpartition) and the t_cs prune (Q3) pure driver-side NumPy instead
@@ -302,9 +197,8 @@ class BatchSearcher:
         equivalent to codes(d) ∩ cells(q) ≠ ∅ (a doc is in a cell's IVF list
         iff one of its tokens has that code, index.rs:479-508), so Q5 runs as
         a segment-max over a boolean cell mask inside a doc-parallel kernel
-        that scans each candidate doc's code list exactly once per batch; the
-        exploded (query × doc) pair shuffle of the other strategies
-        disappears entirely.
+        that scans each candidate doc's code list exactly once per batch; no
+        (query × doc) pair list is ever exploded or shuffled.
 
         Bit-determinism (what makes the approximate funnel hash-checkable
         against a DuckDB oracle — see queries.py::sql_plaid_search_topk):
@@ -314,27 +208,15 @@ class BatchSearcher:
         is deterministic under ties (_topn_mask: score desc, code asc); the
         approx score folds each pair's per-token maxima in ascending-value
         order (sorted fold with exact-identity 0.0 padding) — the same fold
-        the kernel/relational strategies and the oracle use, so all four
-        strategies are bit-identical, not just value-close.
+        as the oracle's ``list_reduce(list_prepend(0.0, list_sort(...)))``,
+        so the scores are bit-identical, not just value-close.
         """
         import pandas as pd
 
-        spark = query_tokens.sparkSession
+        spark = ivf.sparkSession
         c64 = self._centroids64
         k_total = c64.shape[0]
-
-        if qt_pdf is None:
-            qt_pdf = (
-                query_tokens.select("query_id", "token_idx", "vec")
-                .sort("query_id", "token_idx")
-                .toPandas()
-            )
-        empty = pd.DataFrame(
-            {"query_id": [], "doc_id": [], "approx_score": []}
-        ).astype({"query_id": "int64", "doc_id": "int64", "approx_score": "float64"})
         schema = "query_id long, doc_id long, approx_score double"
-        if not len(qt_pdf):
-            return spark.createDataFrame(empty, schema=schema)
 
         # token-dedup (the vectors are a pure function of the token text for
         # a deterministic encoder; np.unique needs no token column): all
@@ -376,7 +258,7 @@ class BatchSearcher:
             cell_mask[qx, probed_cells[keep]] = True
 
         # The broadcast carries the driver-built [V, K] float64 score matrix
-        # itself (bounded by broadcast_budget_bytes via the auto/chunked
+        # itself (bounded by broadcast_budget_bytes via search()'s chunk
         # split): executors consume the exact driver bits instead of
         # rebuilding per partition, which keeps the sequential-fold scores
         # bit-identical everywhere without paying the (non-BLAS) fold cost
@@ -431,7 +313,7 @@ class BatchSearcher:
                     # per-(query, doc) approx score: gather each query's
                     # per-token maxima (pads land on exact-identity 0.0),
                     # sort ascending, fold sequentially — bit-identical to
-                    # the relational _sorted_fold and the DuckDB oracle's
+                    # the DuckDB oracle's
                     # list_reduce(list_prepend(0.0, list_sort(list(mx))))
                     T = seg_max[kqi]            # [n_q, t_max, nd]
                     T[~kok] = 0.0
@@ -503,25 +385,21 @@ class BatchSearcher:
     def _rerank_broadcast(self, survivors: DataFrame, qt_pdf) -> DataFrame:
         """Q9 as ONE doc-parallel kernel over the survivor docs.
 
-        The relational Q9 (vocab-CSE dot table → per-doc-token maxima →
-        per-pair fold) is 5 joins + 2 aggregations; at batch-500 those
-        stages are ~half the funnel wall even though the data volume is
-        tiny. This kernel keeps the exact same Q8/Q9 IO discipline —
-        residuals are read ONLY for survivor docs — but computes the dot
-        table, per-token maxima, and the sorted sequential fold inside one
-        ``mapInPandas`` over ``groupBy(doc_id)``-packed (code, residual)
-        lists, with the (small, Q8-budget-bounded) survivor pair list and
-        the query vocab broadcast.
+        The kernel keeps the Q8/Q9 IO discipline — residuals are read ONLY
+        for survivor docs — and computes the dot table, per-token maxima,
+        and the sorted sequential fold inside one ``mapInPandas`` over
+        ``groupBy(doc_id)``-packed (code, residual) lists, with the (small,
+        Q8-budget-bounded) survivor pair list and the query vocab broadcast.
 
-        Bit-parity with the relational path (and thus the DuckDB oracle):
-        decompression calls the same :func:`decompress_np` the decompress()
-        operator uses; dots accumulate 0.0 + Σ x·y sequentially over dim
-        (the exact fold order of functions/vector.py::dot after both sides
-        cast to double); per-(query,doc) scores sort the per-token maxima
-        ascending and fold sequentially (array_sort + aggregate's order),
-        with 0.0-padding for ragged token counts — IEEE addition of +0.0
-        is an exact identity, so the padded fold is bit-identical to the
-        unpadded one.
+        Bit-parity with ``maxsim_scores_relational`` over the decompressed
+        survivors (and thus the DuckDB oracle): decompression calls the
+        same :func:`decompress_np` the decompress() operator uses; dots
+        accumulate 0.0 + Σ x·y sequentially over dim (the exact fold order
+        of functions/vector.py::dot after both sides cast to double);
+        per-(query,doc) scores sort the per-token maxima ascending and fold
+        sequentially (array_sort + aggregate's order), with 0.0-padding for
+        ragged token counts — IEEE addition of +0.0 is an exact identity, so
+        the padded fold is bit-identical to the unpadded one.
 
         The survivor pair list never hits the driver: it rides the plan as
         a per-doc ``collect_list(query_id)`` broadcast-joined onto the
@@ -588,7 +466,8 @@ class BatchSearcher:
                         tot += len(crs.iloc[end])
                         end += 1
                     # flatten + dedup (code, residual) within the chunk —
-                    # the kernel-local form of the relational vocab CSE
+                    # each distinct quantized vector is decompressed and
+                    # dotted once
                     table: dict = {}
                     uids = []
                     lens = []
@@ -699,179 +578,81 @@ class BatchSearcher:
         sc = df.sparkSession.sparkContext
         return df.repartition(sc.defaultParallelism)
 
-    def _approx_chunked(self, query_tokens: DataFrame, n_probe: int,
-                        p: "SearchParams", ivf: DataFrame,
-                        prune_to: int | None = None,
-                        eligible_mask: np.ndarray | None = None,
-                        ntok: int | None = None, qt_pdf=None) -> DataFrame:
-        """Broadcast kernel over budget-sized chunks of whole queries.
+    def _chunk_funnel(self, qt_pdf, *, n_probe: int, p: "SearchParams",
+                      ivf: DataFrame, subset: DataFrame | None,
+                      eligible_mask: np.ndarray | None, probe_all: bool,
+                      spread: bool = True) -> DataFrame:
+        """Q1–Q10 for one chunk of whole queries: approx kernel → Q7/Q8
+        cut → Q9 kernel → top-k. ``qt_pdf`` is the chunk's token pdf
+        (query_id, token_idx, vec) sorted by (query_id, token_idx); both
+        kernels read it driver-side, so the query side never re-plans."""
+        idx = self.index
+        if not len(qt_pdf):
+            return ivf.sparkSession.createDataFrame([], schema=_RESULT_SCHEMA)
+        cut = min(p.n_full_scores, max(p.n_full_scores // 4, p.top_k))
+        if probe_all and cut >= idx.meta.num_documents:
+            # Exact configuration shortcut (probe_all + survivor cut ≥
+            # corpus): every candidate doc of every query survives the Q7/Q8
+            # cut, so the whole approximate phase — the driver [V, K] score
+            # matrix, the codes-only kernel, the rank window and the
+            # survivors cache — is a no-op selector whose scores are
+            # entirely discarded. Q9 runs directly over all (query,
+            # candidate-doc) pairs: under probe_all the candidates are
+            # exactly the indexed docs (∩ subset), and the per-doc query
+            # lists are one literal array. Bit-identical results (the rerank
+            # kernel receives the same rows); pinned by
+            # test_exact_all_pairs_shortcut_matches_funnel.
+            return topk(self._rerank_all_pairs(qt_pdf, subset), p.top_k)
 
-        Splitting by query id keeps every per-query invariant of
-        ``_approx_broadcast`` intact (probe, t_cs prune, candidacy and
-        scoring are all per-query); the union is therefore bit-identical
-        to a single oversized broadcast. Driver memory is bounded by one
-        chunk's score matrix at a time. Chunk ranges come from sorted
-        distinct query ids (8 bytes/query driver-side), so the per-chunk
-        filter is a range predicate that pushes into the token scan.
+        # Q1–Q6 in one shot: probe/prune driver-side, candidacy and approx
+        # scoring in the doc-parallel kernel; chunk-local pre-prune to the
+        # Q7/Q8 cut
+        approx = self._approx_broadcast(
+            qt_pdf, n_probe, p, ivf, prune_to=cut,
+            eligible_mask=eligible_mask, spread=spread,
+        )
+        # Q7 + Q8: approx top n_full_scores, then decompress budget n/4.
+        # Cached: the Q9 kernel packs doc lists AND per-doc query lists from
+        # the survivors — uncached, Q1-Q7 would re-run per consumer. Bounded
+        # at n_queries · cut (query_id, doc_id) rows; released with the
+        # other per-query caches via release().
+        w = Window.partitionBy("query_id").orderBy(
+            F.col("approx_score").desc(), F.col("doc_id").asc()
+        )
+        survivors = (
+            approx.withColumn("arank", F.row_number().over(w))
+            .filter(F.col("arank") <= cut)
+            .select("query_id", "doc_id")
+        ).cache()
+        self._live_caches.append(survivors)
+        # Q9 as one doc-parallel kernel, Q10 final top-k (deterministic
+        # tie-break)
+        return topk(self._rerank_broadcast(survivors, qt_pdf), p.top_k)
 
-        When the caller already collected the batch's raw token pdf (it is
-        dim/K times smaller than the score matrix that forced chunking, so
-        it usually fits the same budget — search() collects it for the
-        rerank anyway), the chunk slices come from that pdf driver-side:
-        no per-chunk toPandas jobs (each re-ran the query encode) and no
-        distinct-qids job — r14, guide §5 driver round-trips. A sorted-pdf
-        range slice is exactly the rows the range filter selects, in the
-        same (query_id, token_idx) order, so the union stays bit-identical."""
-        import math
+    def _query_chunks(self, query_tokens: DataFrame, qids: list, ntok: int,
+                      qt_pdf=None):
+        """Yield the sorted token pdf of each budget-sized chunk of whole
+        queries. ``qids`` is the batch's sorted distinct query ids and
+        ``ntok`` its token count; the chunk count is the batch's score
+        matrix over ``broadcast_budget_bytes``, so each chunk's broadcast
+        score matrix stays within the budget.
 
-        # the caller's strategy resolution already counted the batch's
-        # tokens — don't pay a second count job per search (r14)
-        if ntok is None:
-            ntok = (len(qt_pdf) if qt_pdf is not None
-                    else query_tokens.count())
-        est = ntok * self.index.meta.k * 8
-        n_chunks = max(1, math.ceil(est / self.broadcast_budget_bytes))
-        if qt_pdf is not None:
-            qids = sorted(np.unique(qt_pdf["query_id"].to_numpy()).tolist())
-        else:
-            qids = sorted(
-                r.query_id
-                for r in query_tokens.select("query_id").distinct().collect()
-            )
-        if not qids:
-            return self._approx_broadcast(
-                query_tokens, n_probe, p, ivf, prune_to=prune_to,
-                eligible_mask=eligible_mask,
-            )
-        n_chunks = min(n_chunks, len(qids))
-        per = math.ceil(len(qids) / n_chunks)
-        out = None
+        When the caller holds the batch's whole token pdf (dim/K times
+        smaller than the score matrix that forced chunking, so it usually
+        fits the same budget) the chunks are slices of it: no per-chunk
+        toPandas job. A sorted-pdf range slice is exactly the rows the
+        range filter selects, in the same (query_id, token_idx) order."""
+        n_chunks = math.ceil(ntok * self.index.meta.k * 8
+                             / self.broadcast_budget_bytes)
+        per = math.ceil(len(qids) / min(max(1, n_chunks), len(qids)))
         for i in range(0, len(qids), per):
             lo, hi = qids[i], qids[min(i + per, len(qids)) - 1]
-            sub = query_tokens.filter(
-                (F.col("query_id") >= lo) & (F.col("query_id") <= hi)
-            )
-            sub_pdf = None
             if qt_pdf is not None:
                 q = qt_pdf["query_id"]
-                sub_pdf = qt_pdf[(q >= lo) & (q <= hi)].reset_index(drop=True)
-            # spread=False: per-chunk kernels are quarter-size, and paying
-            # the round-robin exchange once per chunk measured net-NEGATIVE
-            # at sf0.1 (chunked4 8.3 s → 11.6 s with it; the union of
-            # chunk outputs restores cross-chunk parallelism anyway)
-            part = self._approx_broadcast(
-                sub, n_probe, p, ivf, prune_to=prune_to,
-                eligible_mask=eligible_mask, qt_pdf=sub_pdf, spread=False,
-            )
-            out = part if out is None else out.unionByName(part)
-        return out
-
-    def _approx_relational(self, query_tokens: DataFrame, candidates: DataFrame,
-                           doc_codes: DataFrame) -> DataFrame:
-        """Pure-Catalyst Q6 (token-deduped when the encoder is
-        deterministic); same values as the kernel strategy."""
-        idx = self.index
-        cand_codes = candidates.join(doc_codes, "doc_id").select(
-            "query_id", "doc_id", "code"
-        )
-        cdf = F.broadcast(idx.centroids_df.withColumnRenamed("vec", "cvec"))
-        if "token" in query_tokens.columns:
-            qt_toks = query_tokens.select(
-                "query_id", F.col("token_idx").alias("q_token_idx"), "token"
-            )
-            tc_pairs = (
-                qt_toks.join(cand_codes.select("query_id", "code").distinct(), "query_id")
-                .select("token", "code")
-                .distinct()
-                .join(cdf, "code")
-                .join(
-                    F.broadcast(
-                        query_tokens.select("token", "vec").dropDuplicates(["token"])
-                    ),
-                    "token",
-                )
-                .select("token", "code", dot(F.col("vec"), F.col("cvec")).alias("cscore"))
-            )
-            return (
-                cand_codes.join(qt_toks, "query_id")
-                .join(tc_pairs, ["token", "code"])
-                .groupBy("query_id", "doc_id", "q_token_idx")
-                .agg(F.max("cscore").alias("max_c"))
-                .groupBy("query_id", "doc_id")
-                .agg(_sorted_fold("max_c").alias("approx_score"))
-            )
-        needed_scores = (
-            cand_codes.select("query_id", "code")
-            .distinct()
-            .join(cdf, "code")
-            .join(
-                query_tokens.select(
-                    "query_id",
-                    F.col("token_idx").alias("q_token_idx"),
-                    F.col("vec").alias("qvec"),
-                ),
-                "query_id",
-            )
-            .select(
-                "query_id", "code", "q_token_idx",
-                dot(F.col("qvec"), F.col("cvec")).alias("cscore"),
-            )
-        )
-        return (
-            cand_codes.join(needed_scores, ["query_id", "code"])
-            .groupBy("query_id", "doc_id", "q_token_idx")
-            .agg(F.max("cscore").alias("max_c"))
-            .groupBy("query_id", "doc_id")
-            .agg(_sorted_fold("max_c").alias("approx_score"))
-        )
-
-    # -- Q1 + Q2: probe ----------------------------------------------------
-    def _probe_cells(self, query_tokens: DataFrame, n_probe: int,
-                     p: "SearchParams",
-                     eligible_mask: np.ndarray | None = None) -> DataFrame:
-        """Q1+Q2+Q3 in ONE grouped kernel: per query, one [tokens, K] GEMM
-        against the broadcast centroids; probe = per-token argpartition
-        top-``n_probe``; cell_max = max over ALL query tokens
-        (search.rs:417-425); t_cs filter + keep-best-cell. Returns the
-        surviving ``(query_id, code)`` cells.
-
-        Same float64 sequential-fold scores / deterministic top-n as the
-        broadcast strategy's driver-side probe — strategies stay bit-aligned
-        — but with zero joins: one shuffle by query_id, versus the old
-        probe-then-rescore plan that shuffled |probed cells| × |q_tokens|
-        vector rows."""
-        import pandas as pd
-
-        c64 = self._centroids64
-        emask = None if eligible_mask is None else np.asarray(eligible_mask, bool)
-        t_cs = p.centroid_score_threshold
-        keep_best = p.keep_best_cell
-
-        def run(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
-            x = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["vec"]])
-            scores = _seq_centroid_scores(x, c64)  # [tokens, K] float64
-            n = min(n_probe, scores.shape[1])
-            if emask is not None:
-                scores[:, ~emask] = -np.inf
-                n = max(1, min(n, int(emask.sum())))
-            sel = _topn_mask(scores, n)
-            cells = np.nonzero(sel.any(axis=0))[0]
-            cmax = scores[:, cells].max(axis=0)
-            keep = cmax >= t_cs
-            if keep_best and len(cells):
-                # argmax takes the FIRST max → lowest code on ties, matching
-                # the old window's (cell_max desc, code asc) ordering
-                keep[int(np.argmax(cmax))] = True
-            return pd.DataFrame({
-                "query_id": np.int64(key[0]),
-                "code": cells[keep].astype(np.int64),
-            })
-
-        return (
-            query_tokens.select("query_id", "vec")
-            .groupBy("query_id")
-            .applyInPandas(run, schema="query_id long, code long")
-        )
+                yield qt_pdf[(q >= lo) & (q <= hi)].reset_index(drop=True)
+            else:
+                yield _collect_sorted(query_tokens.filter(
+                    (F.col("query_id") >= lo) & (F.col("query_id") <= hi)))
 
     # -- the funnel ---------------------------------------------------------
     def search(
@@ -882,11 +663,18 @@ class BatchSearcher:
         params: SearchParams | None = None,
     ) -> DataFrame:
         """query_tokens(query_id, token_idx, vec) [+ subset(doc_id)]
-        → (query_id, doc_id, score, rank) top-k per query."""
+        → (query_id, doc_id, score, rank) top-k per query.
+
+        One funnel (``_chunk_funnel``) runs over the whole batch while its
+        [q_tokens, K] centroid-score matrix fits ``broadcast_budget_bytes``.
+        A bigger batch is split into budget-sized chunks of whole queries,
+        one funnel each, results unioned: every funnel stage (probe, t_cs
+        prune, candidacy, approx score, cut, rerank, top-k) is per-query,
+        so the union is bit-identical to one oversized funnel."""
         p = params or self.params
         idx = self.index
-        # the query-token DF feeds four plan branches (probe, approx-score
-        # join, rerank join, top-k) — cache it once; it is query-batch-sized
+        # query-batch-sized; read by the budget collect and, past the
+        # budget, by the chunk split and per-chunk collects
         query_tokens = query_tokens.cache()
         self._live_caches.append(query_tokens)
 
@@ -912,7 +700,7 @@ class BatchSearcher:
                     )
                     n_probe = min(p.n_ivf_probe * scale, idx.meta.k)
 
-        # subset-pruned IVF feeds Q5 under every strategy
+        # subset-pruned IVF feeds Q5
         ivf = idx.ivf
         eligible_mask = None
         if subset is not None:
@@ -947,289 +735,44 @@ class BatchSearcher:
             if len(eligible) == 0:
                 # filter excludes every indexed doc → empty result
                 return query_tokens.sparkSession.createDataFrame(
-                    [], schema="query_id long, doc_id long, score double, rank int"
-                )
+                    [], schema=_RESULT_SCHEMA)
             eligible_mask = np.zeros(idx.meta.k, dtype=bool)
             eligible_mask[eligible] = True
             n_probe = min(n_probe, len(eligible))
 
-        has_token = "token" in query_tokens.columns
-        strategy = self.approx_strategy
-        qt_pdf = None
-        cols = ["query_id", "token_idx", "vec"] + (
-            ["token"] if has_token else []
+        funnel = functools.partial(
+            self._chunk_funnel, n_probe=n_probe, p=p, ivf=ivf, subset=subset,
+            eligible_mask=eligible_mask, probe_all=probe_all,
         )
-        if strategy == "auto":
-            # broadcast while the batch's [q_tokens, K] score matrix fits.
-            # Decide WITHOUT a separate count job: collect the token pdf
-            # under a limit of cap+1 rows — the pdf itself is [ntok, dim],
-            # dim ≪ K times smaller than the score matrix the budget
-            # admits, so within-cap collection is affordable by
-            # construction; cap+1 rows back means over budget (discard,
-            # go chunked). One driver roundtrip replaces count+toPandas.
-            cap = max(1, self.broadcast_budget_bytes // (idx.meta.k * 8))
-            pdf = query_tokens.select(*cols).limit(cap + 1).toPandas()
-            if len(pdf) <= cap:
-                strategy = "broadcast"
-                qt_pdf = pdf.sort_values(
-                    ["query_id", "token_idx"], kind="stable"
-                ).reset_index(drop=True)
-            else:
-                strategy = "chunked"
-        elif strategy == "broadcast":
-            qt_pdf = (
-                query_tokens.select(*cols)
-                .sort("query_id", "token_idx")
-                .toPandas()
-            )
-        if strategy == "broadcast":
-            # the single collect serves the kernel's token matrix, the
-            # probe, AND the rerank-budget stats
-            qstats = {
-                "ntok": len(qt_pdf),
-                "nq": int(qt_pdf["query_id"].nunique()),
-                "nv": int(qt_pdf["token"].nunique()) if has_token else len(qt_pdf),
-            }
-        else:
-            # chunked/kernel/relational: stats via one small agg job (the
-            # token table never reaches the driver whole in these modes)
-            qstats = query_tokens.agg(
-                F.count("*").alias("ntok"),
-                F.countDistinct("query_id").alias("nq"),
-                (F.countDistinct("token") if has_token else F.count("*")).alias("nv"),
-            ).collect()[0]
-            if strategy == "chunked":
-                # the RAW token pdf is dim/K times smaller than the score
-                # matrix that forced chunking — when it fits the same
-                # budget, collect it so Q9 can still run as the broadcast
-                # kernel (the approx stage stays chunked either way)
-                if qstats["ntok"] * idx.meta.dim * 8 <= self.broadcast_budget_bytes:
-                    qt_pdf = (
-                        query_tokens.select("query_id", "token_idx", "vec")
-                        .sort("query_id", "token_idx")
-                        .toPandas()
-                    )
+        # One funnel while the batch's score matrix fits. Decide WITHOUT a
+        # separate count job: collect the token pdf under a limit of cap+1
+        # rows — the pdf itself is [ntok, dim], dim ≪ K times smaller than
+        # the score matrix the budget admits, so within-cap collection is
+        # affordable by construction; cap+1 rows back means over budget.
+        cap = max(1, self.broadcast_budget_bytes // (idx.meta.k * 8))
+        pdf = query_tokens.select(*_QT_COLS).limit(cap + 1).toPandas()
+        if len(pdf) <= cap:
+            return funnel(pdf.sort_values(
+                ["query_id", "token_idx"], kind="stable"
+            ).reset_index(drop=True))
 
-        # Exact configuration shortcut (probe_all + survivor cut ≥ corpus):
-        # every candidate doc of every query survives the Q7/Q8 cut, so the
-        # whole approximate phase — the driver [V, K] score matrix, the
-        # codes-only kernel, the rank window and the survivors cache — is a
-        # no-op selector whose scores are entirely discarded. Q9 runs
-        # directly over all (query, candidate-doc) pairs: under probe_all
-        # the candidates are exactly the indexed docs (∩ subset), and the
-        # per-doc query lists are one literal array. Bit-identical results
-        # (the rerank kernel receives the same rows); pinned by
-        # test_exact_all_pairs_shortcut_matches_funnel.
-        _cut = min(p.n_full_scores, max(p.n_full_scores // 4, p.top_k))
-        if (probe_all and qt_pdf is not None and len(qt_pdf)
-                and _cut >= idx.meta.num_documents):
-            return topk(self._rerank_all_pairs(qt_pdf, subset), p.top_k)
-
-        if strategy in ("broadcast", "chunked"):
-            # Q1–Q6 in one shot: probe/prune driver-side, candidacy and
-            # approx scoring in the doc-parallel kernel; chunk-local
-            # pre-prune to the Q7/Q8 cut
-            cut = _cut
-            if strategy == "broadcast":
-                approx = self._approx_broadcast(
-                    query_tokens, n_probe, p, ivf, prune_to=cut,
-                    eligible_mask=eligible_mask, qt_pdf=qt_pdf,
-                )
-            else:
-                approx = self._approx_chunked(
-                    query_tokens, n_probe, p, ivf, prune_to=cut,
-                    eligible_mask=eligible_mask, ntok=int(qstats["ntok"]),
-                    qt_pdf=qt_pdf,
-                )
-        else:
-            # Q1+Q2+Q3 fused in one grouped kernel (was: probe mapInPandas →
-            # broadcast-centroid re-score join → window — the re-score join
-            # exploded |probed cells| × |q_tokens| rows with vector payloads,
-            # the dominant cost of the non-broadcast strategies at batch500)
-            cells = self._probe_cells(
-                query_tokens, n_probe, p, eligible_mask=eligible_mask)
-
-            # Q5: candidates = ∪ IVF lists of surviving cells (∩ subset).
-            # The union runs as a per-query array flatten+dedup — one
-            # shuffle of |surviving (query, cell)| fat rows — instead of
-            # exploding to (query, doc) rows *before* the dedup shuffle
-            # (measured 4.5× faster at sf0.1: the explode+distinct form
-            # shuffles every duplicate occurrence). Each query's array is
-            # bounded by its probed cells' IVF mass — the same per-query
-            # volume the cogrouped kernel shuffles downstream anyway; the
-            # production batch path (broadcast/chunked) never builds
-            # per-query lists at all.
-            candidates = (
-                cells.join(ivf, "code")
-                .groupBy("query_id")
-                .agg(F.array_distinct(F.flatten(F.collect_list("doc_ids"))).alias("_cand"))
-                .select("query_id", F.explode("_cand").alias("doc_id"))
-            ).cache()  # consumed twice: pair join + cand_docs semi-join
-            self._live_caches.append(candidates)
-            # Q6: approximate scoring on codes only — never touches residuals.
-            # Per-doc code sets come from the precomputed doc_codes index
-            # artifact (the codes.npy analog): read + semi-join, no per-batch
-            # corpus aggregation. Fallback for legacy indexes: semi-join the
-            # corpus down to candidate docs BEFORE the distinct, otherwise
-            # the dedup shuffles the full corpus per batch (Catalyst won't
-            # push a join under an aggregate on its own).
-            cand_docs = candidates.select("doc_id").distinct()
-            pre = idx.doc_codes
-            if pre is not None:
-                doc_lists = pre.join(cand_docs, "doc_id", "left_semi")
-            else:
-                doc_lists = (
-                    idx.tokens.join(cand_docs, "doc_id", "left_semi")
-                    .select("doc_id", "code")
-                    .distinct()
-                    .groupBy("doc_id")
-                    .agg(F.collect_list("code").alias("codes"))
-                )
-            if strategy == "kernel":
-                approx = self._approx_kernel(query_tokens, candidates, doc_lists)
-            else:
-                approx = self._approx_relational(
-                    query_tokens, candidates,
-                    doc_lists.select("doc_id", F.explode("codes").alias("code")),
-                )
-
-        # Q7 + Q8: approx top n_full_scores, then decompress budget n/4
-        budget = max(p.n_full_scores // 4, p.top_k)
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("approx_score").desc(), F.col("doc_id").asc()
-        )
-        # cached: survivors is the cut of the ENTIRE approximate-scoring
-        # subtree and every rerank path consumes it more than once (the
-        # broadcast kernel packs doc lists and query lists from it, the
-        # relational chain semi-joins tokens and joins pairs) — uncached,
-        # Q1-Q7 would re-run per consumer. Bounded at n_queries · budget
-        # (query_id, doc_id) rows; released with the other per-query
-        # caches via release().
-        survivors = (
-            approx.withColumn("arank", F.row_number().over(w))
-            .filter(F.col("arank") <= min(p.n_full_scores, budget))
-            .select("query_id", "doc_id")
-        ).cache()
-        self._live_caches.append(survivors)
-
-        if qt_pdf is not None and len(qt_pdf):
-            # broadcast path: Q9 as one doc-parallel kernel (bit-identical
-            # to the relational chain below — see _rerank_broadcast)
-            return topk(self._rerank_broadcast(survivors, qt_pdf), p.top_k)
-
-        # Q9: decompress survivors and exact-MaxSim them. Quantization makes
-        # token vectors a pure function of (code, residual), so each distinct
-        # quantized vector is decompressed and dotted against the query side
-        # ONCE. With a deterministic encoder (token column present) the dot
-        # table shrinks further to |query vocab| × |distinct quantized vecs|
-        # and the per-doc maxima are shared across queries — the same CSE as
-        # maxsim_scores_by_token, bit-identical (max over the same multiset,
-        # same sorted fold).
-        surv_tokens = idx.tokens.join(
-            survivors.select("doc_id").distinct(), "doc_id", "left_semi"
-        ).select("doc_id", "code", "residual")
-        uniq_vecs = decompress(
-            surv_tokens.select("code", "residual").distinct(),
-            self._centroids, idx.meta.codec,
-        )
-        fold = lambda col: F.aggregate(  # noqa: E731
-            F.array_sort(F.collect_list(col)),
-            F.lit(0.0).cast("double"),
-            lambda acc, v: acc + v,
-        ).alias("score")
-
-        # Budget check on the vocab dot table (the one nested-loop join in
-        # the funnel). Upper-bound estimate from known quantities — the
-        # batch-stats row collected up top, index metadata for the doc
-        # side: survivors ≤ n_queries·budget docs, each contributing
-        # ≤ avg_doclen distinct quantized vecs. Above budget, the per-query
-        # equi-join fallback computes the same dots (same expressions, same
-        # max/fold order — bit-identical) restricted to surviving pairs,
-        # with no cartesian product.
-        est_uniq_vecs = (
-            min(qstats["nq"] * budget, idx.meta.num_documents)
-            * max(idx.meta.avg_doclen, 1.0)
-        )
-        cse_dots_ok = est_uniq_vecs * max(qstats["nv"], 1) <= RERANK_DOT_BUDGET_ROWS
-
-        if has_token and not cse_dots_ok:
-            q_tok = query_tokens.select(
-                "query_id", "token", F.col("vec").alias("q_vec")
-            ).dropDuplicates(["query_id", "token"])
-            per_doc_token = (
-                survivors.join(q_tok, "query_id")
-                .join(surv_tokens.distinct(), "doc_id")
-                .join(uniq_vecs, ["code", "residual"])
-                .groupBy("query_id", "doc_id", "token")
-                .agg(F.max(dot(F.col("q_vec"), F.col("vec"))).alias("max_dp"))
-            )
-            exact = (
-                survivors.join(
-                    query_tokens.select("query_id", "token_idx", "token"),
-                    "query_id",
-                )
-                .join(per_doc_token, ["query_id", "doc_id", "token"])
-                .groupBy("query_id", "doc_id")
-                .agg(fold("max_dp"))
-            )
-        elif not has_token and not cse_dots_ok:
-            qt = query_tokens.select(
-                "query_id", F.col("token_idx").alias("q_token_idx"),
-                F.col("vec").alias("q_vec"),
-            )
-            exact = (
-                survivors.join(surv_tokens, "doc_id")
-                .join(uniq_vecs, ["code", "residual"])
-                .join(qt, "query_id")
-                .groupBy("query_id", "doc_id", "q_token_idx")
-                .agg(F.max(dot(F.col("q_vec"), F.col("vec"))).alias("max_dp"))
-                .groupBy("query_id", "doc_id")
-                .agg(fold("max_dp"))
-            )
-        elif has_token:
-            q_vocab = query_tokens.select(
-                "token", F.col("vec").alias("q_vec")
-            ).dropDuplicates(["token"])
-            vocab_dots = uniq_vecs.crossJoin(F.broadcast(q_vocab)).select(
-                "code", "residual", "token",
-                dot(F.col("q_vec"), F.col("vec")).alias("dp"),
-            )
-            doc_sets = surv_tokens.distinct()
-            per_doc_token = (
-                doc_sets.join(vocab_dots, ["code", "residual"])
-                .groupBy("doc_id", "token")
-                .agg(F.max("dp").alias("max_dp"))
-            )
-            exact = (
-                survivors.join(
-                    query_tokens.select("query_id", "token_idx", "token"),
-                    "query_id",
-                )
-                .join(per_doc_token, ["doc_id", "token"])
-                .groupBy("query_id", "doc_id")
-                .agg(fold("max_dp"))
-            )
-        else:
-            qt = query_tokens.select(
-                "query_id", F.col("token_idx").alias("q_token_idx"),
-                F.col("vec").alias("q_vec"),
-            )
-            pair_dots = uniq_vecs.crossJoin(qt).select(
-                "code", "residual", "query_id", "q_token_idx",
-                dot(F.col("q_vec"), F.col("vec")).alias("dp"),
-            )
-            exact = (
-                survivors.join(surv_tokens, "doc_id")
-                .join(pair_dots, ["query_id", "code", "residual"])
-                .select("query_id", "doc_id", "q_token_idx", "dp")
-                .groupBy("query_id", "doc_id", "q_token_idx")
-                .agg(F.max("dp").alias("max_dp"))
-                .groupBy("query_id", "doc_id")
-                .agg(fold("max_dp"))
-            )
-
-        # Q10: final top-k (deterministic tie-break)
-        return topk(exact, p.top_k)
+        # Over budget: chunks of whole queries. One job sizes the split
+        # (n_queries rows back); the whole token pdf is collected once when
+        # it fits the budget, else each chunk collects its own slice.
+        counts = query_tokens.groupBy("query_id").count().collect()
+        qids = sorted(r["query_id"] for r in counts)
+        ntok = sum(r["count"] for r in counts)
+        whole = None
+        if ntok * idx.meta.dim * 8 <= self.broadcast_budget_bytes:
+            whole = _collect_sorted(query_tokens)
+        # spread=False: per-chunk kernels are chunk-size, and paying the
+        # round-robin exchange once per chunk measured net-NEGATIVE at sf0.1
+        # (chunked4 8.3 s → 11.6 s with it; the union of chunk outputs
+        # restores cross-chunk parallelism anyway)
+        return functools.reduce(DataFrame.unionByName, (
+            funnel(chunk, spread=False)
+            for chunk in self._query_chunks(query_tokens, qids, ntok, whole)
+        ))
 
     def search_brute(self, query_tokens: DataFrame, k: int | None = None) -> DataFrame:
         """Exact search via decompressed corpus — funnel-free oracle path

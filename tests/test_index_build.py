@@ -137,8 +137,7 @@ def test_funnel_recall_vs_brute_force(spark, built_index):
     assert np.mean(close) >= 0.8, f"top-1 score agreement {np.mean(close):.2f}"
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "kernel"])
-def test_filtered_search_selective_subset_recall(spark, built_index, strategy):
+def test_filtered_search_selective_subset_recall(spark, built_index):
     """Highly selective filter (subset ≈ 2% of docs): the probe pool must be
     restricted to eligible centroids (search.rs:350-364) so probe slots are
     not wasted on cells with no subset docs. Oracle = exact MaxSim over the
@@ -161,9 +160,7 @@ def test_filtered_search_selective_subset_recall(spark, built_index, strategy):
         maxsim_scores_relational(qt.select("query_id", "token_idx", "vec"), sub_corpus), 4
     ).collect()
 
-    searcher = BatchSearcher(
-        idx, SearchParams(top_k=4, n_full_scores=256), approx_strategy=strategy
-    )
+    searcher = BatchSearcher(idx, SearchParams(top_k=4, n_full_scores=256))
     got = searcher.search(qt, subset=subset).collect()
 
     for r in got:  # subset containment is a hard invariant (F9)
@@ -221,59 +218,64 @@ def test_filtered_search_empty_subset_exact_config(spark, built_index):
 
 
 def test_approx_strategies_agree(spark, built_index):
-    """broadcast / kernel / relational Q6 strategies produce identical
-    ranked results (the broadcast kernel replicates the cogrouped kernel's
-    argpartition probe, float32 maxima, and float64 token-order sum)."""
+    """A batch over the broadcast budget runs as chunks of whole queries,
+    one funnel each; the union must be bit-identical — scores included —
+    to the single-chunk search. Checked with the raw token pdf over the
+    budget (each chunk collects its own tokens) and within it (chunks are
+    slices of one collected pdf)."""
     idx, docs, dt = built_index
     queries = docs.limit(15).select(F.col("doc_id").alias("query_id"), "text")
     qt = encode_queries(queries).cache()
     p = SearchParams(top_k=10, n_full_scores=256)
+    ntok = qt.count()
 
-    results = {
-        name: sorted(
-            (r.query_id, r.doc_id, r.rank)
-            for r in BatchSearcher(idx, p, approx_strategy=name).search(qt).collect()
+    def rows(searcher):
+        out = sorted(
+            (r.query_id, r.doc_id, r.rank, r.score)
+            for r in searcher.search(qt).collect()
         )
-        for name in ("broadcast", "kernel", "relational")
-    }
-    assert results["broadcast"] == results["kernel"]
-    assert results["kernel"] == results["relational"]
+        searcher.release()
+        return out
 
-    # chunked (forced to >1 chunk via a tiny budget) must be bit-identical
-    # to one oversized broadcast — per-query invariants survive the split
-    chunked = sorted(
-        (r.query_id, r.doc_id, r.rank)
-        for r in BatchSearcher(
-            idx, p, approx_strategy="chunked", broadcast_budget_bytes=1024
-        ).search(qt).collect()
-    )
-    assert chunked == results["broadcast"]
+    single = rows(BatchSearcher(idx, p))
+    assert len(single) == 15 * 10
+    # 1024 bytes: every query is its own chunk, and at dim 16 the raw token
+    # pdf is over the budget as well
+    assert ntok * idx.meta.dim * 8 > 1024
+    assert rows(BatchSearcher(idx, p, broadcast_budget_bytes=1024)) == single
+    # the raw token pdf just fits: the chunks are slices of one collect
+    budget = ntok * idx.meta.dim * 8
+    assert ntok * idx.meta.k * 8 > budget
+    assert rows(BatchSearcher(idx, p, broadcast_budget_bytes=budget)) == single
+    qt.unpersist()
 
 
 def test_chunked_pdf_slicing_matches_per_chunk_collect(spark, built_index):
-    """The chunked strategy's driver-side pdf slicing (used when search()
-    already holds the batch's token pdf — r14) must yield exactly the rows
-    the per-chunk toPandas path collects: same (query_id, doc_id,
-    approx_score) multiset from the same chunk boundaries."""
+    """The chunk split's driver-side pdf slicing (used when search() can
+    hold the batch's whole token pdf) must yield exactly the rows the
+    per-chunk collect returns: same chunk boundaries, same (query_id,
+    token_idx, vec) rows in the same order."""
+    from next_plaid_spark.plans.searcher import _collect_sorted
+
     idx, docs, dt = built_index
     queries = docs.limit(12).select(F.col("doc_id").alias("query_id"), "text")
-    qt = encode_queries(queries).cache()
-    p = SearchParams(top_k=10, n_full_scores=256)
-    searcher = BatchSearcher(idx, p, approx_strategy="chunked",
+    qtc = encode_queries(queries).select("query_id", "token_idx", "vec").cache()
+    searcher = BatchSearcher(idx, SearchParams(top_k=10, n_full_scores=256),
                              broadcast_budget_bytes=1024)
-    try:
-        qtc = qt.select("query_id", "token_idx", "vec").cache()
-        pdf = qtc.sort("query_id", "token_idx").toPandas()
-        via_collect = sorted(
-            map(tuple, searcher._approx_chunked(
-                qtc, p.n_ivf_probe, p, idx.ivf).collect()))
-        via_slices = sorted(
-            map(tuple, searcher._approx_chunked(
-                qtc, p.n_ivf_probe, p, idx.ivf, qt_pdf=pdf).collect()))
-        assert via_slices == via_collect
-        qtc.unpersist()
-    finally:
-        searcher.release()
+    pdf = _collect_sorted(qtc)
+    qids = sorted(set(pdf["query_id"].tolist()))
+
+    def chunks(whole):
+        return [
+            [(r.query_id, r.token_idx, tuple(r.vec)) for r in c.itertuples()]
+            for c in searcher._query_chunks(qtc, qids, len(pdf), whole)
+        ]
+
+    via_collect = chunks(None)
+    assert len(via_collect) > 1
+    assert chunks(pdf) == via_collect
+    assert sum(len(c) for c in via_collect) == len(pdf)
+    qtc.unpersist()
 
 
 def test_search_without_doc_codes_artifact(spark, built_index, tmp_path):
@@ -287,7 +289,7 @@ def test_search_without_doc_codes_artifact(spark, built_index, tmp_path):
     p = SearchParams(top_k=5, n_full_scores=64)
     want = sorted(
         (r.query_id, r.doc_id, r.rank)
-        for r in BatchSearcher(idx, p, approx_strategy="broadcast").search(qt).collect()
+        for r in BatchSearcher(idx, p).search(qt).collect()
     )
 
     legacy_path = str(tmp_path / "legacy_index")
@@ -304,47 +306,9 @@ def test_search_without_doc_codes_artifact(spark, built_index, tmp_path):
     assert legacy.doclens.count() == idx.meta.num_documents
     got = sorted(
         (r.query_id, r.doc_id, r.rank)
-        for r in BatchSearcher(legacy, p, approx_strategy="broadcast").search(qt).collect()
+        for r in BatchSearcher(legacy, p).search(qt).collect()
     )
     assert got == want
-
-
-def test_rerank_dot_budget_fallback_identical(spark, built_index, monkeypatch):
-    """When the Q9 vocab dot table blows RERANK_DOT_BUDGET_ROWS, the
-    per-query equi-join fallback must produce bit-identical final scores
-    (same dot expressions, same max/fold order) — both with and without
-    the deterministic-token column."""
-    import next_plaid_spark.plans.searcher as searcher_mod
-
-    idx, docs, dt = built_index
-    queries = docs.limit(12).select(F.col("doc_id").alias("query_id"), "text")
-    qt = encode_queries(queries).cache()
-    p = SearchParams(top_k=10, n_full_scores=256)
-
-    base = sorted(
-        (r.query_id, r.doc_id, r.rank, round(r.score, 9))
-        for r in BatchSearcher(idx, p).search(qt).collect()
-    )
-    monkeypatch.setattr(searcher_mod, "RERANK_DOT_BUDGET_ROWS", 1)
-    fb = sorted(
-        (r.query_id, r.doc_id, r.rank, round(r.score, 9))
-        for r in BatchSearcher(idx, p).search(qt).collect()
-    )
-    assert fb == base
-
-    # no-token path (generic encoder): drop the token column
-    qt_plain = qt.drop("token")
-    monkeypatch.undo()
-    base_plain = sorted(
-        (r.query_id, r.doc_id, r.rank, round(r.score, 9))
-        for r in BatchSearcher(idx, p).search(qt_plain).collect()
-    )
-    monkeypatch.setattr(searcher_mod, "RERANK_DOT_BUDGET_ROWS", 1)
-    fb_plain = sorted(
-        (r.query_id, r.doc_id, r.rank, round(r.score, 9))
-        for r in BatchSearcher(idx, p).search(qt_plain).collect()
-    )
-    assert fb_plain == base_plain
 
 
 def test_exact_funnel_config_equals_brute_over_quantized(spark, built_index):
@@ -374,32 +338,43 @@ def test_exact_funnel_config_equals_brute_over_quantized(spark, built_index):
 def test_exact_all_pairs_shortcut_matches_funnel(spark, built_index):
     """The exact-configuration shortcut (probe_all + cut ≥ corpus skips the
     approx phase and reranks all (query, doc) pairs directly) must be
-    bit-identical to the un-shortcut funnel — forced here via the
-    relational strategy, which collects no query pdf and therefore keeps
-    the full Q1-Q8 path. Checked with and without a subset filter."""
+    bit-identical to the funnel's Q9 over the explicit all-pairs survivor
+    set — every query × every indexed doc (∩ subset), which is what the
+    approx phase and cut select under that configuration. Checked with and
+    without a subset filter, on the raw kernel rows and on search()."""
+    from next_plaid_spark.operators.maxsim import topk
+    from next_plaid_spark.plans.searcher import _collect_sorted
+
     idx, docs, dt = built_index
     queries = docs.limit(6).select(F.col("doc_id").alias("query_id"), "text")
     qt = encode_queries(queries).cache()
+    qt_pdf = _collect_sorted(qt)
     p = SearchParams(
         top_k=10, n_ivf_probe=idx.meta.k,
         n_full_scores=4 * idx.meta.num_documents,
         centroid_score_threshold=float("-inf"),
     )
     subset = docs.filter(F.col("doc_id") % 3 == 0).select("doc_id")
+    searcher = BatchSearcher(idx, p)
     for sub in (None, subset):
-        fast = BatchSearcher(idx, p)  # auto → broadcast pdf → shortcut
-        slow = BatchSearcher(idx, p, approx_strategy="relational")
+        indexed = idx.tokens.select("doc_id").distinct()
+        if sub is not None:
+            indexed = indexed.join(sub, "doc_id", "left_semi")
+        survivors = qt.select("query_id").distinct().crossJoin(indexed)
+        want_df = searcher._rerank_broadcast(survivors, qt_pdf)
+        got_df = searcher._rerank_all_pairs(qt_pdf, sub)
+        want = sorted(map(tuple, want_df.collect()))
+        assert len(want) == 6 * indexed.count()
+        assert sorted(map(tuple, got_df.collect())) == want
         got = sorted(
             (r.query_id, r.doc_id, r.rank, r.score)
-            for r in fast.search(qt, subset=sub).collect()
+            for r in searcher.search(qt, subset=sub).collect()
         )
-        want = sorted(
+        assert got == sorted(
             (r.query_id, r.doc_id, r.rank, r.score)
-            for r in slow.search(qt, subset=sub).collect()
+            for r in topk(want_df, p.top_k).collect()
         )
-        assert got == want
-        fast.release()
-        slow.release()
+        searcher.release()
     qt.unpersist()
 
 

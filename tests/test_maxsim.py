@@ -112,8 +112,8 @@ def test_topk_nonfinite_ranks_last(spark):
 
 
 def test_brute_kernel_matches_relational_bitwise(spark):
-    """The broadcast brute-force kernel must return the exact rows of the
-    relational form (same scores to the bit under the shared fold
+    """The broadcast brute-force kernel must return the exact rows of
+    ``topk`` over the relational form (same scores to the bit under the shared fold
     discipline, same (finite, score, doc) rank order)."""
     import numpy as np
 
@@ -132,7 +132,7 @@ def test_brute_kernel_matches_relational_bitwise(spark):
     qt = spark.createDataFrame(
         qs, "query_id long, token_idx int, vec array<double>"
     )
-    from next_plaid_spark.operators.maxsim import brute_force_search
+    from next_plaid_spark.operators.maxsim import topk
 
     kern = sorted(
         tuple(r) for r in
@@ -140,6 +140,6 @@ def test_brute_kernel_matches_relational_bitwise(spark):
     )
     rel = sorted(
         tuple(r) for r in
-        brute_force_search(qt, dt, k=5, strategy="relational").collect()
+        topk(maxsim_scores_relational(qt, dt), 5).collect()
     )
     assert kern == rel

@@ -10,8 +10,7 @@ invariants that make them viable at 100 TB:
       non-empty on the documents scan of the filtered entry).
   A3  keyword search joins the (small) query-term and df sides as broadcast
       joins — the postings corpus never shuffles by doc.
-  A4  no CartesianProduct outside the rerank's intended bounded
-      (uniq_vecs × query_tokens) cross join.
+  A4  no CartesianProduct in the listed relational entries.
   A5  relational aggregation entries run inside WholeStageCodegen.
 
 Writes PLANS.md (scan schemas, join strategies, codegen presence per query)
