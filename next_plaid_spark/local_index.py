@@ -211,7 +211,8 @@ class LocalIndex:
             df = df.unionByName(extra, allowMissingColumns=True)
         if drop_ids is not None:
             df = df.join(drop_ids, "doc_id", "left_anti")
-        df.write.parquet(os.path.join(out_path, "metadata.parquet"))
+        df.write.mode("overwrite").parquet(
+            os.path.join(out_path, "metadata.parquet"))
 
     # -- update / delete (index.rs:1431-1848) ------------------------------
     def update(self, new_doc_tokens: DataFrame, *,
@@ -219,11 +220,13 @@ class LocalIndex:
                metadata: DataFrame | None = None,
                seed: int = 42) -> "LocalIndex":
         """U1 dispatcher: rebuild / buffer-append / expand+append, then
-        snapshot-advance (index.rs:1431)."""
+        snapshot-advance (index.rs:1431). The metadata lands first: the
+        snapshot's meta.json marks ``out`` complete, so a crash between the
+        two writes must leave it incomplete, never metadata-less."""
         out = self._next_path()
+        self._write_meta(out, metadata)
         update_index(self.spark, self.index, new_doc_tokens, out,
                      full_rebuild_tokens=full_rebuild_tokens, seed=seed)
-        self._write_meta(out, metadata)
         self.reload()
         # handlers/documents.rs:500-528 — the append path enforces the
         # persisted max_documents cap by evicting the oldest docs
@@ -319,15 +322,15 @@ class LocalIndex:
     def delete_with_options(self, doc_ids: Sequence[int],
                             delete_metadata: bool = True) -> int:
         """index.rs:1805 — drop docs into a new snapshot; returns the
-        number of documents removed."""
+        number of documents removed. Metadata first, as in ``update``."""
         ids = [int(d) for d in doc_ids]
         before = self.num_documents()
         out = self._next_path()
-        delete_from_index(self.spark, self.index, ids, out)
         drop = local_df(
             self.spark, [(i,) for i in ids], "doc_id long"
         ) if delete_metadata else None
         self._write_meta(out, None, drop_ids=drop)
+        delete_from_index(self.spark, self.index, ids, out)
         self.reload()
         return before - self.num_documents()
 

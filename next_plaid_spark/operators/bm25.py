@@ -395,16 +395,11 @@ class BM25Index:
         O(delta) bytes instead of save()'s full-store rewrite.
 
         Every store file covers a doc_id range (save()'s r15 layout), so
-        the fold rule is the plaid doc_stats economy: an old file is
-        rewritten only when (a) its footer doc_id min/max may contain a
-        deleted doc — all of a gone doc's rows live in such files, so no
-        stale row can survive a fold, which also makes delete-then-re-add
-        of the same doc_id safe — or (b) it is small relative to the
-        arriving mass (Bentley-Saxe, ``DELTA_FOLD_RATIO``); every other
-        file hardlinks forward. Per-update IO is O(batch) with each byte
-        rewritten O(log appends) times; a legacy term-range-partitioned
-        store (pre-r15 save()) folds entirely ONCE (its files span the
-        full doc range) and is doc-ranged thereafter.
+        postings, doclens and positions are doc-ranged tiered stores
+        (``sources/tiered.py`` holds the fold rule and the hardlink
+        carry): per-update IO is O(batch). A legacy
+        term-range-partitioned store (pre-r15 save()) folds entirely ONCE
+        (its files span the full doc range) and is doc-ranged thereafter.
 
         ``term_stats`` stays the per-snapshot correctness anchor (the
         BM25 analog of the plaid IVF re-derive): df and max_sat are
@@ -420,13 +415,8 @@ class BM25Index:
         ⊆ indexed docs, and new doc_ids don't collide with kept docs
         (re-encoded docs appear in both gone and new)."""
         import json
-        import shutil
 
-        from next_plaid_spark.operators.update import (
-            DELTA_FOLD_RATIO,
-            _parquet_minmax,
-            _parquet_rows,
-        )
+        from next_plaid_spark.sources import tiered
 
         old = getattr(self, "_store_path", None)
         if not old:
@@ -439,28 +429,17 @@ class BM25Index:
                              "in-place saves go through save()")
         spark = self.postings.sparkSession
 
-        # -- delete set, collected when bounded (footer-pruning needs the
-        # ids driver-side; over the cap every old file folds conservatively)
+        # -- delete set, collected when bounded (footer pruning needs the
+        # ids in this process)
         gone_df = None
         gone_rows: list[int] | None = []
         if gone_docs is not None:
             gone_df = gone_docs.select(
                 F.col("doc_id").cast("long")).distinct().cache()
-            gone_rows = [int(r.doc_id)
-                         for r in gone_df.limit(100_001).collect()]
-            if not gone_rows:
+            gone_rows = tiered.collect_gone(gone_df)
+            if gone_rows == []:
                 gone_df.unpersist()
-                gone_df, gone_rows = None, []
-            elif len(gone_rows) > 100_000:
-                gone_rows = None  # huge delete set: fold everything
-
-        def _may_contain_gone(mm) -> bool:
-            if gone_df is None:
-                return False
-            if mm is None or gone_rows is None:
-                return True
-            lo, hi = mm
-            return any(lo <= g <= hi for g in gone_rows)
+                gone_df = None
 
         # -- delta masses for the Bentley-Saxe rule + meta arithmetic:
         # positions rows == Σ new dl by construction, so two delta-sized
@@ -476,55 +455,12 @@ class BM25Index:
             n_new_docs, new_dl_sum = int(_dl.nd or 0), int(_dl.sdl or 0)
             n_new_post = post_new.count()
 
-        def _list_files(name: str):
-            d = os.path.join(old, name)
-            out = []
-            for fn in os.listdir(d):
-                if fn.startswith((".", "_")):
-                    continue
-                p = os.path.join(d, fn)
-                out.append((p, _parquet_rows(p), _parquet_minmax(p, "doc_id")))
-            return out
-
-        def _fold_set(files, acc0: int) -> set[str]:
-            folded: set[str] = set()
-            acc = acc0
-            for p, rows, mm in sorted(files, key=lambda t: t[1]):
-                if _may_contain_gone(mm):
-                    folded.add(p)
-                elif acc and rows <= DELTA_FOLD_RATIO * acc:
-                    folded.add(p)
-                    acc += rows
-            return folded
-
         def _write_component(name: str, new_rows: DataFrame,
-                             sort_cols: list[str], acc0: int):
-            files = _list_files(name)
-            folded = _fold_set(files, acc0)
-            cols = new_rows.columns
-            if folded:
-                kept = spark.read.parquet(*sorted(folded))
-                if gone_df is not None:
-                    kept = kept.join(gone_df, "doc_id", "left_anti")
-                merged = kept.select(*cols).unionByName(new_rows)
-            else:
-                merged = new_rows
-            new_dir = os.path.join(out_path, name)
-            # one file per snapshot hop is the tier granularity (the
-            # doc_stats discipline); a corpus-sized fold (legacy-layout
-            # upgrade) splits so no single write task owns the store
-            n_merged = acc0 + sum(r for p, r, _ in files if p in folded)
-            npart = max(1, n_merged // 4_000_000)
-            (merged.coalesce(npart).sortWithinPartitions(*sort_cols)
-             .write.mode("overwrite").parquet(new_dir))
-            for p, _r, _mm in files:
-                if p in folded:
-                    continue
-                dst = os.path.join(new_dir, os.path.basename(p))
-                try:
-                    os.link(p, dst)
-                except OSError:
-                    shutil.copy2(p, dst)
+                             sort_cols: tuple[str, ...], mass: int):
+            tiered.write_doc_ranged(
+                os.path.join(old, name), os.path.join(out_path, name),
+                new_rows, mass, gone=gone_df, gone_ids=gone_rows,
+                sort_cols=sort_cols)
 
         # the component writes are independent jobs over disjoint dirs —
         # overlap them (guide §2.6), same as save()
@@ -533,10 +469,10 @@ class BM25Index:
         writers = [
             lambda: _write_component(
                 "postings", post_new.select("term", "doc_id", "tf"),
-                ["term", "doc_id"], n_new_post),
+                ("term", "doc_id"), n_new_post),
             lambda: _write_component(
                 "doclens", dl_new.select("doc_id", "dl"),
-                ["doc_id"], n_new_docs),
+                ("doc_id",), n_new_docs),
         ]
         if self.positions is not None:
             if pos_new is None:
@@ -544,7 +480,7 @@ class BM25Index:
                                  "update can't silently drop phrase search")
             writers.append(lambda: _write_component(
                 "positions", pos_new.select("term", "doc_id", "pos"),
-                ["term", "doc_id", "pos"], new_dl_sum))
+                ("term", "doc_id", "pos"), new_dl_sum))
         with ThreadPoolExecutor(len(writers)) as ex:
             for fut in [ex.submit(w) for w in writers]:
                 fut.result()
@@ -554,8 +490,9 @@ class BM25Index:
         # delta-sized agg over those files ∩ gone.
         gone_n = gone_sum = 0
         if gone_df is not None:
-            dl_files = _list_files("doclens")
-            gone_src = [p for p, _r, mm in dl_files if _may_contain_gone(mm)]
+            gone_src = [p for p, _r, mm
+                        in tiered.list_files(os.path.join(old, "doclens"))
+                        if tiered.may_hold(mm, gone_rows)]
             if gone_src:
                 _g = (spark.read.parquet(*sorted(gone_src))
                       .join(gone_df, "doc_id", "left_semi")

@@ -49,6 +49,7 @@ from next_plaid_spark.operators.colgrep import (
     build_embedding_text,
 )
 from next_plaid_spark.session import local_df
+from next_plaid_spark.sources import tiered
 
 # reference query_length for code search (the gate oracles slice the same 16)
 CODE_QUERY_MAX_TOKENS = 16
@@ -596,15 +597,8 @@ class CodeIndex:
                 continue
             src, dst = os.path.join(old_units_dir, d), os.path.join(new_units_dir, d)
             os.makedirs(dst, exist_ok=True)
-            for fn in os.listdir(src):
-                if fn.startswith("_"):
-                    continue
-                try:
-                    os.link(os.path.join(src, fn), os.path.join(dst, fn))
-                except OSError:
-                    import shutil as _sh
-
-                    _sh.copy2(os.path.join(src, fn), os.path.join(dst, fn))
+            tiered.carry([os.path.join(src, fn) for fn in os.listdir(src)
+                          if not fn.startswith("_")], dst)
 
         new_state.write.mode("overwrite").parquet(
             os.path.join(out_path, "files"))

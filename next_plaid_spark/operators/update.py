@@ -45,38 +45,6 @@ BUFFER_THRESHOLD = 100    # update.rs:95-108
 #: tiny delta doesn't pay one Python-worker dispatch per source-scan split
 _KERNEL_ROWS_PER_TASK = 65_536
 
-#: an old bucket file folds into an append's new file while its rows are
-#: at most this multiple of the accumulated smaller mass — the same
-#: Bentley-Saxe tiering as the streaming sinks' generational fold
-#: (streaming/curation.py), applied per bucket to the token files
-DELTA_FOLD_RATIO = 2.0
-
-
-def _parquet_rows(path: str) -> int:
-    """Row count from the parquet footer — a driver-side metadata read
-    (no data pages), the tiering key for ``update_index_delta``'s
-    per-bucket file folds."""
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(path).metadata.num_rows
-
-
-def _parquet_minmax(path: str, col: str) -> tuple[int, int] | None:
-    """(min, max) of ``col`` from the parquet footer's row-group
-    statistics, or None when any row group lacks them (the caller must
-    then treat the file as possibly containing anything)."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    idx = md.schema.names.index(col)
-    lo = hi = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(idx).statistics
-        if st is None or not st.has_min_max:
-            return None
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    return None if lo is None else (int(lo), int(hi))
 EXPAND_PTS_PER_CENTROID = 256
 EXPAND_FACTOR = 4
 
@@ -294,23 +262,21 @@ def update_index_delta(
     snapshot at ``out_path`` that touches only the delta's buckets.
 
     ``delete_from_index`` + ``update_index`` each rewrite the corpus-sized
-    token table (scan + bucket shuffle + write, twice per update). But the
-    tokens live in a ``bucketBy(n, doc_id)`` table whose buckets may hold
-    MULTIPLE files (r14): an append lands each bucket's new rows as an
-    additional bucket file, size-tiering in only the old files small
-    relative to the arriving mass (``DELTA_FOLD_RATIO``), and hardlinks
-    every other file forward from the previous snapshot (same discipline
-    as CodeIndex's units/ layout) — per-append token IO is O(batch) with
-    each byte rewritten O(log appends) times, instead of O(corpus) per
-    append (the r13 bucket-granular rule degenerated to that: Murmur3
-    spreads any realistic batch over every bucket). A delete folds the
-    whole bucket owning each gone doc (its rows live in whichever file
-    its arrival batch wrote). doc_stats merges old-minus-gone with the delta's groupBy
-    (delta-sized shuffle only); IVF re-derives from the merged doc_stats
-    (per-doc code sets, ~avg_doclen× smaller than tokens); meta counts are
-    arithmetic. Centroid-expansion policy matches ``update_index`` path
-    (c) (update.rs:95-108): expansion appends codebook rows, so carried
-    buckets' codes stay valid.
+    token table (scan + bucket shuffle + write, twice per update). Here
+    both the tokens and doc_stats are tiered stores (``sources/tiered.py``
+    holds the fold rule and the hardlink carry): per-update IO is
+    O(batch) instead of O(corpus). The tokens live in a
+    ``bucketBy(n, doc_id)`` table whose buckets may hold MULTIPLE files:
+    each bucket's new rows land as an additional bucket file and the fold
+    rule runs per bucket (Murmur3 spreads any realistic batch over every
+    bucket, so a bucket-granular rewrite would be O(corpus)). A delete
+    folds the whole bucket owning each gone doc — its rows live in
+    whichever file its arrival batch wrote. doc_stats is doc_id-ranged
+    (``tiered.write_doc_ranged``, one tier per hop); IVF re-derives from
+    the merged doc_stats (per-doc code sets, ~avg_doclen× smaller than
+    tokens); meta counts are arithmetic. Centroid-expansion policy
+    matches ``update_index`` path (c) (update.rs:95-108): expansion
+    appends codebook rows, so carried buckets' codes stay valid.
 
     Preconditions (same contract as the two-step form): ``gone_docs`` ⊆
     indexed docs; ``new_doc_tokens`` doc_ids must not collide with kept
@@ -321,8 +287,8 @@ def update_index_delta(
     """
     import hashlib
     import re
-    import shutil
 
+    from next_plaid_spark.sources import tiered
     from next_plaid_spark.sources.index_store import (
         write_centroids,
         write_ivf_from_doc_stats,
@@ -393,9 +359,9 @@ def update_index_delta(
     # append (every streaming ingest batch) pays for neither beyond this
     # single empty-result job (guide §5: driver round-trips are a
     # per-batch stream cost).
-    old_stats = spark.read.parquet(os.path.join(index.path, "doc_stats"))
     _dhist = ([] if gone is None else
-              (old_stats.join(gone, "doc_id", "left_semi")
+              (spark.read.parquet(os.path.join(index.path, "doc_stats"))
+               .join(gone, "doc_id", "left_semi")
                .select(bucket.alias("b"), "num_tokens")
                .groupBy("b")
                .agg(F.count("*").alias("nd"), F.sum("num_tokens").alias("nt"))
@@ -406,43 +372,20 @@ def update_index_delta(
     new_per_bucket = {int(r.b): int(r.nt) for r in _hist}
 
     old_dir = os.path.join(index.path, "tokens_bucketed")
-    by_bucket: dict[int, list[tuple[str, int]]] = {}
-    for fn in os.listdir(old_dir):
-        if fn.startswith((".", "_")):  # _SUCCESS + hidden .crc sidecars
-            continue
-        m = re.search(r"_(\d+)\.c\d+", fn)
+    by_bucket: dict[int, dict[str, int]] = {}
+    for p, rows_in_file, _mm in tiered.list_files(old_dir):
+        m = re.search(r"_(\d+)\.c\d+", os.path.basename(p))
         if m:
-            p = os.path.join(old_dir, fn)
-            by_bucket.setdefault(int(m.group(1)), []).append(
-                (p, _parquet_rows(p)))
+            by_bucket.setdefault(int(m.group(1)), {})[p] = rows_in_file
 
-    # Tiered-file appends (r14): Murmur3 spreads any realistic batch's
-    # doc_ids over EVERY bucket, so the r13 rule — rewrite each bucket
-    # owning a new doc_id — rewrote the whole corpus per append. A
-    # bucket's new rows now land as an ADDITIONAL bucket file, folding
-    # in only the old files that are small relative to the arriving mass
-    # (Bentley-Saxe tiering, the same size-tiered rule as the streaming
-    # sinks' generational fold; tiered on exact footer row counts — file
-    # BYTES under-weight small files, whose size is mostly fixed parquet
-    # overhead): per-append token IO is O(batch), each row is rewritten
-    # O(log appends) times over a snapshot chain, and a settled big file
-    # rides forward as a hardlink. Only a bucket that OWNS a deleted doc
-    # folds entirely — a gone doc's rows live in whichever file its
-    # arrival batch wrote, so file-level pruning of deletes needs the
-    # whole bucket read anyway.
+    # the tiered fold rule per bucket, the bucket's new rows as the mass;
+    # a bucket that OWNS a deleted doc folds entirely — a gone doc's rows
+    # live in whichever file its arrival batch wrote, so file-level
+    # pruning of deletes needs the whole bucket read anyway
     folded: set[str] = set()
-    for b, files in by_bucket.items():
-        if b in del_dirty:
-            folded.update(p for p, _ in files)
-            continue
-        acc = new_per_bucket.get(b, 0)
-        if acc <= 0:
-            continue
-        for p, rows_in_file in sorted(files, key=lambda t: t[1]):
-            if rows_in_file > DELTA_FOLD_RATIO * acc:
-                break
-            folded.add(p)
-            acc += rows_in_file
+    for b, sizes in by_bucket.items():
+        folded |= tiered.fold_set(sizes, new_per_bucket.get(b, 0),
+                                  lambda _p, b=b: b in del_dirty)
 
     cols = index.tokens.columns
     if folded:
@@ -477,15 +420,8 @@ def update_index_delta(
             .sortBy("doc_id")
             .saveAsTable(bt_new)
         )
-        for files in by_bucket.values():
-            for src, _sz in files:
-                if src in folded:
-                    continue
-                dst = os.path.join(new_dir, os.path.basename(src))
-                try:
-                    os.link(src, dst)
-                except OSError:
-                    shutil.copy2(src, dst)
+        tiered.carry([p for sizes in by_bucket.values() for p in sizes
+                      if p not in folded], new_dir)
         spark.sql(f"REFRESH TABLE {bt_new}")
 
     new_stats = quantized.groupBy("doc_id").agg(
@@ -493,67 +429,20 @@ def update_index_delta(
         F.array_sort(F.collect_set("code")).alias("codes"),
     )
 
-    # doc_stats gets the SAME tiered-file economy as the tokens (r14):
-    # the new docs' stats land as a fresh file; an old file folds in only
-    # when (a) its footer doc_id range may contain a DELETED doc (row-
-    # group min/max pruning — with ordered intake, deletes fold few
-    # files) or (b) it is small relative to the arriving row count
-    # (Bentley-Saxe); everything else hardlinks forward. All consumers
-    # (doclens, doc_codes, the IVF derivation's sort_array fold) are
-    # row-order-insensitive, so layout is invisible to values. IVF
-    # itself is still rewritten per snapshot — its postings change with
-    # every append and a stale tier could resurface deleted docs, so the
-    # per-snapshot derive from doc_stats stays the correctness anchor.
-    old_sd = os.path.join(index.path, "doc_stats")
-    new_sd = os.path.join(out_path, "doc_stats")
-    stat_files = []
-    for fn in os.listdir(old_sd):
-        if fn.startswith((".", "_")):
-            continue
-        p = os.path.join(old_sd, fn)
-        stat_files.append((p, _parquet_rows(p), _parquet_minmax(p, "doc_id")))
-    gone_rows = ([] if not gone_nd
-                 else [int(r.doc_id) for r in gone.collect()]
-                 if gone_nd <= 100_000 else None)
-
-    def _may_contain_gone(mm):
-        if not gone_nd:
-            return False
-        if mm is None or gone_rows is None:  # no stats / huge delete set
-            return True
-        lo, hi = mm
-        return any(lo <= g <= hi for g in gone_rows)
-
-    sd_folded: set[str] = set()
-    acc = n_new_docs
-    for p, rows_in_file, mm in sorted(stat_files, key=lambda t: t[1]):
-        if _may_contain_gone(mm):
-            sd_folded.add(p)
-        elif acc and rows_in_file <= DELTA_FOLD_RATIO * acc:
-            sd_folded.add(p)
-            acc += rows_in_file
-    if sd_folded:
-        fold_stats = spark.read.parquet(*sorted(sd_folded))
-        if gone is not None:
-            fold_stats = fold_stats.join(gone, "doc_id", "left_anti")
-    else:
-        fold_stats = old_stats.filter(F.lit(False))
+    # doc_stats is a doc_id-ranged tiered store: with ordered intake a
+    # delete folds few files. All consumers (doclens, doc_codes, the IVF
+    # derivation's sort_array fold) are row-order-insensitive, so layout
+    # is invisible to values. IVF itself is still rewritten per snapshot
+    # — its postings change with every append and a stale tier could
+    # resurface deleted docs, so the per-snapshot derive from doc_stats
+    # stays the correctness anchor.
+    gone_rows = tiered.collect_gone(gone) if gone_nd else []
 
     def _stats_leg() -> None:
-        # one file per snapshot hop: the union is delta-sized (new stats +
-        # folded small files), and one file IS the LSM tier granularity —
-        # without this, each append would emit one tiny file per shuffle
-        # partition and the tier structure would be noise-sized
-        (fold_stats.unionByName(new_stats).coalesce(1)
-         .write.mode("overwrite").parquet(new_sd))
-        for p, _rows, _mm in stat_files:
-            if p in sd_folded:
-                continue
-            dst = os.path.join(new_sd, os.path.basename(p))
-            try:
-                os.link(p, dst)
-            except OSError:
-                shutil.copy2(p, dst)
+        tiered.write_doc_ranged(
+            os.path.join(index.path, "doc_stats"),
+            os.path.join(out_path, "doc_stats"), new_stats, n_new_docs,
+            gone=gone, gone_ids=gone_rows)
         # IVF derives from the doc_stats just written; centroids are a
         # driver-local table — both stay chained behind the stats write
         # inside this leg

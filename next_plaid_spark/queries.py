@@ -3352,7 +3352,7 @@ def q_plaid_updated_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry): a bucketed base index over docs < UPDATE_SPLIT gets a
     tiered-file append of [UPDATE_SPLIT, UPDATE_END) — the r14 LSM-style
     layout where the batch lands as additional bucket files and settled
-    files hardlink forward (operators/update.py) — and the funnel then
+    files hardlink forward (sources/tiered.py) — and the funnel then
     runs over the UPDATED snapshot in its exact configuration (n_probe =
     K, t_cs = −∞, survivor budget ≥ N), so the result must equal exact
     MaxSim over the updated corpus's decompressed vectors. This puts the
@@ -3530,7 +3530,7 @@ def q_ingest_stream_doclens(spark: SparkSession, sf_dir: str) -> DataFrame:
     defect that dropped or duplicated any document would hash-mismatch;
     this is the ingestion-completeness axis the r13 self-ingest fix
     protects. Runs BUCKETED (r14), so each append flows through the
-    tiered-file delta (update.py): settled token files hardlink forward
+    tiered-file delta (sources/tiered.py): settled token files hardlink forward
     and retain-pruning rmtrees v0 mid-stream WHILE newer snapshots still
     hardlink its files — inode survival is on the hash path."""
     import tempfile

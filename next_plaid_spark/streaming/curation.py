@@ -45,6 +45,7 @@ from pyspark.sql.window import Window
 
 from next_plaid_spark.operators.corpus import contamination, eval_shingle_set
 from next_plaid_spark.operators.textstats import fingerprint, quality_score
+from next_plaid_spark.sources import tiered
 
 
 # ---------------------------------------------------------------------------
@@ -69,7 +70,7 @@ from next_plaid_spark.operators.textstats import fingerprint, quality_score
 # kept corpus every N batches — O(corpus/N) amortized write cost per
 # batch, which at 100 TB dominates ingest. A fold now merges the new
 # per-batch dirs plus only the generations that are small relative to
-# the accumulated mass (size-tiered, ``_FOLD_RATIO``): generations end
+# the accumulated mass (size-tiered, ``sources/tiered.py``): generations end
 # up geometrically sized, so each byte is rewritten O(log batches)
 # times over the stream's life instead of once per fold, and a large
 # settled generation is never touched by a fold of small newcomers.
@@ -79,10 +80,6 @@ from next_plaid_spark.operators.textstats import fingerprint, quality_score
 
 _DIR_RE = re.compile(r"^(b-?\d+|g\d+)$")
 _GEN_RE = re.compile(r"^g(\d+)$")
-
-#: a generation folds into the new one while its bytes are at most this
-#: multiple of the accumulated smaller mass (Bentley-Saxe style tiering)
-_FOLD_RATIO = 2.0
 
 
 def _complete_marker(path: str) -> bool:
@@ -222,16 +219,15 @@ def _recover_fold(root: str) -> None:
         shutil.rmtree(tmp)
 
 
-def _fold_sources(root: str, exclude_batch: int | None = None,
-                  ratio: float = _FOLD_RATIO) -> list[str]:
+def _fold_sources(root: str, exclude_batch: int | None = None) -> list[str]:
     """Pick the dirs one generational fold merges: every committed
     per-batch ``b{id}`` dir (minus the in-flight batch's own) plus,
-    smallest-first, each generation whose bytes are ≤ ``ratio`` × the
-    mass accumulated so far. A generation larger than that is settled —
-    it is only rewritten once the newer mass has grown comparable, so
-    each byte moves O(log batches) times over the stream's life. With
-    no new per-batch dirs the accumulated mass is 0 and nothing folds
-    (idempotent re-run)."""
+    smallest-first, the generations ``tiered.fold_set`` picks with the
+    per-batch dirs' bytes as the arriving mass. A larger generation is
+    settled — it is only rewritten once the newer mass has grown
+    comparable, so each byte moves O(log batches) times over the
+    stream's life. With no new per-batch dirs the mass is 0 and nothing
+    folds (idempotent re-run)."""
     batches, gens = [], []
     for p in _batch_dirs(root, exclude_batch):
         d = os.path.basename(p)
@@ -239,15 +235,9 @@ def _fold_sources(root: str, exclude_batch: int | None = None,
             gens.append((_dir_bytes(p), p))
         else:
             batches.append(p)
-    sources = list(batches)
-    acc = sum(_dir_bytes(p) for p in batches)
-    if acc > 0:
-        for sz, p in sorted(gens):
-            if sz > ratio * acc:
-                break
-            sources.append(p)
-            acc += sz
-    return sources
+    folded = tiered.fold_set({p: sz for sz, p in gens},
+                             sum(_dir_bytes(p) for p in batches))
+    return batches + [p for _sz, p in sorted(gens) if p in folded]
 
 
 def _next_gen_name(root: str) -> str:

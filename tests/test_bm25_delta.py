@@ -121,11 +121,8 @@ def test_save_delta_pure_append_hardlinks_settled_files(spark, tmp_path):
     assert _sorted_rows(got.doclens) == _sorted_rows(want.doclens)
     assert got.n_docs == want.n_docs and got.avgdl == want.avgdl
     # the delta (2 postings rows) must not rewrite the settled base files:
-    # every base file with > DELTA_FOLD_RATIO × delta rows hardlinks forward
-    from next_plaid_spark.operators.update import (
-        DELTA_FOLD_RATIO,
-        _parquet_rows,
-    )
+    # every base file with > FOLD_RATIO × delta rows hardlinks forward
+    from next_plaid_spark.sources.tiered import FOLD_RATIO, parquet_rows
 
     carried = settled = 0
     for fn in os.listdir(os.path.join(v1_path, "postings")):
@@ -133,7 +130,7 @@ def test_save_delta_pure_append_hardlinks_settled_files(spark, tmp_path):
             continue
         src = os.path.join(v1_path, "postings", fn)
         dst = os.path.join(v2_path, "postings", fn)
-        if _parquet_rows(src) > DELTA_FOLD_RATIO * 2:
+        if parquet_rows(src) > FOLD_RATIO * 2:
             settled += 1
             assert os.path.exists(dst)
             if os.stat(src).st_ino == os.stat(dst).st_ino:

@@ -328,10 +328,10 @@ def test_delete_folds_only_range_hit_stats_files(spark, tmp_path):
     import os
 
     from next_plaid_spark.operators.update import (
-        _parquet_minmax,
         update_index,
         update_index_delta,
     )
+    from next_plaid_spark.sources.tiered import parquet_minmax
 
     toks, _ = clustered_token_corpus(
         spark, n_docs=350, tokens_per_doc=4, dim=8, n_clusters=8, seed=37
@@ -351,7 +351,7 @@ def test_delete_folds_only_range_hit_stats_files(spark, tmp_path):
 
     def stats_files(d):
         return {f: (os.stat(os.path.join(d, f)).st_ino,
-                    _parquet_minmax(os.path.join(d, f), "doc_id"))
+                    parquet_minmax(os.path.join(d, f), "doc_id"))
                 for f in os.listdir(d) if not f.startswith(("_", "."))}
 
     before = stats_files(sd("v1"))
@@ -387,17 +387,14 @@ def test_parquet_minmax_without_statistics_returns_none(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from next_plaid_spark.operators.update import (
-        _parquet_minmax,
-        _parquet_rows,
-    )
+    from next_plaid_spark.sources.tiered import parquet_minmax, parquet_rows
 
     p = str(tmp_path / "nostats.parquet")
     pq.write_table(pa.table({"doc_id": [7, 3, 9]}), p,
                    write_statistics=False)
-    assert _parquet_minmax(p, "doc_id") is None
-    assert _parquet_rows(p) == 3
+    assert parquet_minmax(p, "doc_id") is None
+    assert parquet_rows(p) == 3
 
     p2 = str(tmp_path / "stats.parquet")
     pq.write_table(pa.table({"doc_id": [7, 3, 9]}), p2)
-    assert _parquet_minmax(p2, "doc_id") == (3, 9)
+    assert parquet_minmax(p2, "doc_id") == (3, 9)

@@ -146,3 +146,64 @@ def test_search_rejects_dimension_mismatch(lix):
         idx.search(bad)
     with pytest.raises(ValueError, match="tokens, dim"):
         idx.search(np.zeros(idx.embedding_dim()))
+
+
+@pytest.mark.parametrize("op", ["update", "delete"])
+@pytest.mark.parametrize("crash_at", ["metadata", "snapshot"])
+def test_crash_keeps_previous_version(spark, documents, tmp_path,
+                                      monkeypatch, op, crash_at):
+    """A crash at either write of an update/delete leaves the previous
+    version the latest complete one, serving the same metadata; a re-run
+    into the same half-written version equals an uncrashed run. The
+    metadata is written before the snapshot's meta.json commit marker —
+    the other order would leave a committed version without metadata."""
+    import os
+
+    from next_plaid_spark.sources import index_store
+
+    docs = documents.filter(F.col("doc_id") < 60)
+    extra = documents.filter((F.col("doc_id") >= 60) & (F.col("doc_id") < 70))
+    queries = encode_queries(documents.filter(F.col("doc_id") < 3).select(
+        F.col("doc_id").alias("query_id"), "text"))
+
+    def fresh(name):
+        return LocalIndex.create_with_kmeans(
+            spark, encode_documents(docs), str(tmp_path / name), nbits=4,
+            seed=42, metadata=docs.select("doc_id", "lang", "source"))
+
+    def run(ix):
+        if op == "update":
+            return ix.update(encode_documents(extra),
+                             metadata=extra.select("doc_id", "lang", "source"))
+        ix.delete([0, 1, 2])
+        return ix
+
+    def state(ix):
+        return (os.path.basename(ix.path), ix.num_documents(),
+                sorted(map(tuple, ix.metadata().df.collect())),
+                sorted(map(tuple, ix.index.doclens.collect())),
+                sorted(map(tuple, ix.search_batch(queries).collect())))
+
+    ix = fresh("crashed")
+    before = state(ix)
+    if crash_at == "metadata":
+        real = LocalIndex._write_meta
+
+        def crash(self, *a, **kw):
+            real(self, *a, **kw)
+            raise RuntimeError("injected crash")
+
+        monkeypatch.setattr(LocalIndex, "_write_meta", crash)
+    else:
+        def crash(*a, **kw):
+            raise RuntimeError("injected crash")
+
+        # mid-snapshot: tokens and doc_stats written, IVF not yet
+        monkeypatch.setattr(index_store, "write_ivf_from_stats_df", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run(ix)
+    monkeypatch.undo()
+
+    reloaded = LocalIndex.load(spark, ix.root)
+    assert state(reloaded) == before
+    assert state(run(reloaded)) == state(run(fresh("clean")))

@@ -42,7 +42,7 @@ def _tok_dir(root: str, v: int) -> str:
 
 
 def _files(d: str) -> list[tuple[str, int, int, int]]:
-    from next_plaid_spark.operators.update import _parquet_rows
+    from next_plaid_spark.sources.tiered import parquet_rows
 
     out = []
     for f in os.listdir(d):
@@ -50,7 +50,7 @@ def _files(d: str) -> list[tuple[str, int, int, int]]:
             continue
         p = os.path.join(d, f)
         st = os.stat(p)
-        out.append((f, st.st_ino, st.st_size, _parquet_rows(p)))
+        out.append((f, st.st_ino, st.st_size, parquet_rows(p)))
     return out
 
 
