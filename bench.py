@@ -144,10 +144,9 @@ def main() -> None:
             .write.mode("overwrite").format("noop").save()
 
         # index build timed on its own (populates the cache plaid_search
-        # uses). Since r9 this is the doc_id-BUCKETED build — the default
-        # layout (PLANS.md §A15): one write-side shuffle here buys a funnel
-        # with zero corpus-sized exchanges on every subsequent search. The
-        # unbucketed control is timed in the A/B extras below.
+        # uses). The doc_id-bucketed token write (PLANS.md §A15): one
+        # write-side shuffle here buys a funnel with zero corpus-sized
+        # exchanges on every subsequent search.
         if timed(timings, "plaid_index_build", lambda: q._plaid_index(spark, sf_dir)):
             idx0 = q._plaid_index(spark, sf_dir)
             stats["index_docs_per_sec"] = round(
@@ -276,35 +275,6 @@ def main() -> None:
         )
         timed(extras, f"plaid_search_batch{n_q}_chunked4",
               lambda: force(chunked_searcher.search(encode_queries(batch_queries))))
-
-        # doc_id-bucketed token storage payoff (SCALING.md's cluster-scale
-        # layout claim, measured): the headline index is the BUCKETED build
-        # since r9; this A/B builds the UNBUCKETED control of the same
-        # corpus and runs the same batch500 against both. The bucket spec
-        # satisfies the funnel's per-doc required distributions, so the
-        # bucketed search plan loses Exchange nodes — counted from the
-        # executed plan — and the one-time write-side shuffle is amortized
-        # over every search.
-        try:
-            import tempfile as _tf
-
-            from next_plaid_spark.plans.builder import IndexBuilder as _IB
-
-            upath = os.path.join(_tf.mkdtemp(prefix="bench_uidx_"), "index")
-            t0 = time.time()
-            uidx = _IB(spark, nbits=4, seed=42, bucket_tokens=None).build(
-                q._doc_tokens(spark, sf_dir), upath
-            )
-            extras["plaid_index_build_unbucketed"] = round(time.time() - t0, 3)
-            for tag, sidx in (("unbucketed", uidx), ("bucketed", idx)):
-                s = BatchSearcher(sidx, SearchParams(top_k=10, n_full_scores=256))
-                res = s.search(encode_queries(batch_queries))
-                t0 = time.time()
-                force(res)
-                extras[f"batch{n_q}_{tag}_wall"] = round(time.time() - t0, 3)
-                stats[f"batch{n_q}_{tag}_exchanges"] = _exchanges(res)
-        except Exception:
-            errors["bucketed_payoff"] = traceback.format_exc(limit=3).splitlines()[-1]
 
         # the code-search index is likewise a one-time INDEXING cost (the
         # reference's `colgrep index` builds once, queries serve from the

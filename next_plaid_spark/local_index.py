@@ -166,14 +166,7 @@ class LocalIndex:
     def get_document_codes(self, doc_ids: Sequence[int]) -> DataFrame:
         """index.rs:1182 — (doc_id, codes array) for the given docs."""
         ids = [int(d) for d in doc_ids]
-        pre = self.index.doc_codes
-        if pre is not None:
-            return pre.filter(F.col("doc_id").isin(ids))
-        return (
-            self.index.tokens.filter(F.col("doc_id").isin(ids))
-            .groupBy("doc_id")
-            .agg(F.sort_array(F.collect_list("code")).alias("codes"))
-        )
+        return self.index.doc_codes.filter(F.col("doc_id").isin(ids))
 
     def reconstruct(self, doc_ids: Sequence[int] | DataFrame) -> DataFrame:
         """index.rs:1354 — decompressed (doc_id, token_idx, vec)."""

@@ -34,6 +34,7 @@ from pyspark.sql.window import Window
 
 from next_plaid_spark.functions.text import tokenize_trigram, tokenize_unicode61
 from next_plaid_spark.session import local_df
+from next_plaid_spark.sources import tiered
 
 K1 = 1.2
 B = 0.75
@@ -337,11 +338,11 @@ class BM25Index:
                 spark.read.parquet(os.path.join(path, "doclens"))
                 .agg(F.sum("dl")).collect()[0][0] or 0)
             self.total_dl = total_dl
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump({"n_docs": self.n_docs, "avgdl": self.avgdl,
-                       "total_dl": total_dl,
-                       "tokenizer": self.tokenizer,
-                       "with_positions": self.positions is not None}, f)
+        tiered.write_marker(os.path.join(path, "meta.json"), json.dumps(
+            {"n_docs": self.n_docs, "avgdl": self.avgdl,
+             "total_dl": total_dl,
+             "tokenizer": self.tokenizer,
+             "with_positions": self.positions is not None}))
         # swap the staged store in (all the writes above are complete):
         # old aside -> staged in -> drop old. A crash before the second
         # rename leaves the previous store recoverable at the .old name;
@@ -415,8 +416,6 @@ class BM25Index:
         ⊆ indexed docs, and new doc_ids don't collide with kept docs
         (re-encoded docs appear in both gone and new)."""
         import json
-
-        from next_plaid_spark.sources import tiered
 
         old = getattr(self, "_store_path", None)
         if not old:
@@ -522,11 +521,11 @@ class BM25Index:
          .write.mode("overwrite")
          .parquet(os.path.join(out_path, "term_stats")))
 
-        with open(os.path.join(out_path, "meta.json"), "w") as f:
-            json.dump({"n_docs": n_docs, "avgdl": avgdl,
-                       "total_dl": total_dl,
-                       "tokenizer": self.tokenizer,
-                       "with_positions": self.positions is not None}, f)
+        tiered.write_marker(os.path.join(out_path, "meta.json"), json.dumps(
+            {"n_docs": n_docs, "avgdl": avgdl,
+             "total_dl": total_dl,
+             "tokenizer": self.tokenizer,
+             "with_positions": self.positions is not None}))
         if gone_df is not None:
             gone_df.unpersist()
 

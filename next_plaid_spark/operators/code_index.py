@@ -114,7 +114,7 @@ class CodeIndex:
     # -- build / load --------------------------------------------------------
     @classmethod
     def build(cls, files: DataFrame, path: str, *, nbits: int = 4,
-              seed: int = 42, bucket_tokens: int | None = None,
+              seed: int = 42, bucket_tokens: int = 32,
               dim: int | None = None) -> "CodeIndex":
         """files(path, content) → persisted CodeIndex at ``path``.
 
@@ -133,7 +133,7 @@ class CodeIndex:
     @classmethod
     def _build_from_units(cls, spark: SparkSession, raw_units: DataFrame,
                           state: DataFrame, path: str, *, nbits: int = 4,
-                          seed: int = 42, bucket_tokens: int | None = None,
+                          seed: int = 42, bucket_tokens: int = 32,
                           dim: int | None = None) -> "CodeIndex":
         """Index a pre-parsed unit table (the update path re-enters here so
         unchanged files skip the parse but share every later stage)."""
@@ -206,8 +206,7 @@ class CodeIndex:
         meta = {"dim": dim, "doc_max_tokens": DOC_MAX_TOKENS,
                 "query_max_tokens": CODE_QUERY_MAX_TOKENS,
                 "nbits": nbits, "seed": seed, "bucket_tokens": bucket_tokens}
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(meta, f)
+        tiered.write_marker(os.path.join(path, "meta.json"), json.dumps(meta))
         return cls(spark, path, meta)
 
     @classmethod
@@ -454,8 +453,6 @@ class CodeIndex:
         from next_plaid_spark.operators.colgrep import detect_changes, identifier_tokens
         from next_plaid_spark.operators.update import (
             REBUILD_THRESHOLD,
-            delete_from_index,
-            update_index,
             update_index_delta,
         )
 
@@ -490,15 +487,13 @@ class CodeIndex:
         # ((file, line, name) is not guaranteed unique — one-line overloads)
         n_merged = merged_raw.count()
         if n_merged <= rebuild_threshold:
-            # full rebuild keeps the stored layout too (bucket_tokens rides
-            # the meta; the incremental path below inherits it sticky via
-            # update_index)
+            # full rebuild keeps the stored bucket count
             try:
                 return CodeIndex._build_from_units(
                     spark, merged_raw, new_state, out_path,
                     nbits=self.meta["nbits"], seed=self.meta["seed"],
                     dim=self.meta["dim"],
-                    bucket_tokens=self.meta.get("bucket_tokens"))
+                    bucket_tokens=self.plaid.meta.n_buckets)
             finally:
                 merged_raw.unpersist()
 
@@ -652,36 +647,16 @@ class CodeIndex:
         def _plaid_leg() -> None:
             # PLAID: delete everything not kept verbatim, append re-encoded
             spark.sparkContext.setJobDescription("ci-update: plaid delta")
-            gone_doc = gone_plaid
             new_tokens = encode_tokens(
                 reindex, "unit_id", "embed_text", dim=self.meta["dim"],
                 max_tokens=self.meta["doc_max_tokens"], out_id="doc_id",
             ).select("doc_id", "token_idx", "vec")
-            if self.plaid.meta.n_buckets:
-                # bucketed layout (the default): fused delete+append
-                # rewrites only the buckets owning a gone/re-encoded unit
-                # and hardlinks the clean ones — O(delta) token IO instead
-                # of the two-step form's two corpus-sized snapshot writes
-                update_index_delta(spark, self.plaid, gone_doc, new_tokens,
-                                   os.path.join(out_path, "plaid"),
-                                   seed=self.meta["seed"])
-            else:
-                del_path = os.path.join(out_path, "_plaid_del")
-                shrunk = delete_from_index(
-                    spark, self.plaid,
-                    gone_doc if gone_doc is not None else
-                    self.plaid.doclens.select("doc_id").filter(F.lit(False)),
-                    del_path)
-                update_index(spark, shrunk, new_tokens,
-                             os.path.join(out_path, "plaid"),
-                             seed=self.meta["seed"])
-                # the shrunken snapshot was only update_index's input — the
-                # new index at plaid/ is fully materialized, so drop the
-                # intermediate (it is corpus-sized; leaving it would double
-                # every update's footprint)
-                import shutil
-
-                shutil.rmtree(del_path, ignore_errors=True)
+            # fused delete+append: rewrites only the buckets owning a
+            # gone/re-encoded unit and hardlinks the clean ones — O(delta)
+            # token IO
+            update_index_delta(spark, self.plaid, gone_plaid, new_tokens,
+                               os.path.join(out_path, "plaid"),
+                               seed=self.meta["seed"])
 
         # delta-sized (reindexed units' exploded tokens) but its derivation
         # — units scan + anti-join + tokenize — fed FOUR evaluations (the
@@ -730,8 +705,8 @@ class CodeIndex:
             for fut in futs:
                 fut.result()
 
-        with open(os.path.join(out_path, "meta.json"), "w") as f:
-            json.dump(self.meta, f)
+        tiered.write_marker(os.path.join(out_path, "meta.json"),
+                            json.dumps(self.meta))
         spark.sparkContext.setJobDescription(None)
         merged_raw.unpersist()
         joined.unpersist()

@@ -15,10 +15,12 @@ NEW index directory (functional, concurrent-reader-safe; the Spark analog of
 the reference's atomic temp-file rename + arc-swap hot reload). The raw
 ``doc_tokens`` DataFrame plays the role of the raw-embedding sidecar (S7):
 at cluster scale the source table always exists upstream, so path (a) is
-just "rerun the builder".
+just "rerun the builder". Paths (b)/(c) and every delete are one job,
+``update_index_delta``: it writes the changed buckets of the doc_id-
+bucketed token table and hardlinks the rest forward.
 
 Delete (U5/U6): stable-id mode — survivors keep their ids and only the
-tokens/ivf/doclens tables are filtered; the reference's dense-id
+tokens/doc_stats/ivf tables are filtered; the reference's dense-id
 re-sequencing (filtering.rs:52-63) exists for NPY positional alignment,
 which Parquet join-by-key makes unnecessary. A dense view is provided for
 parity via ``dense_id_mapping``.
@@ -33,9 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from next_plaid_spark.session import local_df
-from next_plaid_spark.operators.codec import assign_and_quantize, quantize_residuals
-from next_plaid_spark.operators.kmeans import assign_codes, lloyds
-from next_plaid_spark.sources.index_store import IndexMeta, PlaidIndex, write_index
+from next_plaid_spark.operators.codec import assign_and_quantize
+from next_plaid_spark.operators.kmeans import lloyds
+from next_plaid_spark.sources.index_store import IndexMeta, PlaidIndex
 
 REBUILD_THRESHOLD = 999   # lib.rs:47 start_from_scratch
 BUFFER_THRESHOLD = 100    # update.rs:95-108
@@ -112,88 +114,42 @@ def update_index(
     buffer_threshold: int = BUFFER_THRESHOLD,
     seed: int = 42,
 ) -> PlaidIndex:
-    """U1 dispatcher + U4 append re-index → new snapshot at ``out_path``."""
+    """U1 dispatcher + U4 append re-index → new snapshot at ``out_path``:
+    path (a) rebuilds when the raw corpus is given and the total stays
+    within ``rebuild_threshold``; paths (b)/(c) are ``update_index_delta``
+    with no delete set."""
+    if full_rebuild_tokens is None:
+        # the rebuild-threshold check is the only consumer of a new-doc
+        # count here; without a rebuild frame (the streaming-ingest hot
+        # path) the count job is skipped and the delta derives every count
+        # from its own single bucket-histogram aggregation (guide §5:
+        # driver round-trips are a per-batch stream cost). gone=None
+        # declares the pure append statically: no delete bookkeeping job,
+        # no anti-joins (r14 opt)
+        return update_index_delta(spark, index, None, new_doc_tokens,
+                                  out_path, seed=seed,
+                                  buffer_threshold=buffer_threshold)
     new_doc_tokens = new_doc_tokens.select(
         F.col("doc_id").cast("long"), F.col("token_idx").cast("int"), "vec"
-    )
-    # every return path below has materialized its snapshot before
-    # returning, so the finally-unpersist (r15, ADVICE) releases the
-    # per-call cache on ALL paths — a long-lived driver used to accumulate
-    # one cached frame per rebuild/non-bucketed call, at odds with the
-    # "per-batch caches must not outlive the batch" discipline
-    _cached: DataFrame | None = None
+    ).cache()
+    # both branches materialize their snapshot before returning, so the
+    # finally-unpersist (r15, ADVICE) releases the per-call cache
     try:
-        n_new_docs = None
-        if full_rebuild_tokens is not None:
-            # the rebuild-threshold check is the only pre-routing consumer of
-            # the new-doc count; when the caller passes no rebuild frame (the
-            # streaming-ingest hot path) the count jobs are skipped entirely —
-            # update_index_delta derives every count from its own single
-            # bucket-histogram aggregation (guide §5: driver round-trips are a
-            # per-batch stream cost)
-            new_doc_tokens = _cached = new_doc_tokens.cache()
-            n_new_docs = new_doc_tokens.select("doc_id").distinct().count()
+        n_new_docs = new_doc_tokens.select("doc_id").distinct().count()
+        if index.meta.num_documents + n_new_docs <= rebuild_threshold:
             # path (a): small corpus → rebuild everything with fresh k-means
-            # (sticky layout: a bucketed index rebuilds bucketed)
-            if index.meta.num_documents + n_new_docs <= rebuild_threshold:
-                from next_plaid_spark.plans.builder import IndexBuilder
+            from next_plaid_spark.plans.builder import IndexBuilder
 
-                allt = full_rebuild_tokens.unionByName(new_doc_tokens)
-                return IndexBuilder(spark, nbits=index.meta.nbits, seed=seed,
-                                    bucket_tokens=index.meta.n_buckets).build(
-                    allt, out_path
-                )
-
-        # bucketed layout: paths (b)/(c) are exactly the fused delta with an
-        # empty delete set — route there so the append writes O(batch) new
-        # bucket files (tiered-file appends) instead of snapshotting the corpus
-        if index.meta.n_buckets:
-            # gone=None declares the pure append statically: no delete
-            # bookkeeping job, no anti-joins (r14 opt)
-            return update_index_delta(spark, index, None, new_doc_tokens,
-                                      out_path, seed=seed,
-                                      buffer_threshold=buffer_threshold)
-
-        if n_new_docs is None:
-            new_doc_tokens = _cached = new_doc_tokens.cache()
-            # one fused aggregation for both counts (was two separate jobs)
-            _row = new_doc_tokens.agg(
-                F.countDistinct("doc_id").alias("d"), F.count("*").alias("n")
-            ).collect()[0]
-            n_new_docs, n_new_tokens = int(_row.d), int(_row.n)
-        else:
-            n_new_tokens = new_doc_tokens.count()
-        total_docs = index.meta.num_documents + n_new_docs
-
-        centroids = index.centroids_np()
-        # path (c): enough new docs → centroid expansion on outliers
-        if n_new_docs >= buffer_threshold:
-            outliers = find_outliers(
-                new_doc_tokens, centroids, index.meta.codec.cluster_threshold
+            allt = full_rebuild_tokens.unionByName(new_doc_tokens)
+            return IndexBuilder(spark, nbits=index.meta.nbits, seed=seed,
+                                bucket_tokens=index.meta.n_buckets).build(
+                allt, out_path
             )
-            centroids = expand_centroids(outliers, centroids, seed=seed)
-
-        # append-encode with (possibly expanded) codebook + existing codec
-        coded = assign_codes(new_doc_tokens, centroids)
-        quantized = quantize_residuals(coded, centroids, index.meta.codec)
-        all_tokens = index.tokens.unionByName(quantized)
-
-        meta = IndexMeta(
-            k=centroids.shape[0], dim=index.meta.dim, nbits=index.meta.nbits,
-            num_documents=total_docs,
-            num_embeddings=index.meta.num_embeddings + n_new_tokens,
-            avg_doclen=(index.meta.num_embeddings + n_new_tokens) / max(total_docs, 1),
-            codec=index.meta.codec,
-        )
-        # the source's storage layout is sticky: a bucketed index stays
-        # bucketed across append snapshots (the layout is the 100 TB search
-        # contract, not a per-snapshot accident)
-        return write_index(spark, out_path, tokens_coded=all_tokens,
-                           centroids=centroids, meta=meta,
-                           bucket_tokens=index.meta.n_buckets)
+        return update_index_delta(spark, index, None, new_doc_tokens,
+                                  out_path, seed=seed,
+                                  buffer_threshold=buffer_threshold)
     finally:
-        if _cached is not None:
-            _cached.unpersist()
+        new_doc_tokens.unpersist()
 
 
 def delete_from_index(
@@ -202,38 +158,15 @@ def delete_from_index(
     doc_ids: list[int] | DataFrame,
     out_path: str,
 ) -> PlaidIndex:
-    """U5: drop documents → new snapshot. Stable ids; IVF/doclens/meta are
-    recomputed by write_index from the filtered tokens table."""
-    if index.meta.n_buckets:
-        # bucketed layout: delete is the fused delta with an empty append
-        # set — only the buckets owning a deleted doc are rewritten
-        gone = (doc_ids.select(F.col("doc_id").cast("long"))
-                if isinstance(doc_ids, DataFrame)
-                else local_df(
-                    spark, [(int(i),) for i in doc_ids], "doc_id long"))
-        empty = spark.createDataFrame(
-            [], "doc_id long, token_idx int, vec array<float>")
-        return update_index_delta(spark, index, gone, empty, out_path)
-
-    if isinstance(doc_ids, DataFrame):
-        gone = doc_ids.select(F.col("doc_id").cast("long"))
-        survivors = index.tokens.join(gone, "doc_id", "left_anti")
-        n_gone = gone.distinct().count()
-    else:
-        ids = [int(i) for i in doc_ids]
-        survivors = index.tokens.filter(~F.col("doc_id").isin(ids))
-        n_gone = index.doclens.filter(F.col("doc_id").isin(ids)).count()
-
-    n_tokens = survivors.count()
-    n_docs = index.meta.num_documents - n_gone
-    meta = IndexMeta(
-        k=index.meta.k, dim=index.meta.dim, nbits=index.meta.nbits,
-        num_documents=n_docs, num_embeddings=n_tokens,
-        avg_doclen=n_tokens / max(n_docs, 1), codec=index.meta.codec,
-    )
-    return write_index(spark, out_path, tokens_coded=survivors,
-                       centroids=index.centroids_np(), meta=meta,
-                       bucket_tokens=index.meta.n_buckets)
+    """U5: drop documents → new snapshot; ``update_index_delta`` with an
+    empty append, so only the buckets owning a deleted doc are
+    rewritten. Stable ids."""
+    gone = (doc_ids.select(F.col("doc_id").cast("long"))
+            if isinstance(doc_ids, DataFrame)
+            else local_df(spark, [(int(i),) for i in doc_ids], "doc_id long"))
+    empty = spark.createDataFrame(
+        [], "doc_id long, token_idx int, vec array<float>")
+    return update_index_delta(spark, index, gone, empty, out_path)
 
 
 def dense_id_mapping(index: PlaidIndex) -> DataFrame:
@@ -258,47 +191,43 @@ def update_index_delta(
     seed: int = 42,
     buffer_threshold: int = BUFFER_THRESHOLD,
 ) -> PlaidIndex:
-    """Fused U5-delete + U1/U4-append for a doc_id-BUCKETED index → new
-    snapshot at ``out_path`` that touches only the delta's buckets.
+    """Fused U5-delete + U1/U4-append → new snapshot at ``out_path`` that
+    touches only the delta's buckets; ``update_index`` (appends) and
+    ``delete_from_index`` (deletes) are this with one side empty.
 
-    ``delete_from_index`` + ``update_index`` each rewrite the corpus-sized
-    token table (scan + bucket shuffle + write, twice per update). Here
-    both the tokens and doc_stats are tiered stores (``sources/tiered.py``
+    Both the tokens and doc_stats are tiered stores (``sources/tiered.py``
     holds the fold rule and the hardlink carry): per-update IO is
-    O(batch) instead of O(corpus). The tokens live in a
-    ``bucketBy(n, doc_id)`` table whose buckets may hold MULTIPLE files:
-    each bucket's new rows land as an additional bucket file and the fold
-    rule runs per bucket (Murmur3 spreads any realistic batch over every
-    bucket, so a bucket-granular rewrite would be O(corpus)). A delete
-    folds the whole bucket owning each gone doc — its rows live in
-    whichever file its arrival batch wrote. doc_stats is doc_id-ranged
+    O(batch), not O(corpus). The tokens live in a ``bucketBy(n, doc_id)``
+    table whose buckets may hold MULTIPLE files: each bucket's new rows
+    land as an additional bucket file and the fold rule runs per bucket
+    (Murmur3 spreads any realistic batch over every bucket, so a
+    bucket-granular rewrite would be O(corpus)). A delete folds the whole
+    bucket owning each gone doc — its rows live in whichever file its
+    arrival batch wrote. doc_stats is doc_id-ranged
     (``tiered.write_doc_ranged``, one tier per hop); IVF re-derives from
     the merged doc_stats (per-doc code sets, ~avg_doclen× smaller than
-    tokens); meta counts are arithmetic. Centroid-expansion policy
-    matches ``update_index`` path (c) (update.rs:95-108): expansion
-    appends codebook rows, so carried buckets' codes stay valid.
+    tokens); meta counts are arithmetic. Centroid expansion follows the
+    reference (update.rs:95-108): at ``buffer_threshold`` or more new docs
+    the outlier tokens train new centroids, appended to the codebook, so
+    carried buckets' codes stay valid.
 
-    Preconditions (same contract as the two-step form): ``gone_docs`` ⊆
-    indexed docs; ``new_doc_tokens`` doc_ids must not collide with kept
-    docs (re-encoded docs appear in both gone and new). ``gone_docs=None``
-    declares a pure append statically — the delete bookkeeping job and the
-    anti-joins are skipped entirely (one fewer doc_stats scan per
-    streaming-ingest batch).
+    Preconditions: ``gone_docs`` ⊆ indexed docs; ``new_doc_tokens``
+    doc_ids must not collide with kept docs (re-encoded docs appear in
+    both gone and new). ``gone_docs=None`` declares a pure append
+    statically — the delete bookkeeping job and the anti-joins are
+    skipped entirely (one fewer doc_stats scan per streaming-ingest
+    batch).
     """
-    import hashlib
     import re
 
     from next_plaid_spark.sources import tiered
     from next_plaid_spark.sources.index_store import (
+        bucket_table_name,
         write_centroids,
         write_ivf_from_doc_stats,
     )
 
     n = index.meta.n_buckets
-    if not n or not index.meta.bucket_table:
-        raise ValueError("update_index_delta requires a doc_id-bucketed index; "
-                         "use delete_from_index + update_index for plain layouts")
-
     gone = (None if gone_docs is None
             else gone_docs.select(F.col("doc_id").cast("long")).distinct().cache())
     new_doc_tokens = new_doc_tokens.select(
@@ -397,8 +326,7 @@ def update_index_delta(
         kept_rows = index.tokens.filter(F.lit(False)).select(*cols)
     rows = kept_rows.unionByName(quantized.select(*cols))
 
-    bt_new = ("nps_tokens_"
-              + hashlib.md5(os.path.abspath(out_path).encode()).hexdigest()[:12])
+    bt_new = bucket_table_name(out_path)
     new_dir = os.path.join(out_path, "tokens_bucketed")
     touched = del_dirty | set(new_per_bucket)
 
@@ -411,8 +339,7 @@ def update_index_delta(
         spark.sql(f"DROP TABLE IF EXISTS {bt_new}")
         (
             # one partition per touched bucket → one new file per touched
-            # bucket, the condition write_index documents for shuffle-free
-            # downstream reads
+            # bucket (write_index's one-file-per-bucket write)
             rows.repartition(max(len(touched), 1), bucket)
             .write.mode("overwrite")
             .option("path", new_dir)
@@ -471,6 +398,5 @@ def update_index_delta(
         avg_doclen=n_tok / max(n_docs, 1), codec=index.meta.codec,
         bucket_table=bt_new, n_buckets=n,
     )
-    with open(os.path.join(out_path, "meta.json"), "w") as f:
-        f.write(meta.to_json())
+    tiered.write_marker(os.path.join(out_path, "meta.json"), meta.to_json())
     return PlaidIndex(spark, out_path, meta)

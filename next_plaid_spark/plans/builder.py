@@ -63,7 +63,7 @@ class IndexBuilder:
     def __init__(self, spark: SparkSession, *, nbits: int = 4, seed: int = 42,
                  k: int | None = None, kmeans_iters: int = 4,
                  kmeans_strategy: str = "auto",
-                 bucket_tokens: int | None = None):
+                 bucket_tokens: int = 32):
         """kmeans_strategy:
         'sample' — reference parity: seeded bounded sample → driver Lloyd's
         (deterministic, matches kmeans.rs:261-422's shape).
@@ -79,8 +79,8 @@ class IndexBuilder:
         self.k = k
         self.kmeans_iters = kmeans_iters
         self.kmeans_strategy = kmeans_strategy
-        # persist tokens as a doc_id-bucketed table (shuffle-free per-doc
-        # consumers; see sources/index_store.py::write_index)
+        # bucket count of the doc_id-bucketed token table (shuffle-free
+        # per-doc consumers; see sources/index_store.py::write_index)
         self.bucket_tokens = bucket_tokens
 
     def build(self, doc_tokens: DataFrame, path: str) -> PlaidIndex:

@@ -365,19 +365,9 @@ class BatchSearcher:
             .select(F.explode("doc_ids").alias("doc_id"))
             .distinct()
         )
-        pre = self.index.doc_codes
-        if pre is not None:
-            # per-doc code lists are an index artifact (the codes.npy
-            # analog): read + semi-join, no per-batch corpus aggregation
-            doc_lists = pre.join(cand_docs, "doc_id", "left_semi")
-        else:
-            doc_lists = (
-                self.index.tokens.join(cand_docs, "doc_id", "left_semi")
-                .select("doc_id", "code")
-                .distinct()
-                .groupBy("doc_id")
-                .agg(F.collect_list("code").alias("codes"))
-            )
+        # per-doc code lists are an index artifact (the codes.npy analog):
+        # read + semi-join, no per-batch corpus aggregation
+        doc_lists = self.index.doc_codes.join(cand_docs, "doc_id", "left_semi")
         if spread:
             doc_lists = self._spread_small(doc_lists)
         return doc_lists.mapInPandas(kern, schema=schema)

@@ -212,14 +212,11 @@ def _plaid_index(spark: SparkSession, sf_dir: str):
 
         path = os.path.join(tempfile.mkdtemp(prefix="plaid_idx_"), "index")
         docs = _t(spark, sf_dir, "documents")
-        # doc_id-bucketed token storage is the DEFAULT layout (r9): the
-        # bucket spec satisfies every per-doc groupBy/join distribution in
-        # the funnel, eliminating the one corpus-sized exchange above the
-        # tokens scan (PLANS.md §A15, measured in BENCH_r08+). Search
-        # results are layout-independent (tests/test_bucketed_tokens.py);
-        # SPARK_GRAFT_BUCKET_TOKENS=0 restores the plain layout.
-        buckets = int(os.environ.get("SPARK_GRAFT_BUCKET_TOKENS", "32")) or None
-        idx = IndexBuilder(spark, nbits=4, seed=42, bucket_tokens=buckets).build(
+        # doc_id-bucketed token storage (32 buckets): the bucket spec
+        # satisfies every per-doc groupBy/join distribution in the funnel,
+        # so no corpus-sized exchange sits above the tokens scan
+        # (PLANS.md §A15)
+        idx = IndexBuilder(spark, nbits=4, seed=42).build(
             _doc_tokens(spark, sf_dir), path
         )
         _INDEX_CACHE[key] = idx
@@ -313,12 +310,7 @@ def _write_approx_oracle_sidecar(idx, *, path: str | None = None,
         "code long, cvec array<double>",
     )
     cent.coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
-    dc = idx.doc_codes
-    codes = (
-        dc.select("doc_id", F.explode("codes").alias("code"))
-        if dc is not None
-        else idx.tokens.select("doc_id", "code").distinct()
-    )
+    codes = idx.doc_codes.select("doc_id", F.explode("codes").alias("code"))
     codes.write.mode("overwrite").parquet(path + "/doc_codes")
     # num_documents from the index META, not count(distinct doc_id) over
     # doc_codes: on an index with zero-token docs the two diverge, and the
@@ -3787,11 +3779,10 @@ def _code_index(spark: SparkSession, sf_dir: str):
     # of serving a handle over overwritten parquet
     if _CODE_INDEX_CACHE.get("key") != key:
         units = _code_units(spark, sf_dir)  # writes CODE_UNITS_SIDECAR
-        buckets = int(os.environ.get("SPARK_GRAFT_BUCKET_TOKENS", "32")) or None
         idx = CodeIndex._build_from_units(
             spark, units.select(*_RAW_COLS),
             file_state(_code_corpus(spark, sf_dir)),
-            CODE_INDEX_PATH, nbits=4, seed=42, bucket_tokens=buckets)
+            CODE_INDEX_PATH, nbits=4, seed=42)
         _CODE_INDEX_CACHE.update(key=key, idx=idx)
     return _CODE_INDEX_CACHE["idx"]
 

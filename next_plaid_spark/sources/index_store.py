@@ -1,31 +1,35 @@
 """Index persistence — the Spark analog of the reference's NPY artifact
 directory (SURVEY.md §1.2, next-plaid/src/index.rs:551-911).
 
-One index = one directory of Parquet tables + a JSON sidecar:
+One index = one directory of Parquet tables + a JSON sidecar, in one
+format:
 
-    <path>/tokens/      doc_id, token_idx, code, residual   (the corpus)
-    <path>/centroids/   code, vec                           (small)
-    <path>/ivf/         code, doc_ids                       (inverted file)
-    <path>/doc_stats/   doc_id, num_tokens, codes  (doclens + codes.npy
-                        analogs from one shuffle; readers column-prune)
-    <path>/meta.json    k, dim, nbits, codec artifacts, counts
+    <path>/tokens_bucketed/  doc_id, token_idx, code, residual  (the
+                             corpus; a ``bucketBy(n, doc_id)`` table)
+    <path>/centroids/        code, vec                           (small)
+    <path>/ivf/              code, doc_ids                       (inverted file)
+    <path>/doc_stats/        doc_id, num_tokens, codes  (doclens + codes.npy
+                             analogs from one shuffle; readers column-prune)
+    <path>/meta.json         k, dim, nbits, codec artifacts, counts, the
+                             bucket table name + bucket count (written
+                             last: the snapshot's commit marker)
 
-Legacy layouts with separate ``doclens``/``doc_codes`` directories are
-still readable (PlaidIndex falls back when ``doc_stats`` is absent).
+The token files are registered as a session catalog table, so per-doc
+groupBys/joins read the bucket spec instead of shuffling the corpus; a
+session without the table reads the same files as plain parquet. ``ivf``
+is repartitioned by ``code`` (the probe joins on code).
 
 Differences from the reference by design: no 50k-doc chunking (Spark
 partitioning replaces it), no embedding_offset bookkeeping (joins on doc_id
 replace pointer arithmetic), no mmap merge step (S3 — multi-file Parquet
-reads natively). Atomicity comes from Spark's job commit protocol instead of
-temp-file rename (utils.rs:16).
-
-``tokens`` is repartitioned by ``doc_id`` (rerank gathers whole documents)
-and ``ivf`` by ``code`` (probe joins on code) — at cluster scale these become
-bucketed tables so the search-side joins co-locate without a shuffle.
+reads natively). Table writes commit through Spark's job commit protocol;
+``meta.json`` through a temp-file rename (utils.rs:16,
+``tiered.write_marker``).
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 from dataclasses import dataclass
@@ -36,6 +40,17 @@ from pyspark.sql import functions as F
 
 from next_plaid_spark.session import local_df
 from next_plaid_spark.operators.codec import CodecArtifacts
+from next_plaid_spark.sources import tiered
+
+#: the token table's columns — the catalog-less read states them, since a
+#: snapshot whose every doc was deleted has no token file to infer them from
+TOKEN_SCHEMA = "doc_id long, token_idx int, code long, residual binary"
+
+
+def bucket_table_name(path: str) -> str:
+    """The session catalog name of the token table of the index at ``path``."""
+    return "nps_tokens_" + hashlib.md5(
+        os.path.abspath(path).encode()).hexdigest()[:12]
 
 
 @dataclass
@@ -47,13 +62,13 @@ class IndexMeta:
     num_embeddings: int
     avg_doclen: float
     codec: CodecArtifacts
-    # set when tokens are persisted as a doc_id-bucketed table: catalog
-    # table name + bucket count (None = plain parquet directory)
+    # the token table's catalog name + bucket count, set by the snapshot
+    # writer (write_index / update_index_delta)
     bucket_table: str | None = None
     n_buckets: int | None = None
 
     def to_json(self) -> str:
-        d = {
+        return json.dumps({
             "k": self.k,
             "dim": self.dim,
             "nbits": self.nbits,
@@ -62,20 +77,23 @@ class IndexMeta:
             "avg_doclen": self.avg_doclen,
             "codec": self.codec.to_dict(),
             "next_plaid_spark_version": 1,
-        }
-        if self.bucket_table:
-            d["bucket_table"] = self.bucket_table
-            d["n_buckets"] = self.n_buckets
-        return json.dumps(d)
+            "bucket_table": self.bucket_table,
+            "n_buckets": self.n_buckets,
+        })
 
     @classmethod
     def from_json(cls, s: str) -> "IndexMeta":
         d = json.loads(s)
+        if not d.get("n_buckets"):
+            raise ValueError(
+                "index snapshot predates the single doc_id-bucketed token "
+                "format (its meta.json has no bucket_table/n_buckets); "
+                "rebuild it with IndexBuilder")
         return cls(
             k=d["k"], dim=d["dim"], nbits=d["nbits"],
             num_documents=d["num_documents"], num_embeddings=d["num_embeddings"],
             avg_doclen=d["avg_doclen"], codec=CodecArtifacts.from_dict(d["codec"]),
-            bucket_table=d.get("bucket_table"), n_buckets=d.get("n_buckets"),
+            bucket_table=d["bucket_table"], n_buckets=d["n_buckets"],
         )
 
 
@@ -100,10 +118,14 @@ class PlaidIndex:
         self._df_memo: dict = {}
         self._centroids_memo = None
 
-    def _read_memo(self, key: str, path: str) -> DataFrame:
+    def _read_memo(self, key: str, path: str,
+                   schema: str | None = None) -> DataFrame:
         df = self._df_memo.get(key)
         if df is None:
-            df = self.spark.read.parquet(path)
+            reader = self.spark.read
+            if schema is not None:
+                reader = reader.schema(schema)
+            df = reader.parquet(path)
             self._df_memo[key] = df
         return df
 
@@ -111,21 +133,15 @@ class PlaidIndex:
     @property
     def tokens(self) -> DataFrame:
         bt = self.meta.bucket_table
-        if bt and self.spark.catalog.tableExists(bt):
+        if self.spark.catalog.tableExists(bt):
             # bucketed catalog table: groupBy(doc_id)/join(doc_id) read the
             # bucket spec and skip the shuffle entirely
             return self.spark.table(bt)
-        if bt:
-            # bucketed FILES from another session (in-memory catalog lost
-            # the table): still valid parquet, just without the bucket
-            # metadata — a persistent metastore keeps it at cluster scale.
-            # Gated on meta.bucket_table: a leftover tokens_bucketed/ dir
-            # from a previous bucketed build must never shadow a plain
-            # rebuild's tokens/ (write_index also deletes it, belt+braces).
-            pb = os.path.join(self.path, "tokens_bucketed")
-            if os.path.isdir(pb):
-                return self._read_memo("tokens_bucketed", pb)
-        return self._read_memo("tokens", os.path.join(self.path, "tokens"))
+        # bucketed FILES from another session (in-memory catalog lost the
+        # table): still valid parquet, just without the bucket metadata —
+        # a persistent metastore keeps it at cluster scale
+        return self._read_memo(
+            "tokens", os.path.join(self.path, "tokens_bucketed"), TOKEN_SCHEMA)
 
     @property
     def centroids_df(self) -> DataFrame:
@@ -136,29 +152,23 @@ class PlaidIndex:
         return self._read_memo("ivf", os.path.join(self.path, "ivf"))
 
     @property
-    def doclens(self) -> DataFrame:
-        p = os.path.join(self.path, "doc_stats")
-        if os.path.exists(p):
-            # Parquet column pruning: the codes arrays are never scanned
-            return self._read_memo("doc_stats", p).select("doc_id", "num_tokens")
-        return self._read_memo("doclens", os.path.join(self.path, "doclens"))
+    def _doc_stats(self) -> DataFrame:
+        return self._read_memo("doc_stats", os.path.join(self.path, "doc_stats"))
 
     @property
-    def doc_codes(self) -> DataFrame | None:
+    def doclens(self) -> DataFrame:
+        # Parquet column pruning: the codes arrays are never scanned
+        return self._doc_stats.select("doc_id", "num_tokens")
+
+    @property
+    def doc_codes(self) -> DataFrame:
         """(doc_id, codes ARRAY<BIGINT>) — each doc's distinct sorted codes,
         the Spark analog of the reference's per-doc contiguous codes.npy
         rows (index.rs:812-818 + doclens offsets). Precomputed at write
         time (one shared groupBy with doclens in ``doc_stats``) so the
         search-side codes-only stage is a read + semi-join, not a
-        per-query-batch corpus aggregation. None for indexes written before
-        this table existed (searcher falls back to aggregating)."""
-        p = os.path.join(self.path, "doc_stats")
-        if os.path.exists(p):
-            return self._read_memo("doc_stats", p).select("doc_id", "codes")
-        p = os.path.join(self.path, "doc_codes")
-        if not os.path.exists(p):
-            return None
-        return self._read_memo("doc_codes", p)
+        per-query-batch corpus aggregation."""
+        return self._doc_stats.select("doc_id", "codes")
 
     def centroids_np(self) -> np.ndarray:
         # collected once per handle (the reference mmaps centroids at index
@@ -187,14 +197,10 @@ def write_index(
     tokens_coded: DataFrame,
     centroids: np.ndarray,
     meta: IndexMeta,
-    token_partitions: int | None = None,
-    bucket_tokens: int | None = None,
+    bucket_tokens: int = 32,
 ) -> PlaidIndex:
     os.makedirs(path, exist_ok=True)
-    import hashlib as _hl
     from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import functions as F
 
     # centroids are a driver-local table with no dependency on the token
     # write — overlap its (dispatch-dominated) job with the corpus-sized
@@ -205,68 +211,40 @@ def write_index(
     # centroids future must still be joined — otherwise its own exception
     # is swallowed and the non-daemon pool thread leaks past the failure
     try:
-        if bucket_tokens:
-            # doc_id-bucketed catalog table: ONE shuffle at write time buys
-            # shuffle-free groupBy(doc_id)/join(doc_id) for every downstream
-            # consumer (doc_stats build below, the rerank kernel's per-doc
-            # packing, reconstruction) — the cluster-scale layout the module
-            # docstring promises. Data lives inside the index directory
-            # (external table); the bucket METADATA lives in the session
-            # catalog, so other sessions fall back to plain parquet reads of
-            # the same files unless a persistent metastore carries it.
-            bt = f"nps_tokens_{_hl.md5(os.path.abspath(path).encode()).hexdigest()[:12]}"
-            spark.sql(f"DROP TABLE IF EXISTS {bt}")
-            (
-                # repartition on the bucket column first: each task then writes
-                # exactly ONE file per bucket — the condition under which
-                # Spark's scan exposes the sortBy order to sort-merge joins
-                # (multiple files per bucket force a corpus re-sort above the
-                # scan), and it avoids the writers-x-buckets small-file blowup
-                tokens_coded.repartition(bucket_tokens, F.col("doc_id"))
-                .write.mode("overwrite")
-                .option("path", os.path.join(path, "tokens_bucketed"))
-                .bucketBy(bucket_tokens, "doc_id")
-                .sortBy("doc_id")
-                .saveAsTable(bt)
-            )
-            meta.bucket_table = bt
-            meta.n_buckets = bucket_tokens
-            tokens_src = spark.table(bt)
-        else:
-            # No repartition before the write: nothing downstream relies on
-            # doc-co-located token FILES (plain parquet carries no partitioning
-            # metadata), so a hash shuffle of the corpus's biggest table here
-            # would be pure cost. ``token_partitions`` remains for explicit
-            # output-file-count control (round-robin, cheaper than hash).
-            out = tokens_coded
-            if token_partitions:
-                out = out.repartition(token_partitions)
-            out.write.mode("overwrite").parquet(os.path.join(path, "tokens"))
-            tokens_src = None
-            # in-place rebuild hygiene: a stale bucketed table/dir from a prior
-            # bucketed build of the same path would otherwise keep serving the
-            # OLD corpus through the tokens property's bucketed fast path
-            stale_bt = f"nps_tokens_{_hl.md5(os.path.abspath(path).encode()).hexdigest()[:12]}"
-            spark.sql(f"DROP TABLE IF EXISTS {stale_bt}")
-            stale_pb = os.path.join(path, "tokens_bucketed")
-            if os.path.isdir(stale_pb):
-                import shutil
-
-                shutil.rmtree(stale_pb, ignore_errors=True)
-            meta.bucket_table = None
-            meta.n_buckets = None
+        # doc_id-bucketed catalog table: ONE shuffle at write time buys
+        # shuffle-free groupBy(doc_id)/join(doc_id) for every downstream
+        # consumer (doc_stats build below, the rerank kernel's per-doc
+        # packing, reconstruction). Data lives inside the index directory
+        # (external table); the bucket METADATA lives in the session
+        # catalog, so other sessions fall back to plain parquet reads of
+        # the same files unless a persistent metastore carries it. An
+        # in-place rebuild drops and overwrites both.
+        bt = bucket_table_name(path)
+        spark.sql(f"DROP TABLE IF EXISTS {bt}")
+        (
+            # repartition on the bucket column first: each task then writes
+            # exactly ONE file per bucket — the condition under which
+            # Spark's scan exposes the sortBy order to sort-merge joins
+            # (multiple files per bucket force a corpus re-sort above the
+            # scan), and it avoids the writers-x-buckets small-file blowup
+            tokens_coded.repartition(bucket_tokens, F.col("doc_id"))
+            .write.mode("overwrite")
+            .option("path", os.path.join(path, "tokens_bucketed"))
+            .bucketBy(bucket_tokens, "doc_id")
+            .sortBy("doc_id")
+            .saveAsTable(bt)
+        )
+        meta.bucket_table = bt
+        meta.n_buckets = bucket_tokens
     finally:
         try:
             cent_fut.result()
         finally:
             cent_pool.shutdown()
 
-    tokens = (tokens_src if tokens_src is not None
-              else spark.read.parquet(os.path.join(path, "tokens")))
     # B9 doclens + the per-doc distinct sorted codes (codes.npy analog) in
-    # ONE groupBy(doc_id) pass — the only full-corpus shuffle after the
-    # encode (and with bucketed tokens, not even that: the bucket spec
-    # satisfies the groupBy's distribution requirement); readers project
+    # ONE groupBy(doc_id) pass — no shuffle: the bucket spec satisfies the
+    # groupBy's distribution requirement; readers project
     # just the column they need (Parquet pruning), so doclens consumers
     # never touch the codes arrays. The pass runs ONCE into a (num_docs-
     # row) cache that feeds BOTH the doc_stats write and the IVF
@@ -274,7 +252,7 @@ def write_index(
     # parquet, serializing the two writes behind a redundant scan; now
     # they overlap from a 2-thread pool (guide §2.6).
     stats_df = (
-        tokens.groupBy("doc_id")
+        spark.table(bt).groupBy("doc_id")
         .agg(
             F.count("*").alias("num_tokens"),
             F.array_sort(F.collect_set("code")).alias("codes"),
@@ -292,8 +270,7 @@ def write_index(
         for fut in futs:
             fut.result()
     stats_df.unpersist()
-    with open(os.path.join(path, "meta.json"), "w") as f:
-        f.write(meta.to_json())
+    tiered.write_marker(os.path.join(path, "meta.json"), meta.to_json())
     return PlaidIndex(spark, path, meta)
 
 

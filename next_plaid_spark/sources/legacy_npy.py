@@ -111,7 +111,7 @@ def legacy_tokens_df(spark: SparkSession, src: str) -> DataFrame:
 
 
 def convert_npy_index(spark: SparkSession, src: str, dest: str, *,
-                      bucket_tokens: int | None = None) -> PlaidIndex:
+                      bucket_tokens: int = 32) -> PlaidIndex:
     """Convert a legacy NPY index directory into a parquet PlaidIndex."""
     with open(os.path.join(src, "metadata.json")) as f:
         m = json.load(f)

@@ -119,6 +119,19 @@ def carry(paths: Iterable[str], dst_dir: str) -> None:
             shutil.copy2(p, dst)
 
 
+def write_marker(path: str, text: str) -> None:
+    """Write a snapshot's commit marker (its ``meta.json``) whole or not
+    at all: the text lands under a hidden temp name in the same
+    directory, then ``os.replace`` renames it into place, so a crash
+    never leaves an empty or partial marker that readers would take for
+    a complete snapshot."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.tmp")
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
 def write_doc_ranged(old_dir: str, new_dir: str, new_rows: DataFrame,
                      mass: int, *, gone: DataFrame | None,
                      gone_ids: list[int] | None,

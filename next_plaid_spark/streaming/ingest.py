@@ -24,10 +24,11 @@ from next_plaid_spark.sources.index_store import PlaidIndex
 
 
 def _versions(root: str, exclude: int | None = None) -> list[int]:
-    """Complete snapshot versions (meta.json is written LAST by
-    write_index, so its presence marks completeness). ``exclude`` drops
-    the in-flight batch's own snapshot — a replayed batch must never
-    base itself on its prior attempt's output."""
+    """Complete snapshot versions. Every snapshot writer writes
+    meta.json LAST and atomically (``tiered.write_marker``: temp name,
+    then ``os.replace``), so its presence marks completeness.
+    ``exclude`` drops the in-flight batch's own snapshot — a replayed
+    batch must never base itself on its prior attempt's output."""
     if not os.path.isdir(root):
         return []
     out = []
@@ -51,7 +52,7 @@ class StreamingIndexWriter:
 
     def __init__(self, spark: SparkSession, root: str, *, dim: int = 16,
                  nbits: int = 4, seed: int = 42,
-                 bucket_tokens: int | None = None,
+                 bucket_tokens: int = 32,
                  retain: int | None = None):
         self.spark = spark
         self.root = root
@@ -88,13 +89,13 @@ class StreamingIndexWriter:
             IndexBuilder(self.spark, nbits=self.nbits, seed=self.seed,
                          bucket_tokens=self.bucket_tokens).build(tokens, out)
         else:
-            # on bucketed snapshots update_index routes the append through
-            # the fused delta internally: per-batch IO is O(batch) — each
-            # bucket's new rows land as an additional tiered file, settled
-            # files hardlink forward, small files fold O(log batches)
-            # times (update.py r14; S8 at cluster scale). Hardlinks also
-            # make retain-pruning safe: rmtree of an old snapshot dir
-            # never frees bytes a newer snapshot still references.
+            # update_index routes the append through the fused delta:
+            # per-batch IO is O(batch) — each bucket's new rows land as
+            # an additional tiered file, settled files hardlink forward,
+            # small files fold O(log batches) times (update.py r14; S8 at
+            # cluster scale). Hardlinks also make retain-pruning safe:
+            # rmtree of an old snapshot dir never frees bytes a newer
+            # snapshot still references.
             update_index(self.spark, current, tokens, out, seed=self.seed)
         if self.retain is not None:
             # prune old complete snapshots only AFTER this batch's write

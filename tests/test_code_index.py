@@ -399,22 +399,22 @@ def test_file_state_change_detection(spark, files_v1, files_v2):
 
 def test_update_rebuild_preserves_bucketed_layout(spark, files_v1, files_v2,
                                                   tmp_path_factory):
-    """bucket_tokens rides the CodeIndex meta: an update()-triggered full
-    rebuild keeps the doc_id-bucketed token layout instead of silently
-    reverting to plain parquet (and search results stay layout-equal)."""
+    """An update()-triggered full rebuild keeps the bucket count the code
+    index was built with, and its search results equal a fresh build's
+    at the default bucket count (results do not depend on it)."""
     base = tmp_path_factory.mktemp("code_index_layout")
     idx_b = CodeIndex.build(files_v1, str(base / "v1"), bucket_tokens=8)
-    assert idx_b.plaid.meta.bucket_table
+    assert idx_b.plaid.meta.n_buckets == 8
     assert idx_b.meta["bucket_tokens"] == 8
 
     upd = idx_b.update(files_v2, str(base / "v2"))
-    assert upd.plaid.meta.bucket_table, "rebuild dropped the bucketed layout"
+    assert upd.plaid.meta.n_buckets == 8, "rebuild changed the bucket count"
     assert upd.meta["bucket_tokens"] == 8
 
-    plain = CodeIndex.build(files_v2, str(base / "v2_plain"))
+    fresh = CodeIndex.build(files_v2, str(base / "v2_fresh"))
     q = "validate required config keys"
     a = sorted(upd.search(q, top_k=5,
                           params=upd.exact_search_params(200)).collect())
-    b = sorted(plain.search(q, top_k=5,
-                            params=plain.exact_search_params(200)).collect())
+    b = sorted(fresh.search(q, top_k=5,
+                            params=fresh.exact_search_params(200)).collect())
     assert a == b

@@ -278,37 +278,18 @@ def test_chunked_pdf_slicing_matches_per_chunk_collect(spark, built_index):
     qtc.unpersist()
 
 
-def test_search_without_doc_codes_artifact(spark, built_index, tmp_path):
-    """Indexes written before the doc_codes table existed fall back to
-    aggregating the tokens table — identical results."""
-    import shutil
+def test_load_rejects_snapshot_without_bucket_fields(built_index, tmp_path):
+    """A meta.json without bucket_table/n_buckets comes from the retired
+    plain token layout: loading it names the cause instead of failing on
+    a missing tokens table later."""
+    import json
 
-    idx, docs, dt = built_index
-    queries = docs.limit(5).select(F.col("doc_id").alias("query_id"), "text")
-    qt = encode_queries(queries).cache()
-    p = SearchParams(top_k=5, n_full_scores=64)
-    want = sorted(
-        (r.query_id, r.doc_id, r.rank)
-        for r in BatchSearcher(idx, p).search(qt).collect()
-    )
-
-    legacy_path = str(tmp_path / "legacy_index")
-    shutil.copytree(idx.path, legacy_path)
-    # legacy layout: separate doclens dir, no doc_stats, no doc_codes
-    spark.read.parquet(f"{legacy_path}/doc_stats").select(
-        "doc_id", "num_tokens"
-    ).write.parquet(f"{legacy_path}/doclens")
-    shutil.rmtree(f"{legacy_path}/doc_stats")
-    from next_plaid_spark.sources.index_store import PlaidIndex
-
-    legacy = PlaidIndex.load(spark, legacy_path)
-    assert legacy.doc_codes is None
-    assert legacy.doclens.count() == idx.meta.num_documents
-    got = sorted(
-        (r.query_id, r.doc_id, r.rank)
-        for r in BatchSearcher(legacy, p).search(qt).collect()
-    )
-    assert got == want
+    idx, _docs, _dt = built_index
+    meta = json.loads(idx.meta.to_json())
+    del meta["bucket_table"], meta["n_buckets"]
+    (tmp_path / "meta.json").write_text(json.dumps(meta))
+    with pytest.raises(ValueError, match="predates .* rebuild"):
+        PlaidIndex.load(idx.spark, str(tmp_path))
 
 
 def test_exact_funnel_config_equals_brute_over_quantized(spark, built_index):

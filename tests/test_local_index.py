@@ -207,3 +207,35 @@ def test_crash_keeps_previous_version(spark, documents, tmp_path,
     reloaded = LocalIndex.load(spark, ix.root)
     assert state(reloaded) == before
     assert state(run(reloaded)) == state(run(fresh("clean")))
+
+
+def test_crash_while_serializing_marker_leaves_no_marker(
+        spark, documents, tmp_path, monkeypatch):
+    """A crash while meta.json's payload is being produced must leave no
+    marker at all — an empty one would count as a complete snapshot that
+    cannot be parsed. The previous version stays the latest, loads, and
+    serves the same rows."""
+    import os
+
+    from next_plaid_spark.sources.index_store import IndexMeta
+
+    docs = documents.filter(F.col("doc_id") < 60)
+    queries = encode_queries(documents.filter(F.col("doc_id") < 3).select(
+        F.col("doc_id").alias("query_id"), "text"))
+    ix = LocalIndex.create_with_kmeans(
+        spark, encode_documents(docs), str(tmp_path / "ix"), nbits=4, seed=42)
+    before = sorted(map(tuple, ix.search_batch(queries).collect()))
+
+    def crash(self):
+        raise RuntimeError("injected crash")
+
+    monkeypatch.setattr(IndexMeta, "to_json", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ix.update(encode_documents(documents.filter(
+            (F.col("doc_id") >= 60) & (F.col("doc_id") < 70))))
+    monkeypatch.undo()
+
+    assert not os.path.exists(os.path.join(ix.root, "v1", "meta.json"))
+    reloaded = LocalIndex.load(spark, ix.root)
+    assert os.path.basename(reloaded.path) == "v0"
+    assert sorted(map(tuple, reloaded.search_batch(queries).collect())) == before

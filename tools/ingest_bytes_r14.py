@@ -1,16 +1,14 @@
 """r14 SCALING probe: per-batch TOKEN bytes written by the streaming
-index writer — tiered-file bucketed appends (r14, update.py) vs the flat
-layout's full-corpus rewrite — on a multi-batch documents stream.
+index writer's tiered-file appends (update.py) on a multi-batch
+documents stream.
 
-Drives two ``StreamingIndexWriter``s over the same doc_id-sliced batches:
-one bucketed (appends flow through ``update_index_delta``'s tiered-file
-path: new rows land as additional bucket files, settled files hardlink
-forward, small files fold Bentley-Saxe-style) and one flat (every append
-snapshot rewrites the whole token table). "New bytes" for a snapshot =
-bytes of token files whose inode did NOT exist in the previous snapshot
-(hardlinked files are free). Metadata (doc_stats/ivf/centroids/meta) is
-reported separately — both layouts rewrite it per batch, it is
-~avg_doclen× smaller than tokens by construction.
+Drives a ``StreamingIndexWriter`` over doc_id-sliced batches: appends
+flow through ``update_index_delta``'s tiered-file path (new rows land as
+additional bucket files, settled files hardlink forward, small files
+fold Bentley-Saxe-style). "New bytes" for a snapshot = bytes of token
+files whose inode did NOT exist in the previous snapshot (hardlinked
+files are free). Metadata (doc_stats/ivf/centroids/meta) is reported
+separately — it is ~avg_doclen× smaller than tokens by construction.
 
 Usage: python tools/ingest_bytes_r14.py [sf_dir]   (default sf0.01)
 Prints one JSON line; paste the summary into SCALING.md.
@@ -34,11 +32,7 @@ N_BATCHES = 10
 
 
 def _tok_dir(root: str, v: int) -> str:
-    for name in ("tokens_bucketed", "tokens"):
-        p = os.path.join(root, f"v{v}", name)
-        if os.path.isdir(p):
-            return p
-    raise FileNotFoundError(f"no token dir under {root}/v{v}")
+    return os.path.join(root, f"v{v}", "tokens_bucketed")
 
 
 def _files(d: str) -> list[tuple[str, int, int, int]]:
@@ -91,6 +85,7 @@ def run(spark, docs, *, bucket_tokens):
             "new_token_bytes": sum(sz for _f, ino, sz, _r in fs
                                    if ino not in prev_inodes),
             "total_token_bytes": sum(sz for _f, _i, sz, _r in fs),
+            "total_token_rows": sum(rw for _f, _i, _s, rw in fs),
             "n_token_files": len(fs),
             "new_meta_bytes": sum(sz for ino, sz in mf
                                   if ino not in prev_meta_inodes),
@@ -106,31 +101,23 @@ def main() -> None:
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).cache()
     docs.count()
 
-    bucketed = run(spark, docs, bucket_tokens=8)
-    flat = run(spark, docs, bucket_tokens=None)
+    per_batch = run(spark, docs, bucket_tokens=8)
 
-    # batch 0 is the initial build in both layouts — the append economy
-    # is batches 1..N-1
-    b_append = sum(r["new_token_rows"] for r in bucketed[1:])
-    f_append = sum(r["new_token_rows"] for r in flat[1:])
+    # batch 0 is the initial build — the append economy is batches 1..N-1;
+    # each appended row is written once plus once per fold that takes it
+    appended = per_batch[-1]["total_token_rows"] - per_batch[0]["total_token_rows"]
+    written = sum(r["new_token_rows"] for r in per_batch[1:])
     print(json.dumps({
         "sf_dir": sf_dir,
         "n_batches": N_BATCHES,
-        "bucketed_append_token_rows": b_append,
-        "flat_append_token_rows": f_append,
-        "bucketed_append_token_bytes":
-            sum(r["new_token_bytes"] for r in bucketed[1:]),
-        "flat_append_token_bytes":
-            sum(r["new_token_bytes"] for r in flat[1:]),
-        "row_write_amplification_ratio_flat_over_bucketed":
-            round(f_append / b_append, 2) if b_append else None,
-        "bucketed_append_meta_bytes":
-            sum(r["new_meta_bytes"] for r in bucketed[1:]),
-        "flat_append_meta_bytes":
-            sum(r["new_meta_bytes"] for r in flat[1:]),
-        "bucketed_final_token_files": bucketed[-1]["n_token_files"],
-        "bucketed_per_batch": bucketed,
-        "flat_per_batch": flat,
+        "append_token_rows": written,
+        "appended_token_rows": appended,
+        "row_write_amplification":
+            round(written / appended, 2) if appended else None,
+        "append_token_bytes": sum(r["new_token_bytes"] for r in per_batch[1:]),
+        "append_meta_bytes": sum(r["new_meta_bytes"] for r in per_batch[1:]),
+        "final_token_files": per_batch[-1]["n_token_files"],
+        "per_batch": per_batch,
     }))
 
 

@@ -1,6 +1,6 @@
 """Job-level profile of CodeIndex.update — maps every stage (labeled or
-not) to its Spark JOB (callsite name + description), so the unlabeled
-"?"-phase stages from profile_code_index_r14.py get attributed.
+not) to its Spark JOB (callsite name + description), so stages without
+a job description get attributed too.
 
 Usage: python tools/profile_update_jobs_r14.py [sf_dir]
 """

@@ -3,16 +3,15 @@
 Synthesizes an sf0.5- and sf1-equivalent corpus by replicating the sf0.1
 documents table with doc_id offsets and a per-replica vocabulary marker
 (keeps content-hash ids and dedup semantics sane), then measures the two
-headline index/search costs at each scale, bucketed vs unbucketed:
+headline index/search costs at each scale:
 
 - plaid index build wall (train-on-sample k-means + fused assign/quantize)
 - batch500 search wall (the QPS analog)
 - executed-plan exchange count of the batch500 search
 
-This answers the two claims that were single-scale extrapolations until
-now (SCALING.md): QPS scaling beyond sf0.1, and the bucketed layout's
-payoff growing with corpus size. Appends a section to SCALING.md and
-prints one JSON line.
+This answers a claim that was a single-scale extrapolation until now
+(SCALING.md): QPS scaling beyond sf0.1. Appends a section to SCALING.md
+and prints one JSON line.
 
 Usage: python tools/scale_beyond.py [replicas ...]   (default: 5 10)
 """
@@ -76,30 +75,27 @@ def main() -> None:
         # recorded — the r9 sortBy A/B showed cold-vs-warm ordering
         # artifacts of 2x swamping the real deltas at these scales
         for _pass in ("warm", "record"):
-            for label, buckets in (("bucketed", 32), ("unbucketed", None)):
-                path = os.path.join(
-                    tempfile.mkdtemp(prefix=f"scale_{tag}_{label}_"), "index")
-                t0 = time.time()
-                idx = IndexBuilder(spark, nbits=4, seed=42,
-                                   bucket_tokens=buckets).build(tokens, path)
-                build_s = round(time.time() - t0, 2)
+            path = os.path.join(
+                tempfile.mkdtemp(prefix=f"scale_{tag}_"), "index")
+            t0 = time.time()
+            idx = IndexBuilder(spark, nbits=4, seed=42).build(tokens, path)
+            build_s = round(time.time() - t0, 2)
 
-                queries = docs.filter(F.col("doc_id") < 500).select(
-                    F.col("doc_id").alias("query_id"), "text")
-                searcher = BatchSearcher(
-                    idx, SearchParams(top_k=10, n_full_scores=256))
-                res = searcher.search(encode_queries(queries))
-                t0 = time.time()
-                try:
-                    res.write.mode("overwrite").format("noop").save()
-                except Exception:
-                    res.count()
-                if _pass == "record":
-                    scale[f"build_{label}_s"] = build_s
-                    scale[f"batch500_{label}_s"] = round(time.time() - t0, 2)
-                    scale[f"batch500_{label}_exchanges"] = exchanges(res)
-        scale["batch500_qps_bucketed"] = round(
-            500 / scale["batch500_bucketed_s"], 1)
+            queries = docs.filter(F.col("doc_id") < 500).select(
+                F.col("doc_id").alias("query_id"), "text")
+            searcher = BatchSearcher(
+                idx, SearchParams(top_k=10, n_full_scores=256))
+            res = searcher.search(encode_queries(queries))
+            t0 = time.time()
+            try:
+                res.write.mode("overwrite").format("noop").save()
+            except Exception:
+                res.count()
+            if _pass == "record":
+                scale["build_s"] = build_s
+                scale["batch500_s"] = round(time.time() - t0, 2)
+                scale["batch500_exchanges"] = exchanges(res)
+        scale["batch500_qps"] = round(500 / scale["batch500_s"], 1)
         out["scales"][tag] = scale
         tokens.unpersist()
 
@@ -112,18 +108,14 @@ def main() -> None:
         "sf0.1 documents replicated with id offsets + a replica vocabulary",
         "marker; same build/search configuration as the bench headline.",
         "",
-        "| scale | docs | build bucketed | build plain | batch500 bucketed"
-        " | batch500 plain | exch bucketed | exch plain | QPS (bucketed) |",
-        "|---|---|---|---|---|---|---|---|---|",
+        "| scale | docs | build | batch500 | exchanges | QPS |",
+        "|---|---|---|---|---|---|",
     ]
     for tag, s in out["scales"].items():
         lines.append(
-            f"| {tag} | {s['docs']:,} | {s['build_bucketed_s']} s "
-            f"| {s['build_unbucketed_s']} s | {s['batch500_bucketed_s']} s "
-            f"| {s['batch500_unbucketed_s']} s "
-            f"| {s['batch500_bucketed_exchanges']} "
-            f"| {s['batch500_unbucketed_exchanges']} "
-            f"| {s['batch500_qps_bucketed']} |")
+            f"| {tag} | {s['docs']:,} | {s['build_s']} s "
+            f"| {s['batch500_s']} s | {s['batch500_exchanges']} "
+            f"| {s['batch500_qps']} |")
     lines.append("")
     with open(os.path.join(REPO, "SCALING.md"), "a") as fh:
         fh.write("\n".join(lines))
