@@ -20,7 +20,8 @@ Method parity map (reference → here):
                                    single-query convenience)
 - num_documents/num_embeddings/num_partitions/avg_doclen/embedding_dim
                                    index.rs:1290-1314
-- get_candidates                   index.rs:1142 (IVF cell → doc ids)
+- get_candidates                   index.rs:1142 (cells → doc ids, a
+                                   filter on the per-doc code lists)
 - get_document_codes               index.rs:1182
 - reconstruct / reconstruct_single / decompress_documents
                                    index.rs:1197,1354,1369
@@ -154,12 +155,11 @@ class LocalIndex:
 
     # -- raw-artifact access -----------------------------------------------
     def get_candidates(self, centroid_indices: Sequence[int]) -> list[int]:
-        """index.rs:1142 — union of the IVF lists for the given cells."""
-        ids = [int(c) for c in centroid_indices]
+        """index.rs:1142 — union of the IVF lists for the given cells
+        (doc_id is unique per doc, so no dedup)."""
         rows = (
-            self.index.ivf.filter(F.col("code").isin(ids))
-            .select(F.explode("doc_ids").alias("doc_id"))
-            .distinct().orderBy("doc_id").collect()
+            self.index.docs_in_cells(centroid_indices)
+            .select("doc_id").orderBy("doc_id").collect()
         )
         return [r.doc_id for r in rows]
 

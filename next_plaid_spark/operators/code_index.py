@@ -272,8 +272,8 @@ class CodeIndex:
         O(N) per query).
 
         Cache discipline: each call first releases the DataFrames the
-        PREVIOUS funnel search cached (query tokens; subset + restricted
-        IVF when filtered), so a long-lived serve-many-queries process
+        PREVIOUS funnel search cached (query tokens, survivors; the subset
+        when filtered), so a long-lived serve-many-queries process
         holds at most one query's caches — consume (collect/write) each
         result before issuing the next search."""
         from next_plaid_spark.encoding import encode_queries
@@ -576,9 +576,9 @@ class CodeIndex:
         old_buckets = [d for d in os.listdir(old_units_dir)
                        if d.startswith("ub=")]
         if not old_buckets:
-            # pre-bucketing flat snapshot: no clean buckets to reuse —
-            # write the full table once, upgrading the layout
-            dirty = set(range(UNITS_BUCKETS))
+            raise ValueError(
+                "code index snapshot predates the file-hash-bucketed units/ "
+                "layout (no ub=* partitions); rebuild it with CodeIndex.build")
         spark.sparkContext.setJobDescription("ci-update: units write")
         out_b = units_out.withColumn("ub", _units_bucket(F.col("file")))
         if dirty:
@@ -619,22 +619,20 @@ class CodeIndex:
         # legs as a driver-local frame. Each leg used to re-derive its own
         # gone set with a separate doclens scan + anti-join + dedup job.
         # An empty list routes both legs onto their pure-append fast
-        # paths; over the cap (degenerate almost-everything-changed
-        # updates) fall back to the distributed frames.
-        _GONE_CAP = 200_000
-        gone_rows = (self.plaid.doclens.select("doc_id")
-                     .unionByName(self.bm25.doclens.select("doc_id"))
-                     .join(unchanged_ids, "doc_id", "left_anti")
-                     .distinct().limit(_GONE_CAP + 1).collect())
-        if len(gone_rows) > _GONE_CAP:
+        # paths; over ``tiered.GONE_CAP`` (degenerate almost-everything-
+        # changed updates) fall back to the distributed frames.
+        gone_ids = tiered.collect_gone(
+            self.plaid.doclens.select("doc_id")
+            .unionByName(self.bm25.doclens.select("doc_id"))
+            .join(unchanged_ids, "doc_id", "left_anti").distinct())
+        if gone_ids is None:
             gone_plaid = self.plaid.doclens.select("doc_id").join(
                 unchanged_ids, "doc_id", "left_anti")
             gone_bm25 = self.bm25.doclens.select("doc_id").join(
                 unchanged_ids, "doc_id", "left_anti")
-        elif gone_rows:
-            gone_local = local_df(
-                spark, [(int(r.doc_id),) for r in gone_rows], "doc_id long")
-            gone_plaid = gone_bm25 = gone_local
+        elif gone_ids:
+            gone_plaid = gone_bm25 = local_df(
+                spark, [(g,) for g in gone_ids], "doc_id long")
         else:
             gone_plaid = gone_bm25 = None
 

@@ -506,16 +506,6 @@ def _file_imports(content: str, lang: str) -> list[str]:
     return list(seen)
 
 
-def _signature(fn: ast.FunctionDef | ast.AsyncFunctionDef) -> str:
-    args = [a.arg for a in fn.args.args]
-    if fn.args.vararg:
-        args.append("*" + fn.args.vararg.arg)
-    args += [a.arg for a in fn.args.kwonlyargs]
-    if fn.args.kwarg:
-        args.append("**" + fn.args.kwarg.arg)
-    return f"def {fn.name}({', '.join(args)})"
-
-
 # -- Rust / JavaScript ast-lite extraction -------------------------------------
 
 _CALL_RE = re.compile(r"\b([A-Za-z_][A-Za-z0-9_]*)\s*\(")

@@ -57,23 +57,6 @@ class CodecArtifacts:
         )
 
 
-def _residuals_sample(doc_tokens_coded: DataFrame, centroids: np.ndarray,
-                      seed: int, vec_col: str) -> np.ndarray:
-    n = doc_tokens_coded.count()
-    frac = min(1.0, max(HELDOUT_FRAC, HELDOUT_CAP / max(n, 1)))
-    sampled = doc_tokens_coded.select(vec_col, "code")
-    if frac < 1.0:
-        sampled = sampled.sample(fraction=min(1.0, frac * 1.1), seed=seed)
-    rows = sampled.limit(HELDOUT_CAP * 2).collect()
-    vecs = np.asarray([r[0] for r in rows], dtype=np.float32)
-    codes = np.asarray([r[1] for r in rows], dtype=np.int64)
-    if len(vecs) > HELDOUT_CAP:
-        rng = np.random.default_rng(seed)
-        keep = rng.choice(len(vecs), size=HELDOUT_CAP, replace=False)
-        vecs, codes = vecs[keep], codes[keep]
-    return vecs - centroids[codes]
-
-
 def _artifacts_from_residuals(res: np.ndarray, nbits: int) -> CodecArtifacts:
     flat = res.ravel()
     n_buckets = 2 ** nbits
@@ -85,13 +68,6 @@ def _artifacts_from_residuals(res: np.ndarray, nbits: int) -> CodecArtifacts:
     norms = np.linalg.norm(res, axis=1)
     threshold = float(np.quantile(norms, 0.75))
     return CodecArtifacts(nbits, cutoffs, weights, avg_residual, threshold)
-
-
-def train_codec(doc_tokens_coded: DataFrame, centroids: np.ndarray,
-                *, nbits: int = 4, seed: int = 42,
-                vec_col: str = "vec") -> CodecArtifacts:
-    res = _residuals_sample(doc_tokens_coded, centroids, seed, vec_col)
-    return _artifacts_from_residuals(res, nbits)
 
 
 def _pack(bucket_idx: np.ndarray, nbits: int) -> bytes:

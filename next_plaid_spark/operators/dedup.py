@@ -178,13 +178,6 @@ N_HASHES = 16
 N_BANDS = 4  # 4 rows per band
 
 
-def minhash_signatures(docs: DataFrame, *, n: int = 3,
-                       n_hashes: int = N_HASHES) -> DataFrame:
-    """(doc_id, h BIGINT[n_hashes]): h_i = min over shingles of
-    hash60(i ‖ ':' ‖ shingle)."""
-    return _minhash_from_shingles(shingles(docs, n=n), n_hashes)
-
-
 def _minhash_from_shingles(sh: DataFrame, n_hashes: int) -> DataFrame:
     # one wide aggregation instead of a 16× posexplode: each hash index is
     # its own min() column, so the signature costs a single shuffle of

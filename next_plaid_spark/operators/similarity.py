@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from next_plaid_spark.functions.vector import cosine, dot, l2_normalize
+from next_plaid_spark.functions.vector import cosine, l2_normalize
 
 
 def mmr_rerank(
@@ -138,23 +138,6 @@ def cosine_topk(
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-
-
-def simhash_signature(vec_col, planes: list[list[float]]):
-    """Sign-bit signature of ``vec`` against fixed hyperplanes → BIGINT.
-
-    Planes are plain Python constants (deterministic, seeded by caller), so
-    the whole expression stays JVM-side.
-    """
-    bits = [
-        F.when(dot(vec_col, F.array([F.lit(float(x)) for x in p])) >= 0, F.lit(1)).otherwise(F.lit(0))
-        * F.lit(2 ** i)
-        for i, p in enumerate(planes)
-    ]
-    out = F.lit(0)
-    for b in bits:
-        out = out + b
-    return out.cast("long")
 
 
 def _planes(dim: int, n_bits: int, seed: int, table: int) -> list[list[float]]:

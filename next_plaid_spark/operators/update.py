@@ -20,7 +20,7 @@ just "rerun the builder". Paths (b)/(c) and every delete are one job,
 bucketed token table and hardlinks the rest forward.
 
 Delete (U5/U6): stable-id mode — survivors keep their ids and only the
-tokens/doc_stats/ivf tables are filtered; the reference's dense-id
+tokens/doc_stats tables are filtered; the reference's dense-id
 re-sequencing (filtering.rs:52-63) exists for NPY positional alignment,
 which Parquet join-by-key makes unnecessary. A dense view is provided for
 parity via ``dense_id_mapping``.
@@ -82,10 +82,10 @@ def expand_centroids(outliers: DataFrame, centroids: np.ndarray,
     (k = max(1, ⌈n/256⌉)·4, update.rs:621-770).
 
     The driver collect is bounded by ``sample_cap`` with a seeded sample
-    (the codec trainer's HELDOUT_CAP pattern, codec.py:60-75): at 100 TB an
-    append of heavily-drifted data can produce millions of outlier tokens,
-    and Lloyd's on a representative 64k-sample yields the same coverage
-    centroids as the full set. k_new still scales with the TRUE outlier
+    (the HELDOUT_CAP pattern of codec.py::train_codec_from_tokens): at
+    100 TB an append of heavily-drifted data can produce millions of
+    outlier tokens, and Lloyd's on a representative 64k-sample yields the
+    same coverage centroids as the full set. k_new still scales with the TRUE outlier
     count so capacity matches drift volume (capped at sample size)."""
     n_outliers = outliers.count()
     if n_outliers == 0:
@@ -204,11 +204,11 @@ def update_index_delta(
     bucket-granular rewrite would be O(corpus)). A delete folds the whole
     bucket owning each gone doc — its rows live in whichever file its
     arrival batch wrote. doc_stats is doc_id-ranged
-    (``tiered.write_doc_ranged``, one tier per hop); IVF re-derives from
-    the merged doc_stats (per-doc code sets, ~avg_doclen× smaller than
-    tokens); meta counts are arithmetic. Centroid expansion follows the
-    reference (update.rs:95-108): at ``buffer_threshold`` or more new docs
-    the outlier tokens train new centroids, appended to the codebook, so
+    (``tiered.write_doc_ranged``, one tier per hop); meta counts are
+    arithmetic. No inverted file is stored, so nothing corpus-sized is
+    re-derived per hop. Centroid expansion follows the reference
+    (update.rs:95-108): at ``buffer_threshold`` or more new docs the
+    outlier tokens train new centroids, appended to the codebook, so
     carried buckets' codes stay valid.
 
     Preconditions: ``gone_docs`` ⊆ indexed docs; ``new_doc_tokens``
@@ -224,7 +224,6 @@ def update_index_delta(
     from next_plaid_spark.sources.index_store import (
         bucket_table_name,
         write_centroids,
-        write_ivf_from_doc_stats,
     )
 
     n = index.meta.n_buckets
@@ -332,7 +331,7 @@ def update_index_delta(
 
     def _tokens_leg() -> None:
         # the corpus-facing leg: bucketed delta write + hardlink carry.
-        # Independent of the doc_stats/IVF/centroids chain below (disjoint
+        # Independent of the doc_stats/centroids chain below (disjoint
         # dirs; both evaluate `quantized` from the CACHED new-token frame),
         # so the two legs run concurrently — guide §2.6; each leg's
         # scheduling gaps back-fill with the other's tasks
@@ -357,12 +356,8 @@ def update_index_delta(
     )
 
     # doc_stats is a doc_id-ranged tiered store: with ordered intake a
-    # delete folds few files. All consumers (doclens, doc_codes, the IVF
-    # derivation's sort_array fold) are row-order-insensitive, so layout
-    # is invisible to values. IVF itself is still rewritten per snapshot
-    # — its postings change with every append and a stale tier could
-    # resurface deleted docs, so the per-snapshot derive from doc_stats
-    # stays the correctness anchor.
+    # delete folds few files. All consumers (doclens, doc_codes) are
+    # row-order-insensitive, so layout is invisible to values.
     gone_rows = tiered.collect_gone(gone) if gone_nd else []
 
     def _stats_leg() -> None:
@@ -370,10 +365,8 @@ def update_index_delta(
             os.path.join(index.path, "doc_stats"),
             os.path.join(out_path, "doc_stats"), new_stats, n_new_docs,
             gone=gone, gone_ids=gone_rows)
-        # IVF derives from the doc_stats just written; centroids are a
-        # driver-local table — both stay chained behind the stats write
-        # inside this leg
-        write_ivf_from_doc_stats(spark, out_path, centroids.shape[0])
+        # centroids are a driver-local table, chained behind the stats
+        # write inside this leg
         write_centroids(spark, out_path, centroids)
 
     from concurrent.futures import ThreadPoolExecutor

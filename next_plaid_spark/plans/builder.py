@@ -10,12 +10,13 @@ seam *is* driver-coordinated map-reduce, and this builder follows it:
   2. sample → Lloyd's k-means       (driver, seeded)          — B1/B3
   3. codec training quantiles       (driver, bounded sample)  — B5
   4. assign + quantize              (mapInPandas, one pass)   — B4/B6/B10
-  5. IVF + doclens + write          (shuffle by key, Parquet) — B8/B9/S1
+  5. tokens + doc_stats write       (bucketed, Parquet)       — B9/S1
 
 Scale notes: steps 2-3 touch bounded samples regardless of corpus size; step
 4 is embarrassingly parallel (one GEMM per Arrow batch, centroids shipped
-once per executor); step 5's shuffles are on (doc_id) and (code) — the only
-all-data shuffles in the build, both unavoidable and both AQE-coalesced.
+once per executor); step 5's one all-data shuffle is the bucketed token
+write's (doc_id), which the doc_stats groupBy then reuses. No inverted
+file is written (B8): candidacy filters ``doc_stats.codes``.
 Broadcast assignment holds to K≈1M (512 MB at dim=128 f32); past that,
 assignment becomes an LSH-bucketed join against a centroids table — hook
 left in assign_codes.

@@ -6,7 +6,8 @@ Reference lifecycle (next-plaid/src/search.rs:327-516, SURVEY.md §2.4):
   Q2  IVF probe: top n_ivf_probe cells per token (default 8)
   Q3  prune cells with max score < t_cs (default 0.4)
   Q4  subset-aware probe scaling (filtered search)
-  Q5  candidate docs = ∪ probed cells' IVF lists (∩ subset)
+  Q5  candidate docs = ∪ probed cells' IVF lists (∩ subset): the docs
+      whose code list overlaps the surviving cells
   Q6  approximate MaxSim on codes only (no residual reads)
   Q7  keep top n_full_scores (default 4096) by approx score
   Q8  decompress budget: top max(n_full/4, k)
@@ -44,7 +45,6 @@ from pyspark.sql.window import Window
 from next_plaid_spark.operators.codec import decompress
 from next_plaid_spark.operators.maxsim import maxsim_scores_relational, topk
 from next_plaid_spark.sources.index_store import PlaidIndex
-from next_plaid_spark.session import local_df
 
 
 def _seq_centroid_scores(q64: np.ndarray, c64: np.ndarray,
@@ -163,11 +163,11 @@ class BatchSearcher:
         # centroid-score fold runs in double from source values
         self._centroids64 = np.ascontiguousarray(self._centroids,
                                                  dtype=np.float64)
-        # DataFrames cached by search() calls (query tokens, subset, pruned
-        # ivf). They must stay cached while the returned lazy plan is being
-        # consumed, so search() can't unpersist them itself; long-lived
-        # sessions issuing many filtered searches should call release()
-        # between batches to drop them.
+        # DataFrames cached by search() calls (query tokens, subset,
+        # survivors). They must stay cached while the returned lazy plan is
+        # being consumed, so search() can't unpersist them itself;
+        # long-lived sessions issuing many filtered searches should call
+        # release() between batches to drop them.
         self._live_caches: list[DataFrame] = []
 
     def release(self) -> None:
@@ -184,7 +184,8 @@ class BatchSearcher:
 
     # -- funnel stages -----------------------------------------------------
     def _approx_broadcast(self, qt_pdf, n_probe: int, p: "SearchParams",
-                          ivf: DataFrame, prune_to: int | None = None,
+                          subset: DataFrame | None,
+                          prune_to: int | None = None,
                           eligible_mask: np.ndarray | None = None,
                           spread: bool = True) -> DataFrame:
         """Q1–Q6 with the query side broadcast.
@@ -198,7 +199,9 @@ class BatchSearcher:
         iff one of its tokens has that code, index.rs:479-508), so Q5 runs as
         a segment-max over a boolean cell mask inside a doc-parallel kernel
         that scans each candidate doc's code list exactly once per batch; no
-        (query × doc) pair list is ever exploded or shuffled.
+        (query × doc) pair list is ever exploded or shuffled. The kernel's
+        input is ``doc_codes`` filtered to docs holding a surviving cell of
+        any query (⋉ ``subset`` when given).
 
         Bit-determinism (what makes the approximate funnel hash-checkable
         against a DuckDB oracle — see queries.py::sql_plaid_search_topk):
@@ -213,7 +216,7 @@ class BatchSearcher:
         """
         import pandas as pd
 
-        spark = ivf.sparkSession
+        spark = self.index.spark
         c64 = self._centroids64
         k_total = c64.shape[0]
         schema = "query_id long, doc_id long, approx_score double"
@@ -354,20 +357,14 @@ class BatchSearcher:
                     )
                     start = end
 
-        # Q5's corpus pruning: only docs in some surviving cell can be
-        # candidates for anyone — a broadcast semi-join on the (small)
-        # union of surviving cell ids; no query_id explode
-        cand_cell_codes = sorted(int(x) for x in np.nonzero(cell_mask.any(axis=0))[0])
-        codes_df = local_df(
-            spark, [(x,) for x in cand_cell_codes], "code long")
-        cand_docs = (
-            F.broadcast(codes_df).join(ivf, "code")
-            .select(F.explode("doc_ids").alias("doc_id"))
-            .distinct()
-        )
-        # per-doc code lists are an index artifact (the codes.npy analog):
-        # read + semi-join, no per-batch corpus aggregation
-        doc_lists = self.index.doc_codes.join(cand_docs, "doc_id", "left_semi")
+        # Q5's corpus pruning: only docs holding some surviving cell can be
+        # candidates for anyone — one narrow filter of the per-doc code
+        # lists (the codes.npy analog) against the union of surviving
+        # cells, then the subset when filtered; no shuffle
+        doc_lists = self.index.docs_in_cells(
+            np.nonzero(cell_mask.any(axis=0))[0])
+        if subset is not None:
+            doc_lists = doc_lists.join(subset, "doc_id", "left_semi")
         if spread:
             doc_lists = self._spread_small(doc_lists)
         return doc_lists.mapInPandas(kern, schema=schema)
@@ -569,7 +566,7 @@ class BatchSearcher:
         return df.repartition(sc.defaultParallelism)
 
     def _chunk_funnel(self, qt_pdf, *, n_probe: int, p: "SearchParams",
-                      ivf: DataFrame, subset: DataFrame | None,
+                      subset: DataFrame | None,
                       eligible_mask: np.ndarray | None, probe_all: bool,
                       spread: bool = True) -> DataFrame:
         """Q1–Q10 for one chunk of whole queries: approx kernel → Q7/Q8
@@ -578,7 +575,7 @@ class BatchSearcher:
         kernels read it driver-side, so the query side never re-plans."""
         idx = self.index
         if not len(qt_pdf):
-            return ivf.sparkSession.createDataFrame([], schema=_RESULT_SCHEMA)
+            return idx.spark.createDataFrame([], schema=_RESULT_SCHEMA)
         cut = min(p.n_full_scores, max(p.n_full_scores // 4, p.top_k))
         if probe_all and cut >= idx.meta.num_documents:
             # Exact configuration shortcut (probe_all + survivor cut ≥
@@ -598,7 +595,7 @@ class BatchSearcher:
         # scoring in the doc-parallel kernel; chunk-local pre-prune to the
         # Q7/Q8 cut
         approx = self._approx_broadcast(
-            qt_pdf, n_probe, p, ivf, prune_to=cut,
+            qt_pdf, n_probe, p, subset, prune_to=cut,
             eligible_mask=eligible_mask, spread=spread,
         )
         # Q7 + Q8: approx top n_full_scores, then decompress budget n/4.
@@ -672,8 +669,8 @@ class BatchSearcher:
         # exact configuration (every cell probed, t_cs off): Q4 probe
         # scaling and eligible-cell probe restriction cannot change which
         # cells are probed, so their two eager driver jobs (subset count +
-        # eligible-code collect) are pure overhead — the subset-restricted
-        # IVF below already enforces the filter on Q5 candidates alone
+        # eligible-code collect) are pure overhead — Q5's subset semi-join
+        # already enforces the filter on the candidates alone
         probe_all = (p.n_ivf_probe >= idx.meta.k
                      and p.centroid_score_threshold == float("-inf"))
         if subset is not None:
@@ -690,37 +687,18 @@ class BatchSearcher:
                     )
                     n_probe = min(p.n_ivf_probe * scale, idx.meta.k)
 
-        # subset-pruned IVF feeds Q5
-        ivf = idx.ivf
         eligible_mask = None
-        if subset is not None:
-            # eligible-centroid pruning under filter (search.rs:350-364):
-            # only cells containing subset docs can contribute
-            restricted = ivf.select(
-                "code", F.explode("doc_ids").alias("doc_id")
-            ).join(subset, "doc_id", "left_semi")
-            if probe_all:
-                # every consumer re-explodes doc_ids right away, so the
-                # per-cell list regroup is a wasted corpus-sized shuffle
-                # here — singleton arrays keep the schema, shuffle-free
-                ivf = restricted.select(
-                    "code", F.array("doc_id").alias("doc_ids"))
-            else:
-                # the approximate path probes few cells: per-cell lists keep
-                # the cells→candidates join |cells|-sized, and the eligible
-                # collect below needs one row per cell
-                ivf = restricted.groupBy("code").agg(
-                    F.collect_list("doc_id").alias("doc_ids"))
-            ivf = ivf.cache()
-            self._live_caches.append(ivf)
         if subset is not None and not probe_all:
-            # the probe pool itself is restricted to those eligible cells
-            # (search.rs:350-364): rank probe slots among them only, and cap
-            # the scaled n_probe at the eligible-cell count. The collect is
-            # bounded by K — the same order as the centroid matrix already
-            # held driver-side.
+            # eligible-centroid pruning under filter (search.rs:350-364):
+            # only cells holding subset docs can contribute, so the probe
+            # pool is restricted to them — rank probe slots among them
+            # only, and cap the scaled n_probe at the eligible-cell count.
+            # The collect is bounded by K — the same order as the centroid
+            # matrix already held driver-side.
             eligible = np.fromiter(
-                (r.code for r in ivf.select("code").collect()), dtype=np.int64
+                (r.code for r in idx.doc_codes.join(subset, "doc_id", "left_semi")
+                 .select(F.explode("codes").alias("code")).distinct().collect()),
+                dtype=np.int64,
             )
             if len(eligible) == 0:
                 # filter excludes every indexed doc → empty result
@@ -731,7 +709,7 @@ class BatchSearcher:
             n_probe = min(n_probe, len(eligible))
 
         funnel = functools.partial(
-            self._chunk_funnel, n_probe=n_probe, p=p, ivf=ivf, subset=subset,
+            self._chunk_funnel, n_probe=n_probe, p=p, subset=subset,
             eligible_mask=eligible_mask, probe_all=probe_all,
         )
         # One funnel while the batch's score matrix fits. Decide WITHOUT a

@@ -775,7 +775,7 @@ def q_delta_update_doclens(spark: SparkSession, sf_dir: str) -> DataFrame:
     on a doc_id-BUCKETED index, rewriting only the buckets that own a
     deleted/appended doc and hardlinking the clean ones. Value contract
     identical to delete_from_index + update_index (pytest pins the full
-    tokens/doc_stats/ivf equivalence; this gate hash-checks the surviving
+    tokens/doc_stats equivalence; this gate hash-checks the surviving
     doclens against the raw corpus)."""
     import tempfile
 
@@ -2559,20 +2559,20 @@ def _write_lsh_oracle_sidecar(spark: SparkSession, *, dim: int) -> None:
     _SIDECAR_STATE["lsh"] = key
 
 
-def _write_ivf_oracle_sidecar(spark: SparkSession, cmat) -> None:
+def _write_ann_ivf_oracle_sidecar(spark: SparkSession, cmat) -> None:
     import hashlib
 
     import numpy as np
 
     c = np.asarray(cmat, dtype=np.float64)  # f32 → f64 exact
-    key = ("ivf", hashlib.sha1(c.tobytes()).hexdigest()[:12])
-    if _SIDECAR_STATE.get("ivf") == key:
+    key = ("ann_ivf", hashlib.sha1(c.tobytes()).hexdigest()[:12])
+    if _SIDECAR_STATE.get("ann_ivf") == key:
         return
     local_df(
         spark, [(int(i), [float(x) for x in row]) for i, row in enumerate(c)],
         "cell int, cvec array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(IVF_ORACLE_SIDECAR)
-    _SIDECAR_STATE["ivf"] = key
+    _SIDECAR_STATE["ann_ivf"] = key
 
 
 _SQL_SEQ_NORM = ("sqrt(list_reduce(list_prepend(0.0, list_transform({arr}, "
@@ -2706,7 +2706,7 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     cmat = train_ivf_cells(emb, ANN_IVF_CELLS, seed=ANN_SEED)
-    _write_ivf_oracle_sidecar(spark, cmat)
+    _write_ann_ivf_oracle_sidecar(spark, cmat)
     return ivf_topk(
         emb, queries, k=COSINE_TOPK, n_cells=ANN_IVF_CELLS,
         n_probe=ANN_IVF_PROBE, seed=ANN_SEED, centroids=cmat,

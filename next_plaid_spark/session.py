@@ -92,12 +92,3 @@ def local_df(spark: SparkSession, rows, schema):
 
     return spark.createDataFrame(pd.DataFrame(rows), schema)
 
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Load the driver's parquet tables from ``sf_dir`` as a dict of DataFrames."""
-    if names is None:
-        names = (
-            "region", "nation", "customer", "supplier", "part",
-            "orders", "lineitem", "events", "documents", "embeddings",
-        )
-    return {n: spark.read.parquet(os.path.join(sf_dir, f"{n}.parquet")) for n in names}

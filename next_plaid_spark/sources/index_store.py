@@ -7,17 +7,19 @@ format:
     <path>/tokens_bucketed/  doc_id, token_idx, code, residual  (the
                              corpus; a ``bucketBy(n, doc_id)`` table)
     <path>/centroids/        code, vec                           (small)
-    <path>/ivf/              code, doc_ids                       (inverted file)
     <path>/doc_stats/        doc_id, num_tokens, codes  (doclens + codes.npy
-                             analogs from one shuffle; readers column-prune)
+                             analogs from one groupBy; readers column-prune)
     <path>/meta.json         k, dim, nbits, codec artifacts, counts, the
                              bucket table name + bucket count (written
                              last: the snapshot's commit marker)
 
 The token files are registered as a session catalog table, so per-doc
 groupBys/joins read the bucket spec instead of shuffling the corpus; a
-session without the table reads the same files as plain parquet. ``ivf``
-is repartitioned by ``code`` (the probe joins on code).
+session without the table reads the same files as plain parquet.
+
+No inverted file is stored: a doc is in cell c's IVF list exactly when c
+is in its ``codes``, so search candidacy is a filter on ``doc_stats``
+(``arrays_overlap``) and the NPY exporter derives ``ivf.npy`` from it.
 
 Differences from the reference by design: no 50k-doc chunking (Spark
 partitioning replaces it), no embedding_offset bookkeeping (joins on doc_id
@@ -148,10 +150,6 @@ class PlaidIndex:
         return self._read_memo("centroids", os.path.join(self.path, "centroids"))
 
     @property
-    def ivf(self) -> DataFrame:
-        return self._read_memo("ivf", os.path.join(self.path, "ivf"))
-
-    @property
     def _doc_stats(self) -> DataFrame:
         return self._read_memo("doc_stats", os.path.join(self.path, "doc_stats"))
 
@@ -166,9 +164,18 @@ class PlaidIndex:
         the Spark analog of the reference's per-doc contiguous codes.npy
         rows (index.rs:812-818 + doclens offsets). Precomputed at write
         time (one shared groupBy with doclens in ``doc_stats``) so the
-        search-side codes-only stage is a read + semi-join, not a
+        search-side codes-only stage is a read + filter, not a
         per-query-batch corpus aggregation."""
         return self._doc_stats.select("doc_id", "codes")
+
+    def docs_in_cells(self, cells) -> DataFrame:
+        """``doc_codes`` of the docs holding any of ``cells``: the union of
+        those cells' IVF lists (a doc is in cell c's list exactly when c is
+        in its codes) as one narrow filter. The cells ride as one SQL
+        literal; a Column literal per cell would cost a py4j call each."""
+        arr = ",".join(str(int(c)) for c in cells)
+        return self.doc_codes.filter(F.expr(
+            f"arrays_overlap(codes, CAST(array({arr}) AS ARRAY<BIGINT>))"))
 
     def centroids_np(self) -> np.ndarray:
         # collected once per handle (the reference mmaps centroids at index
@@ -244,32 +251,17 @@ def write_index(
 
     # B9 doclens + the per-doc distinct sorted codes (codes.npy analog) in
     # ONE groupBy(doc_id) pass — no shuffle: the bucket spec satisfies the
-    # groupBy's distribution requirement; readers project
-    # just the column they need (Parquet pruning), so doclens consumers
-    # never touch the codes arrays. The pass runs ONCE into a (num_docs-
-    # row) cache that feeds BOTH the doc_stats write and the IVF
-    # derivation — the IVF used to re-read the just-written doc_stats
-    # parquet, serializing the two writes behind a redundant scan; now
-    # they overlap from a 2-thread pool (guide §2.6).
-    stats_df = (
+    # groupBy's distribution requirement; readers project just the column
+    # they need (Parquet pruning), so doclens consumers never touch the
+    # codes arrays
+    (
         spark.table(bt).groupBy("doc_id")
         .agg(
             F.count("*").alias("num_tokens"),
             F.array_sort(F.collect_set("code")).alias("codes"),
         )
-        .cache()
+        .write.mode("overwrite").parquet(os.path.join(path, "doc_stats"))
     )
-    stats_df.count()  # fill before the fork so the legs never race it
-    with ThreadPoolExecutor(2) as ex:
-        futs = [
-            ex.submit(
-                lambda: stats_df.write.mode("overwrite")
-                .parquet(os.path.join(path, "doc_stats"))),
-            ex.submit(write_ivf_from_stats_df, stats_df, path, meta.k),
-        ]
-        for fut in futs:
-            fut.result()
-    stats_df.unpersist()
     tiered.write_marker(os.path.join(path, "meta.json"), meta.to_json())
     return PlaidIndex(spark, path, meta)
 
@@ -282,24 +274,3 @@ def write_centroids(spark: SparkSession, path: str, centroids: np.ndarray) -> No
     )
     cdf.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
 
-
-def write_ivf_from_doc_stats(spark: SparkSession, path: str, k: int) -> None:
-    """B8 IVF: sorted, deduped doc list per centroid (index.rs:479-508),
-    derived from ``path``/doc_stats — input is each doc's distinct codes
-    (≤ doclen rows after explode), not the full token table, and
-    (code, doc_id) pairs arrive pre-deduped so collect_list suffices."""
-    write_ivf_from_stats_df(
-        spark.read.parquet(os.path.join(path, "doc_stats")), path, k)
-
-
-def write_ivf_from_stats_df(doc_stats: DataFrame, path: str, k: int) -> None:
-    """IVF derivation from an in-memory doc_stats frame (the builder's
-    cached aggregation) — same values as the path-reading form."""
-    (
-        doc_stats.select("doc_id", F.explode("codes").alias("code"))
-        .groupBy("code")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
-        .repartition(1 if k < 65536 else 32, "code")
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "ivf"))
-    )

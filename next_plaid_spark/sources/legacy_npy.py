@@ -21,9 +21,9 @@ DataFrame — so a 1000-chunk corpus converts with 1000-way parallelism and
 nothing corpus-sized ever crosses the driver. The packed residual BYTES
 carry over untouched (the repo's quantizer writes the reference's exact
 big-endian nbits packing — codec.rs:356-411 parity, test_pack_unpack)
-and the IVF/doc_stats tables are re-derived by ``write_index`` under
-identical semantics (sorted deduped doc ids per code, index.rs:479-508),
-which also subsumes S3: the legacy multi-chunk layout merges into one
+and the doc_stats table is re-derived by ``write_index``; ivf.npy is not
+read (the IVF is derived data: each doc's sorted distinct codes carry it,
+index.rs:479-508), which also subsumes S3: the legacy multi-chunk layout merges into one
 multi-file parquet table in the same pass.
 
 fastplaid variants need no pre-pass: np.load handles the f16 floats
@@ -145,8 +145,9 @@ def export_npy_index(spark: SparkSession, index: PlaidIndex, dest: str, *,
     Docs are renumbered to dense 0..N−1 positions in doc_id order (the
     reference addresses documents positionally) via the same two-phase
     prefix sum as sequence packing — no corpus-wide single-partition
-    window, and no driver-side doc_id→rank dict: the IVF is translated to
-    rank space by a distributed join. The mapping is also persisted as
+    window, and no driver-side doc_id→rank dict: the IVF is derived from
+    the per-doc code lists and translated to rank space by a distributed
+    join. The mapping is also persisted as
     ``doc_id_map/`` parquet inside ``dest`` so callers holding external
     doc ids can translate results. With ``include_id_gaps``, doc ids
     absent from the index in 0..max(doc_id) export as ZERO-length doclens
@@ -282,11 +283,12 @@ def export_npy_index(spark: SparkSession, index: PlaidIndex, dest: str, *,
             }, f)
         off += chunk_stats.get(ci, 0)
 
-    # IVF translated to dense-rank space DISTRIBUTIVELY (explode → join →
-    # per-code sorted lists), then concatenated in code order with lengths
-    # where the single ivf.npy output file is written
+    # IVF derived from the per-doc distinct codes and translated to
+    # dense-rank space DISTRIBUTIVELY (explode → join → per-code sorted
+    # lists), then concatenated in code order with lengths where the
+    # single ivf.npy output file is written
     ivf_ranked = (
-        index.ivf.select("code", F.explode("doc_ids").alias("doc_id"))
+        index.doc_codes.select("doc_id", F.explode("codes").alias("code"))
         .join(ranks.select("doc_id", "rank"), "doc_id")
         .groupBy("code")
         .agg(F.sort_array(F.collect_list("rank")).alias("ranks"))

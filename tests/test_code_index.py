@@ -418,3 +418,51 @@ def test_update_rebuild_preserves_bucketed_layout(spark, files_v1, files_v2,
     b = sorted(fresh.search(q, top_k=5,
                             params=fresh.exact_search_params(200)).collect())
     assert a == b
+
+
+def test_no_writer_stores_an_inverted_file(spark, idx, files_v2,
+                                           tmp_path_factory):
+    """Candidacy filters doc_stats.codes, so no snapshot writer stores an
+    ``ivf/`` table: not the build, an append, a delete, nor a code-index
+    update."""
+    import os
+
+    from next_plaid_spark.encoding import clustered_token_corpus
+    from next_plaid_spark.operators.update import (
+        delete_from_index,
+        update_index_delta,
+    )
+    from next_plaid_spark.plans.builder import IndexBuilder
+
+    base = tmp_path_factory.mktemp("no_ivf")
+    toks, _ = clustered_token_corpus(
+        spark, n_docs=60, tokens_per_doc=3, dim=8, n_clusters=8, seed=5)
+    built = IndexBuilder(spark, k=8, bucket_tokens=4).build(
+        toks.filter(F.col("doc_id") < 50), str(base / "built"))
+    appended = update_index_delta(
+        spark, built, None, toks.filter(F.col("doc_id") >= 50),
+        str(base / "appended"))
+    deleted = delete_from_index(spark, appended, [0, 1], str(base / "deleted"))
+    code = idx.update(files_v2, str(base / "code"), rebuild_threshold=0)
+
+    for snap in (built.path, appended.path, deleted.path, code.path):
+        dirs = [d for _, ds, _ in os.walk(snap) for d in ds]
+        assert "ivf" not in dirs, snap
+        assert "doc_stats" in dirs, snap
+
+
+def test_update_rejects_flat_units_snapshot(spark, idx, files_v2,
+                                            tmp_path_factory):
+    """A snapshot whose units/ predates the file-hash-bucketed layout has
+    one format no writer produces: an incremental update asks for a
+    rebuild instead of upgrading it."""
+    import shutil
+
+    base = tmp_path_factory.mktemp("flat_units")
+    old = str(base / "old")
+    shutil.copytree(idx.path, old)
+    shutil.rmtree(f"{old}/units")
+    idx.units.write.parquet(f"{old}/units")
+    flat = CodeIndex.load(spark, old)
+    with pytest.raises(ValueError, match="rebuild"):
+        flat.update(files_v2, str(base / "new"), rebuild_threshold=0)

@@ -64,12 +64,13 @@ def test_index_artifacts(spark, built_index):
     # centroids normalized
     c = idx.centroids_np()
     assert np.allclose(np.linalg.norm(c, axis=1), 1.0, atol=1e-5)
-    # ivf covers every code present in tokens; doc lists sorted & deduped
-    ivf = {r.code: r.doc_ids for r in idx.ivf.collect()}
-    for code, ids in ivf.items():
-        assert ids == sorted(set(ids))
-    token_codes = {r.code for r in idx.tokens.select("code").distinct().collect()}
-    assert token_codes == set(ivf)
+    # each doc's codes (the IVF's only source): sorted, distinct and equal
+    # to the codes of its tokens
+    token_codes = {}
+    for r in idx.tokens.select("doc_id", "code").collect():
+        token_codes.setdefault(r.doc_id, set()).add(r.code)
+    doc_codes = {r.doc_id: list(r.codes) for r in idx.doc_codes.collect()}
+    assert doc_codes == {d: sorted(cs) for d, cs in token_codes.items()}
     # doclens sum = num embeddings
     total = idx.doclens.agg(F.sum("num_tokens")).collect()[0][0]
     assert total == idx.meta.num_embeddings

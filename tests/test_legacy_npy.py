@@ -92,12 +92,13 @@ def test_convert_matches_layout_and_native_search(spark, tmp_path, legacy_dir):
     )
     assert got == sorted(expected)
 
-    # derived IVF: sorted deduped docs per code (index.rs:479-508)
-    want_ivf = {}
+    # derived per-doc codes, the IVF's source: sorted distinct codes per
+    # doc (index.rs:479-508)
+    want_codes = {}
     for d, _, c, _ in expected:
-        want_ivf.setdefault(c, set()).add(d)
-    got_ivf = {r.code: list(r.doc_ids) for r in idx.ivf.collect()}
-    assert got_ivf == {c: sorted(ds) for c, ds in want_ivf.items()}
+        want_codes.setdefault(d, set()).add(c)
+    got_codes = {r.doc_id: list(r.codes) for r in idx.doc_codes.collect()}
+    assert got_codes == {d: sorted(cs) for d, cs in want_codes.items()}
 
     # identical search results vs a natively-written index over the same
     # coded tokens (exact funnel config; converted codec drives decompress)

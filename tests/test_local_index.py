@@ -198,8 +198,9 @@ def test_crash_keeps_previous_version(spark, documents, tmp_path,
         def crash(*a, **kw):
             raise RuntimeError("injected crash")
 
-        # mid-snapshot: tokens and doc_stats written, IVF not yet
-        monkeypatch.setattr(index_store, "write_ivf_from_stats_df", crash)
+        # mid-snapshot: tokens and doc_stats written, centroids and
+        # the meta.json marker not yet
+        monkeypatch.setattr(index_store, "write_centroids", crash)
     with pytest.raises(RuntimeError, match="injected crash"):
         run(ix)
     monkeypatch.undo()

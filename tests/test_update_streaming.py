@@ -70,11 +70,9 @@ def test_delete(spark, base):
     assert idx3.meta.num_documents == idx.meta.num_documents - 3
     remaining = {r.doc_id for r in idx3.doclens.collect()}
     assert not (remaining & set(victims))
-    # IVF no longer references the victims
-    ivf_docs = {
-        d for r in idx3.ivf.collect() for d in r.doc_ids
-    }
-    assert not (ivf_docs & set(victims))
+    # candidacy (doc_codes) no longer references the victims
+    coded = {r.doc_id for r in idx3.doc_codes.collect()}
+    assert not (coded & set(victims))
 
 
 def test_dense_id_mapping(spark, base):

@@ -7,7 +7,7 @@ flow through ``update_index_delta``'s tiered-file path (new rows land as
 additional bucket files, settled files hardlink forward, small files
 fold Bentley-Saxe-style). "New bytes" for a snapshot = bytes of token
 files whose inode did NOT exist in the previous snapshot (hardlinked
-files are free). Metadata (doc_stats/ivf/centroids/meta) is reported
+files are free). Metadata (doc_stats/centroids/meta) is reported
 separately — it is ~avg_doclen× smaller than tokens by construction.
 
 Usage: python tools/ingest_bytes_r14.py [sf_dir]   (default sf0.01)
@@ -54,7 +54,7 @@ def _meta_files(root: str, v: int) -> list[tuple[int, int]]:
     exactly as to the token files."""
     out = []
     vd = os.path.join(root, f"v{v}")
-    for name in ("doc_stats", "ivf", "centroids"):
+    for name in ("doc_stats", "centroids"):
         p = os.path.join(vd, name)
         if os.path.isdir(p):
             for dirpath, _dirs, files in os.walk(p):

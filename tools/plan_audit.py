@@ -85,15 +85,17 @@ def _scan_table(s: str) -> str:
         else parts[-1]
 
 
-def tokens_scan_shuffles(plan: str) -> tuple[int, int]:
-    """(tokens scans, of which shuffled): a tokens scan is shuffled when
+def tokens_scan_shuffles(plan: str,
+                         table: str = "tokens_bucketed") -> tuple[int, int]:
+    """(scans of ``table``, of which shuffled): a scan is shuffled when
     its nearest Exchange ancestor is a hashpartitioning(doc_id…) one —
-    the corpus-sized per-doc shuffle that bucketing removes."""
+    for the tokens, the corpus-sized per-doc shuffle that bucketing
+    removes; for doc_stats, the one a per-doc candidacy join forces."""
     lines = plan.splitlines()
     depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
     n_scans = shuffled = 0
     for i, ln in enumerate(lines):
-        if "FileScan" not in ln or _scan_table(ln) != "tokens_bucketed":
+        if "FileScan" not in ln or _scan_table(ln) != table:
             continue
         n_scans += 1
         d = depth[i]
@@ -399,7 +401,13 @@ def main() -> int:
     # sit directly above the tokens scan. The remaining doc_id exchanges
     # operate on survivor-bounded sets (≤ n_full_scores · queries rows),
     # which is the 100 TB claim — no corpus-sized shuffle in the search
-    # path.
+    # path. The same holds for the doc_stats scan feeding Q5: candidacy is
+    # a filter on its per-doc code lists, so no doc_id Exchange may sit
+    # above it either (a per-doc candidacy join would put one there). The
+    # plan is taken with size-based broadcasting off: the audit's index is
+    # small enough for Spark to broadcast a join side that a corpus-scale
+    # index must shuffle; the funnel's explicit broadcasts (bounded by
+    # construction) are hints and stay.
     try:
         from next_plaid_spark.encoding import encode_queries
         from next_plaid_spark.plans.searcher import (
@@ -411,8 +419,13 @@ def main() -> int:
             q._t(spark, sf_dir, "documents").filter(SF.col("doc_id") < 50)
             .select(SF.col("doc_id").alias("query_id"), "text")
         )
-        p = plan_of(_BS15(q._plaid_index(spark, sf_dir),
-                          _SP15(top_k=10, n_full_scores=256)).search(bqt))
+        _thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            p = plan_of(_BS15(q._plaid_index(spark, sf_dir),
+                              _SP15(top_k=10, n_full_scores=256)).search(bqt))
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", _thr)
         n_scans, shuffled = tokens_scan_shuffles(p)
         if not n_scans:
             failures.append("A15 bucketed tokens: no tokens scan in the "
@@ -421,11 +434,23 @@ def main() -> int:
             failures.append(
                 f"A15 bucketed tokens: {shuffled} of {n_scans} tokens scans "
                 "sit directly below an Exchange hashpartitioning(doc_id)")
+        n_stats, stats_shuffled = tokens_scan_shuffles(p, "doc_stats")
+        if not n_stats:
+            failures.append("A15 doc_stats: no doc_stats scan in the "
+                            "funnel search plan")
+        if stats_shuffled:
+            failures.append(
+                f"A15 doc_stats: {stats_shuffled} of {n_stats} doc_stats "
+                "scans sit directly below an Exchange "
+                "hashpartitioning(doc_id)")
         sections.append(
             "## bucketed token storage (A15, write-once shuffle payoff)\n\n"
             f"- tokens scans in the funnel search plan: {n_scans}; with a "
             f"`hashpartitioning(doc_id…)` Exchange as their nearest "
             f"Exchange ancestor: {shuffled} (gate: 0)\n"
+            f"- doc_stats scans (Q5 candidacy) in the same plan: {n_stats}; "
+            f"with that nearest Exchange ancestor: {stats_shuffled} "
+            "(gate: 0)\n"
             f"- per-doc (`hashpartitioning(doc_id…)`) exchanges in the "
             f"whole plan: {p.count('Exchange hashpartitioning(doc_id')}, "
             "all above survivor-bounded sets (rank-cut candidates, at "
