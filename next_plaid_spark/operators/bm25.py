@@ -119,30 +119,28 @@ class BM25Index:
     doclens: DataFrame    # (doc_id, dl)
     n_docs: int
     avgdl: float
+    # (term, df[, max_sat]) — per-term document frequency, computed once by
+    # build() and persisted by every save, the way FTS5 keeps per-term
+    # stats in its b-tree (text_search.rs:1246-1272 reads them, never
+    # re-aggregates the postings): search() prunes this vocabulary-sized
+    # table to the query's terms instead of re-aggregating the
+    # corpus-sized postings table per query. ``max_sat`` = max over the
+    # term's postings of the tf-saturation factor sat(tf, dl) — the
+    # per-term score upper bound the MaxScore prune multiplies by qtf·idf
+    # (the block-max/max-score analog of a per-posting-block max impact).
+    # Every saved store carries it; a built in-memory index derives it
+    # lazily (_ensure_max_sat) on its first pruned search, so unpruned
+    # searches never pay the postings⋈doclens pass.
+    term_stats: DataFrame
+    # Σ dl over the corpus: lets ``save_delta`` update n_docs/avgdl by
+    # EXACT integer arithmetic (total' = total − gone + new) instead of a
+    # corpus-sized doclens scan per update
+    total_dl: int
     tokenizer: str = "unicode61"
     # (term, doc_id, pos) — 0-based token positions; present only when the
     # index is built with_positions (the FTS5 positional-postings analog
     # phrase queries need; ~1 row per token occurrence, so opt-in)
     positions: DataFrame | None = None
-    # (term, df[, max_sat]) — per-term document frequency, precomputed at
-    # build/save time the way FTS5 keeps per-term stats in its b-tree
-    # (text_search.rs:1246-1272 reads them, never re-aggregates the
-    # postings): search() then prunes this vocabulary-sized table to the
-    # query's terms instead of re-aggregating the corpus-sized postings
-    # table per query. None on hand-constructed indexes — derived lazily.
-    # ``max_sat`` (r12) = max over the term's postings of the tf-saturation
-    # factor sat(tf, dl) — the per-term score upper bound the MaxScore
-    # prune multiplies by qtf·idf (the block-max/max-score analog of a
-    # per-posting-block max impact). Persisted by save(); derived lazily
-    # (_ensure_max_sat) on the first pruned search of an index that lacks
-    # it, so unpruned searches never pay the postings⋈doclens pass. With
-    # term_stats=None entirely, the prune silently disables itself.
-    term_stats: DataFrame | None = None
-    # Σ dl over the corpus (r15): lets ``save_delta`` update n_docs/avgdl
-    # by EXACT integer arithmetic (total' = total − gone + new) instead of
-    # a corpus-sized doclens scan per update. None on hand-constructed or
-    # legacy-loaded indexes — save()/save_delta derive it once when absent.
-    total_dl: int | None = None
 
     @classmethod
     def build(cls, docs: DataFrame, *, id_col: str = "doc_id",
@@ -173,9 +171,8 @@ class BM25Index:
         # persisted indexes always carry it.
         term_stats = postings.groupBy("term").agg(
             F.count("*").alias("df")).cache()
-        return cls(postings, doclens.cache(), n_docs, avgdl,
-                   tokenizer, positions, term_stats,
-                   total_dl=int(stats.total or 0))
+        return cls(postings, doclens.cache(), n_docs, avgdl, term_stats,
+                   int(stats.total or 0), tokenizer, positions)
 
     # -- persistence (S6: the FTS index is an on-disk artifact in the
     # reference — text_search.rs builds a SQLite file once and serves many
@@ -185,48 +182,41 @@ class BM25Index:
 
         A saved index serves queries across processes without re-tokenizing
         the corpus — the prebuilt-index half of every search entry point
-        (e.g. ``CodeIndex``). Overwrites any index already at ``path``.
+        (e.g. ``CodeIndex``).
 
         Postings and positions are laid out range-partitioned by DOC_ID
-        across files with rows sorted by term inside each file (r15; they
-        were term-range-partitioned across files before). Term-filtered
-        scans (keyword join, phrase search) still skip row groups via the
-        per-row-group term min/max stats — the IO-skipping granularity is
-        the row group either way, so the posting-list locality a native
-        FTS engine gets from its inverted layout is preserved — while the
-        per-FILE doc_id min/max now gives ``save_delta`` delete locality:
-        an update folds only the files whose doc range may own a deleted
-        doc (the same footer-stats economy as the plaid doc_stats tiers).
+        across files with rows sorted by term inside each file.
+        Term-filtered scans (keyword join, phrase search) skip row groups
+        via the per-row-group term min/max stats — the IO-skipping
+        granularity is the row group either way, so the posting-list
+        locality a native FTS engine gets from its inverted layout is
+        preserved — while the per-FILE doc_id min/max gives ``save_delta``
+        delete locality: an update folds only the files whose doc range
+        may own a deleted doc (the same footer-stats economy as the plaid
+        doc_stats tiers).
         Build-time cost only; queries never pay the sort.
 
-        Safe to save ONTO the index's own load path (in-place upgrade,
-        e.g. adding the max_sat bound to a pre-r12 store): everything is
-        written to a sibling temp dir first and swapped in at the end —
-        a direct overwrite would delete the parquet files this index's
-        own lazy plans still read (observed: doclens self-destruct when
-        re-saving a loaded index in place). r13 hardening: the staging
-        dir name is unique per save, so concurrent saves to the same
-        path can't clobber each other's STAGING (the final swap itself
-        remains last-writer-wins, and two swaps racing the same path can
-        surface as an OSError on the loser — serialize writers per path
-        for deterministic outcomes); the swap renames the old store
-        ASIDE first (never rmtree-then-rename, the r12 form whose crash
-        window left NO index at the load path) —
-        the only remaining crash window is between the two renames, and
-        it leaves the previous store intact under ``<path>.old-*`` for
-        manual recovery. When a LOADED index re-saves onto its own load
-        path, the instance's DataFrames are re-pointed at the swapped-in
-        store after the swap, so continued use of the object reads the
-        live files instead of the pre-swap listing whose part files no
-        longer exist; a hand-built instance that aliases a loaded
-        index's frames has no store path of its own and must be
-        re-loaded after saving onto that store."""
+        ``path`` must not be the store this index was loaded from (its
+        lazy frames read those very files); that raises ``ValueError``,
+        as ``save_delta`` does. Any other existing store at ``path`` is
+        overwritten crash-safely: everything is written to a sibling
+        staging dir first (unique per save, so concurrent saves to one
+        path cannot clobber each other's staging; the final swap is
+        last-writer-wins, and two swaps racing the same path can surface
+        as an OSError on the loser — serialize writers per path for
+        deterministic outcomes), then the old store is renamed ASIDE and
+        the staged one renamed in. The only crash window is between the
+        two renames, and it leaves the previous store intact under
+        ``<path>.old-*`` for manual recovery."""
         import json
         import os
         import shutil
         import tempfile
 
         final = path.rstrip("/")
+        if os.path.abspath(final) == getattr(self, "_store_path", None):
+            raise ValueError("save() cannot overwrite the store this index "
+                             "was loaded from; save to a new path")
         parent = os.path.dirname(final) or "."
         os.makedirs(parent, exist_ok=True)
         # reclaim debris from CRASHED saves (unique staging names mean
@@ -295,31 +285,19 @@ class BM25Index:
             for f in futs:  # re-raise the first failure; others complete
                 f.result()
         # persist per-term stats (df + the max_sat prune bound) so a
-        # loaded index never re-aggregates the postings per query;
-        # hand-constructed indexes (e.g. the incremental-update merge)
-        # derive BOTH here, once per save — max_sat must use the MERGED
-        # corpus's avgdl, so a carried-over pre-merge bound would be
-        # stale and is recomputed whenever the column is absent
-        if (self.term_stats is not None
-                and "max_sat" in self.term_stats.columns):
+        # loaded index never re-aggregates the postings per query. A built
+        # index whose max_sat was never derived joins its df with the
+        # bound derived from the STAGED parquet just written: the staged
+        # files hold the identical rows (they ARE the frames, written
+        # above) without re-evaluating the frames' lineage, and max is
+        # row-order-insensitive, so the bound is bit-identical.
+        if "max_sat" in self.term_stats.columns:
             df_src = self.term_stats
         else:
-            # derive df + max_sat from the STAGED parquet just written, not
-            # from self.postings/self.doclens: for a hand-constructed index
-            # (the incremental-update merge) every evaluation of those
-            # frames re-runs the old-store scan + semi-join + new-postings
-            # aggregation — r14 measured the bm25 leg of a 2-file update at
-            # 32 stages, most of them such re-evaluations. The staged files
-            # hold the identical rows (they ARE the frames, written above),
-            # and max/countDistinct are row-order-insensitive, so the
-            # derived stats are bit-identical.
             spark = self.postings.sparkSession
             staged_post = spark.read.parquet(os.path.join(path, "postings"))
             staged_dl = spark.read.parquet(os.path.join(path, "doclens"))
-            base = (self.term_stats if self.term_stats is not None else
-                    staged_post.groupBy("term").agg(
-                        F.countDistinct("doc_id").alias("df")))
-            df_src = base.join(
+            df_src = self.term_stats.select("term", "df").join(
                 staged_post.join(staged_dl, "doc_id")
                 .groupBy("term")
                 .agg(F.max(_sat_expr(self.avgdl)).alias("max_sat")),
@@ -329,18 +307,9 @@ class BM25Index:
          .sortWithinPartitions("term")
          .write.mode("overwrite").parquet(os.path.join(path, "term_stats")))
         _heartbeat()
-        total_dl = self.total_dl
-        if total_dl is None:
-            # derive once from the staged files (exact integer sum) so the
-            # persisted store can update avgdl arithmetically (save_delta)
-            spark = self.postings.sparkSession
-            total_dl = int(
-                spark.read.parquet(os.path.join(path, "doclens"))
-                .agg(F.sum("dl")).collect()[0][0] or 0)
-            self.total_dl = total_dl
         tiered.write_marker(os.path.join(path, "meta.json"), json.dumps(
             {"n_docs": self.n_docs, "avgdl": self.avgdl,
-             "total_dl": total_dl,
+             "total_dl": self.total_dl,
              "tokenizer": self.tokenizer,
              "with_positions": self.positions is not None}))
         # swap the staged store in (all the writes above are complete):
@@ -355,37 +324,6 @@ class BM25Index:
         if old is not None:
             shutil.rmtree(old, ignore_errors=True)
 
-        # re-point a LOADED instance saving onto its own store (the
-        # in-place upgrade): its pre-swap file listing is dead — the part
-        # files were renamed away above — so any further action on the
-        # object would FileNotFound. The swapped-in store is row-identical
-        # to what the plans held, so re-reading is sound; old cached
-        # frames are released best-effort. Memory-backed instances (built
-        # or hand-constructed) are NOT re-pointed: their frames don't
-        # reference the store, and re-pointing would newly expose them to
-        # someone else swapping the path later. A hand-built instance
-        # that merely ALIASES a loaded index's frames has no store path
-        # of its own — after it saves onto that store, the aliased frames
-        # are dead and both objects must be re-loaded.
-        if getattr(self, "_store_path", None) == os.path.abspath(final):
-            spark = self.postings.sparkSession
-            for frame in (self.postings, self.doclens, self.positions,
-                          self.term_stats):
-                if frame is not None:
-                    try:
-                        frame.unpersist()
-                    except Exception:
-                        pass
-            self.postings = spark.read.parquet(
-                os.path.join(final, "postings"))
-            self.doclens = spark.read.parquet(
-                os.path.join(final, "doclens"))
-            if self.positions is not None:
-                self.positions = spark.read.parquet(
-                    os.path.join(final, "positions"))
-            self.term_stats = spark.read.parquet(
-                os.path.join(final, "term_stats"))
-
     def save_delta(self, out_path: str, *, gone_docs: DataFrame | None,
                    post_new: DataFrame, dl_new: DataFrame,
                    pos_new: DataFrame | None = None,
@@ -395,26 +333,23 @@ class BM25Index:
         removed and the new postings/doclens(/positions) appended, writing
         O(delta) bytes instead of save()'s full-store rewrite.
 
-        Every store file covers a doc_id range (save()'s r15 layout), so
+        Every store file covers a doc_id range (save()'s layout), so
         postings, doclens and positions are doc-ranged tiered stores
         (``sources/tiered.py`` holds the fold rule and the hardlink
-        carry): per-update IO is O(batch). A legacy
-        term-range-partitioned store (pre-r15 save()) folds entirely ONCE
-        (its files span the full doc range) and is doc-ranged thereafter.
+        carry): per-update IO is O(batch).
 
         ``term_stats`` stays the per-snapshot correctness anchor (the
         BM25 analog of the plaid IVF re-derive): df and max_sat are
         recomputed from the snapshot's own postings⋈doclens — max_sat
         depends on the NEW avgdl, so no stale tier can loosen or
         under-read the prune bound — and n_docs/avgdl update by exact
-        integer arithmetic (meta ``total_dl``; legacy metas pay one
-        doclens scan to derive it).
+        integer arithmetic on the meta's ``total_dl``.
 
         Preconditions: ``self`` was ``load()``-ed (needs the old store's
         files), ``out_path`` is a DIFFERENT directory (immutable-snapshot
-        discipline — in-place upgrades keep using save()), ``gone_docs``
-        ⊆ indexed docs, and new doc_ids don't collide with kept docs
-        (re-encoded docs appear in both gone and new)."""
+        discipline), ``gone_docs`` ⊆ indexed docs, and new doc_ids don't
+        collide with kept docs (re-encoded docs appear in both gone and
+        new)."""
         import json
 
         old = getattr(self, "_store_path", None)
@@ -424,8 +359,7 @@ class BM25Index:
                              "use save()")
         out_path = out_path.rstrip("/")
         if os.path.abspath(out_path) == old:
-            raise ValueError("save_delta writes a NEW snapshot dir; "
-                             "in-place saves go through save()")
+            raise ValueError("save_delta writes a NEW snapshot dir")
         spark = self.postings.sparkSession
 
         # -- delete set, collected when bounded (footer pruning needs the
@@ -498,12 +432,8 @@ class BM25Index:
                       .agg(F.count("*").alias("n"),
                            F.sum("dl").alias("s")).collect()[0])
                 gone_n, gone_sum = int(_g.n or 0), int(_g.s or 0)
-        old_total = self.total_dl
-        if old_total is None:  # legacy meta: one corpus scan, then stored
-            old_total = int(
-                self.doclens.agg(F.sum("dl")).collect()[0][0] or 0)
         n_docs = self.n_docs - gone_n + n_new_docs
-        total_dl = old_total - gone_sum + new_dl_sum
+        total_dl = self.total_dl - gone_sum + new_dl_sum
         avgdl = (total_dl / n_docs) if n_docs else 0.0
 
         # -- term_stats: re-derived from the snapshot's own files (exact df
@@ -531,39 +461,40 @@ class BM25Index:
 
     @classmethod
     def load(cls, spark, path: str) -> "BM25Index":
+        """Open a store written by ``save``/``save_delta``. A store without
+        ``term_stats/`` or a meta ``total_dl`` was written by an older
+        format (before per-term stats and the doc-ranged layout) and is
+        rejected: rebuild it with ``BM25Index.build(...).save(...)``."""
         import json
         import os
 
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
+        stats_path = os.path.join(path, "term_stats")
+        if "total_dl" not in meta or not os.path.isdir(stats_path):
+            raise ValueError(
+                f"BM25 store at {path} predates the current format (no "
+                "term_stats/ or no total_dl in meta.json); rebuild it with "
+                "BM25Index.build(...).save(...)")
         positions = (
             spark.read.parquet(os.path.join(path, "positions"))
-            if meta.get("with_positions") else None
-        )
-        stats_path = os.path.join(path, "term_stats")
-        term_stats = (
-            spark.read.parquet(stats_path)
-            if os.path.isdir(stats_path) else None  # pre-term_stats layout
+            if meta["with_positions"] else None
         )
         idx = cls(
             spark.read.parquet(os.path.join(path, "postings")),
             spark.read.parquet(os.path.join(path, "doclens")),
             int(meta["n_docs"]), float(meta["avgdl"]),
-            meta.get("tokenizer", "unicode61"), positions, term_stats,
-            total_dl=(int(meta["total_dl"])
-                      if meta.get("total_dl") is not None else None),
+            spark.read.parquet(stats_path), int(meta["total_dl"]),
+            meta["tokenizer"], positions,
         )
-        # remembered so save() onto this same path knows it's an IN-PLACE
-        # swap and re-points the instance at the new files (see save())
+        # remembered so save() refuses to overwrite the files this
+        # instance's frames read, and save_delta finds its old store
         idx._store_path = os.path.abspath(path)
         return idx
 
-    def _ensure_max_sat(self) -> bool:
+    def _ensure_max_sat(self) -> None:
         """Make term_stats carry the max_sat prune bound, deriving it once
-        (postings⋈doclens, per-term max) for in-memory indexes that were
-        built without it. False iff there is no term_stats to extend."""
-        if self.term_stats is None:
-            return False
+        (postings⋈doclens, per-term max) for a built in-memory index."""
         if "max_sat" not in self.term_stats.columns:
             self.term_stats = self.term_stats.join(
                 self.postings.join(self.doclens, "doc_id")
@@ -571,7 +502,6 @@ class BM25Index:
                 .agg(F.max(_sat_expr(self.avgdl)).alias("max_sat")),
                 "term",
             ).cache()
-        return True
 
     def _maxscore_candidates(self, rows, qterms: DataFrame, k: int,
                              n: float, score_mode: str, contrib,
@@ -752,11 +682,10 @@ class BM25Index:
         tie-break; the margins absorb ulp noise): pinned by the
         prune≡exhaustive pytest and the hash-gated entries run with the
         env flag on. Automatically falls back to exhaustive for
-        conjunctive queries, indexes without ``max_sat`` (pre-r12 saves),
-        term sets over the pushdown cap, query batches over
-        ``_PRUNE_QUERY_CAP`` (r13 — the prune's per-query bookkeeping is
-        driver-side Python, bounded only if the batch is), or candidate
-        sets over ``_PRUNE_CAND_CAP``.
+        conjunctive queries, term sets over the pushdown cap, query
+        batches over ``_PRUNE_QUERY_CAP`` (r13 — the prune's per-query
+        bookkeeping is driver-side Python, bounded only if the batch is),
+        or candidate sets over ``_PRUNE_CAND_CAP``.
         """
         qterms = (
             queries.select(
@@ -777,17 +706,12 @@ class BM25Index:
                 F.col("term").isin(sorted({r["term"] for r in rows})))
         else:
             postings_src = _term_pruned(self.postings, qterms)
-        if self.term_stats is not None:
-            # stored per-term df pruned to the query's terms: a
-            # vocabulary-sized scan with a broadcast semi-join instead of
-            # a corpus-sized postings aggregation per query
-            df_counts = self.term_stats.join(
-                F.broadcast(qterms.select("term").distinct()),
-                "term", "left_semi")
-        else:
-            df_counts = self.postings.groupBy("term").agg(
-                F.countDistinct("doc_id").alias("df")
-            )
+        # stored per-term df pruned to the query's terms: a
+        # vocabulary-sized scan with a broadcast semi-join instead of a
+        # corpus-sized postings aggregation per query
+        df_counts = self.term_stats.join(
+            F.broadcast(qterms.select("term").distinct()),
+            "term", "left_semi")
         n, avgdl = float(self.n_docs), float(self.avgdl)
         if score_mode == "fts5":
             raw_idf = F.log(
@@ -805,8 +729,8 @@ class BM25Index:
         cand = None
         if (prune and not conjunctive and k >= 1 and self.n_docs
                 and len(rows) <= _TERM_PUSHDOWN_CAP
-                and len({r["query_id"] for r in rows}) <= _prune_query_cap()
-                and self._ensure_max_sat()):
+                and len({r["query_id"] for r in rows}) <= _prune_query_cap()):
+            self._ensure_max_sat()
             cand = self._maxscore_candidates(
                 rows, qterms, k, n, score_mode, contrib, subset)
 

@@ -58,15 +58,16 @@ from next_plaid_spark.sources import tiered
 # between the kept write and the ledger write double-appends the batch;
 # (b) every READ that feeds a batch's decisions EXCLUDES the in-flight
 # batch's own subdir, so a replay re-derives decisions from
-# prior-committed state only; (c) a pre-r13 flat root is migrated into
-# ``b-1`` at construction (the versioned readers would otherwise
-# silently ignore it); (d) ``vacuum`` folds per-batch subdirs into
-# GENERATION dirs ``g{seq}`` via a manifest-protected staging dir so a
-# crash mid-fold is repaired, not compounded.
+# prior-committed state only; (c) a root holds only ``b{id}`` and
+# ``g{seq}`` subdirs — construction rejects any other layout
+# (``_check_layout``), which the readers would silently ignore; (d)
+# ``vacuum`` folds per-batch subdirs into GENERATION dirs ``g{seq}`` via
+# a manifest-protected staging dir so a crash mid-fold is repaired, not
+# compounded.
 #
 # Generational folding (r14, closes the r13 VERDICT O(corpus)-rewrite
 # watch item): the r13 fold unioned EVERY committed dir into one
-# ``b-1``, so ``vacuum_every=N`` on a long stream rewrote the whole
+# target, so ``vacuum_every=N`` on a long stream rewrote the whole
 # kept corpus every N batches — O(corpus/N) amortized write cost per
 # batch, which at 100 TB dominates ingest. A fold now merges the new
 # per-batch dirs plus only the generations that are small relative to
@@ -78,8 +79,10 @@ from next_plaid_spark.sources import tiered
 # row-level semantics.
 # ---------------------------------------------------------------------------
 
-_DIR_RE = re.compile(r"^(b-?\d+|g\d+)$")
+_DIR_RE = re.compile(r"^(b\d+|g\d+)$")
 _GEN_RE = re.compile(r"^g(\d+)$")
+# a negative batch id: ``b-1`` was the adoption target of a flat root
+_NEG_BATCH_RE = re.compile(r"^b-\d+$")
 
 
 def _complete_marker(path: str) -> bool:
@@ -104,8 +107,7 @@ def _dir_bytes(path: str) -> int:
 
 def _batch_dirs(root: str, exclude_batch: int | None = None) -> list[str]:
     """Complete state subdirs of a root — per-batch ``b{id}`` dirs minus
-    the in-flight batch's own, plus the folded generations (``g{seq}``
-    and the legacy/retract target ``b-1``)."""
+    the in-flight batch's own, plus the folded generations ``g{seq}``."""
     if not os.path.isdir(root):
         return []
     out = []
@@ -161,21 +163,19 @@ def _write_batch_dir(df: DataFrame, root: str, batch_id: int) -> None:
     df.write.mode("overwrite").parquet(os.path.join(root, f"b{batch_id}"))
 
 
-def _migrate_flat_root(root: str) -> None:
-    """Adopt a pre-versioned root that holds parquet files directly:
-    move it under ``b-1`` (two renames through a resumable staging
-    name). A root that already holds only subdirs is left alone. The
-    whole protocol (reader, migration, fold) keys completeness on the
-    ``_SUCCESS`` marker — Spark must be writing markers
-    (``mapreduce.fileoutputcommitter.marksuccessfuljobs``, the default,
-    not disabled), or committed state would be invisible to readers."""
-    tmp = root + ".legacy-tmp"
-    if os.path.isdir(root) and any(
-            os.path.isfile(os.path.join(root, f)) for f in os.listdir(root)):
-        os.replace(root, tmp)
-    if os.path.isdir(tmp):
-        os.makedirs(root, exist_ok=True)
-        os.replace(tmp, os.path.join(root, "b-1"))
+def _check_layout(root: str) -> None:
+    """Reject a state root in a layout no writer here produces: parquet
+    files directly at the root (the flat append layout) or a ``b-1`` dir
+    (left by adopting such a root; no batch id is negative). The readers
+    union only ``b{id}`` and ``g{seq}`` dirs, so either would be silently
+    ignored and everything it holds re-admitted."""
+    if not os.path.isdir(root):
+        return
+    if any(_NEG_BATCH_RE.match(f) or os.path.isfile(os.path.join(root, f))
+           for f in os.listdir(root)):
+        raise ValueError(
+            f"sink state root {root} is in an older layout (parquet files "
+            "at the root or a b-1 dir); rebuild the sink from its source")
 
 
 def _recover_fold(root: str) -> None:
@@ -184,8 +184,8 @@ def _recover_fold(root: str) -> None:
     (it holds the full union of the listed dirs): drop whichever of them
     survive and rename the staging in. Without a complete write or the
     manifest, discard it — every source dir is still intact. The
-    manifest's first line names the destination (``dest=g{seq}``);
-    pre-r14 manifests have no dest line and fold to ``b-1``."""
+    manifest's first line names the destination (``dest=g{seq}``); a
+    manifest without it was not written by ``_stage_swap`` and raises."""
     import shutil
 
     if os.path.isdir(root):
@@ -201,11 +201,10 @@ def _recover_fold(root: str) -> None:
     if _complete_marker(tmp) and os.path.isfile(manifest):
         with open(manifest) as f:
             names = f.read().split()
-        dest_name = "b-1"
-        if names and names[0].startswith("dest="):
-            dest_name = names[0][len("dest="):]
-            names = names[1:]
-        for nm in names:
+        if not names or not names[0].startswith("dest="):
+            raise ValueError(f"fold manifest {manifest} has no dest= line")
+        dest_name = names[0][len("dest="):]
+        for nm in names[1:]:
             shutil.rmtree(os.path.join(root, nm), ignore_errors=True)
         dest = os.path.join(root, dest_name)
         if os.path.isdir(dest):
@@ -231,7 +230,7 @@ def _fold_sources(root: str, exclude_batch: int | None = None) -> list[str]:
     batches, gens = [], []
     for p in _batch_dirs(root, exclude_batch):
         d = os.path.basename(p)
-        if _GEN_RE.match(d) or d == "b-1":
+        if _GEN_RE.match(d):
             gens.append((_dir_bytes(p), p))
         else:
             batches.append(p)
@@ -262,9 +261,8 @@ def _stage_swap(root: str, sources: list[str], dest_name: str,
     tmp = _fold_tmp_path(root)
     shutil.rmtree(tmp, ignore_errors=True)
     write_staged(tmp)
-    with open(os.path.join(tmp, "_FOLDED"), "w") as f:
-        f.write(f"dest={dest_name}\n")
-        f.write("\n".join(os.path.basename(d) for d in sources))
+    tiered.write_marker(os.path.join(tmp, "_FOLDED"), "\n".join(
+        [f"dest={dest_name}"] + [os.path.basename(d) for d in sources]))
     for d in sources:
         shutil.rmtree(d)
     # the manifest rides along through the rename (Spark ignores
@@ -371,7 +369,7 @@ class StreamingCurator:
             # read + broadcast per micro-batch (it is the small static side)
             eval_shingle_set(eval_docs, n=n).write.parquet(self._ev_path)
         for r in (self._kept_path, self._ledger_path):
-            _migrate_flat_root(r)
+            _check_layout(r)
             _recover_fold(r)
 
     @property
@@ -507,9 +505,8 @@ class StreamingSemanticDedup:
     streamed in id order yields EXACTLY ``semantic_dedup_batch``'s kept
     set (tests/test_streaming_curation.py). Driver-side state per batch
     is the verified pair/match graph only — bounded by the near-dup
-    rate, never by batch or corpus size. A pre-r14 ledger (embedding
-    column present) is read by its id columns only — no migration
-    needed.
+    rate, never by batch or corpus size. A ledger carrying extra
+    columns (e.g. an embedding column) is read by its id columns only.
     """
 
     def __init__(self, spark: SparkSession, root: str, *,
@@ -528,7 +525,7 @@ class StreamingSemanticDedup:
         self.n_bits = n_bits if n_bits is not None else auto_b
         self.vacuum_every = vacuum_every
         for r in (self._kept_path, self._ledger_path):
-            _migrate_flat_root(r)
+            _check_layout(r)
             _recover_fold(r)
         self.seed = seed
 
@@ -707,7 +704,7 @@ class StreamingTextDedup:
         self.n = n
         self.vacuum_every = vacuum_every
         for r in (self._kept_path, self._ledger_path):
-            _migrate_flat_root(r)
+            _check_layout(r)
             _recover_fold(r)
 
     @property
@@ -886,7 +883,6 @@ class StreamingBloomDedup:
 
         kept/b{batch_id}/                      overwrite per batch
         kept/g{seq}/                           fold generations (vacuum)
-        kept/b-1/                              retract / legacy migration
         bloom_ledger/v{v}_b{bid}_m{m}/base/    resize rebuild (v>0) or fold
         bloom_ledger/v{v}_b{bid}_m{m}/b{id}/   per-batch bit deltas
         bloom_counts/v{v}_b{bid}_m{m}/         counting snapshots
@@ -916,47 +912,11 @@ class StreamingBloomDedup:
         self.m0 = int(m) if m else BLOOM_BITS
         self.fill_bound = fill_bound
         self.vacuum_every = vacuum_every
-        self._migrate_legacy_layout()
+        for r in (self._kept_root, self._state_root):
+            _check_layout(r)
         self._recover_kept_fold()
 
     # -- layout helpers ----------------------------------------------------
-
-    @staticmethod
-    def _flat_parquet(d: str) -> bool:
-        """True iff ``d`` holds parquet files directly (the pre-r12 flat
-        layout: no b{id} / v{v}_b{bid}_m{m} subdirs — the current layout
-        keeps only subdirectories at these roots)."""
-        return os.path.isdir(d) and any(
-            os.path.isfile(os.path.join(d, f)) for f in os.listdir(d))
-
-    def _migrate_legacy_layout(self) -> None:
-        """Adopt a pre-r12 sink root in place (r13, closes the upgrade
-        ADVICE): the old layout wrote flat parquet at ``kept/`` and
-        ``bloom_ledger``/``bloom_counts`` — names the versioned readers
-        don't see, so an upgraded sink would silently re-admit duplicates
-        of everything previously kept, and ``kept()`` would raise on a
-        zero-path read. Migration: ``kept/`` → ``kept/b-1`` and the flat
-        state → ``v0_b-1_m{m0}`` (``/base`` for the bit ledger). Builder
-        id -1 is the same never-a-real-batch id retract()/rebuilds use,
-        so replay-taint popping can never discard migrated state. The
-        flat layout did not record m — construct the sink with the SAME
-        ``m`` the legacy sink used (or both on the default); a mismatched
-        m probes wrong positions, exactly like swapping the hash
-        function. Each move is two renames through a ``.legacy-tmp``
-        staging name and is resumed here if a crash split them."""
-        _migrate_flat_root(self._kept_root)
-
-        state_tmp = self._state_root + ".legacy-tmp"
-        if self._flat_parquet(self._state_root):
-            os.replace(self._state_root, state_tmp)
-        if os.path.isdir(state_tmp):
-            ver_dir = os.path.join(self._state_root, f"v0_b-1_m{self.m0}")
-            if self.counting:
-                os.makedirs(self._state_root, exist_ok=True)
-                os.replace(state_tmp, ver_dir)
-            else:
-                os.makedirs(ver_dir, exist_ok=True)
-                os.replace(state_tmp, os.path.join(ver_dir, "base"))
 
     @property
     def _kept_root(self) -> str:
@@ -1001,8 +961,8 @@ class StreamingBloomDedup:
         """Versions usable by this batch: truncate at the FIRST version
         built by a prior (crashed, uncommitted) attempt of the SAME
         batch — it, and anything stacked above it (a later resize attempt
-        of the same replay, or a ``retract()``/vacuum ``b-1`` version run
-        in violation of the quiescence contract), derives from
+        of the same replay, or a ``retract()``/vacuum builder-id -1
+        version run in violation of the quiescence contract), derives from
         uncommitted state and will be rebuilt deterministically. Batch
         ids are never reused by Structured Streaming, so a same-bid
         version can only be replay taint (r13: the r12 form only popped
@@ -1215,7 +1175,7 @@ class StreamingBloomDedup:
         lands as a new generation via the manifest-protected
         ``_stage_swap`` — so a takedown of a few docs in a 100 TB kept
         corpus rewrites a few dirs, not the corpus (the r13 form merged
-        EVERYTHING into one b-1). Affected dirs are found in one job
+        EVERYTHING into one dir). Affected dirs are found in one job
         (``input_file_name`` + semi join); untouched dirs keep their
         bytes. A crash mid-swap is repaired at the next construction; a
         crash between the counts write and the kept swap leaves counts
@@ -1225,7 +1185,7 @@ class StreamingBloomDedup:
 
         QUIESCENCE CONTRACT (r13, like ``vacuum``): retract() must only
         run while the stream is stopped with every batch committed. It
-        both stacks a ``b-1`` version on the ledger and may fold the
+        both stacks a builder-id -1 version on the ledger and may fold the
         last batch's kept dir into a generation — if that batch were
         still uncommitted, its replay could no longer be excluded from
         the kept/ reads, so the batch would screen against its own

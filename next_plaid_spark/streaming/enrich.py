@@ -52,7 +52,7 @@ class StreamingAsofEnricher:
                  tie_col: str | None = None,
                  vacuum_every: int | None = None):
         from next_plaid_spark.streaming.curation import (
-            _assert_success_markers, _migrate_flat_root, _recover_fold)
+            _assert_success_markers, _check_layout, _recover_fold)
 
         _assert_success_markers(spark)
         self.spark = spark
@@ -64,9 +64,9 @@ class StreamingAsofEnricher:
         self.right_filter = right_filter
         self.tie_col = tie_col
         self.vacuum_every = vacuum_every
-        # adopt a pre-r13 flat enriched/ dir (old append layout) as b-1 —
-        # the per-batch reader would otherwise silently drop it
-        _migrate_flat_root(self._enriched_path)
+        # the per-batch reader sees only b{id}/g{seq} dirs: reject any
+        # other layout rather than silently drop what it holds
+        _check_layout(self._enriched_path)
         _recover_fold(self._enriched_path)
 
     @property

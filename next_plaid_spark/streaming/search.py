@@ -75,11 +75,12 @@ class StreamingSearcher:
 
     def _bind_sink(self, sink_path: str) -> None:
         from next_plaid_spark.streaming.curation import (
-            _assert_success_markers, _migrate_flat_root, _recover_fold)
+            _assert_success_markers, _check_layout, _recover_fold)
 
         _assert_success_markers(self.spark)
-        # adopt a pre-r13 flat results dir (old append layout) as b-1
-        _migrate_flat_root(sink_path)
+        # the per-batch reader sees only b{id}/g{seq} dirs: reject any
+        # other layout rather than silently drop what it holds
+        _check_layout(sink_path)
         _recover_fold(sink_path)
         self._sink_path = sink_path
 

@@ -496,8 +496,8 @@ def test_lowercase_near_is_loose_terms(spark):
 
 def test_term_stats_roundtrip_and_search_parity(spark, tmp_path):
     """Stored per-term df (the FTS5-stats analog): save/load carries
-    term_stats, a loaded index searches without re-aggregating postings,
-    and scores are identical to the derived-df fallback."""
+    term_stats, and a loaded index (df from term_stats) scores exactly as
+    the built one."""
     docs = spark.createDataFrame(
         [(0, "apple banana apple"), (1, "banana cherry apple"),
          (2, "durian banana"), (3, "cherry cherry")],
@@ -510,21 +510,15 @@ def test_term_stats_roundtrip_and_search_parity(spark, tmp_path):
     path = str(tmp_path / "bm25")
     idx.save(path)
     loaded = BM25Index.load(spark, path)
-    assert loaded.term_stats is not None
     assert {r.term: r.df for r in loaded.term_stats.collect()} == stats
 
     q = spark.createDataFrame(
         [(0, "apple cherry"), (1, "banana")], "query_id long, text string")
-    with_stats = loaded.search(q, k=4).collect()
-    legacy = BM25Index(loaded.postings, loaded.doclens, loaded.n_docs,
-                       loaded.avgdl, loaded.tokenizer)
-    assert legacy.term_stats is None  # hand-constructed → derived-df path
-    without = legacy.search(q, k=4).collect()
-    key = lambda r: (r.query_id, r.rank)
-    assert sorted(((r.query_id, r.doc_id, r.score, r.rank)
-                   for r in with_stats)) == \
-           sorted(((r.query_id, r.doc_id, r.score, r.rank)
-                   for r in without))
+    def rows(df):
+        return sorted((r.query_id, r.doc_id, r.score, r.rank)
+                      for r in df.collect())
+
+    assert rows(loaded.search(q, k=4)) == rows(idx.search(q, k=4))
 
 
 def test_loaded_index_term_pushdown(spark, tmp_path):

@@ -8,7 +8,7 @@ upper bounds against a θ that lower-bounds the true k-th score (see
 ``BM25Index._maxscore_candidates``). These tests pin the parity on a
 corpus engineered so the prune ENGAGES (skewed df: a few rare terms, many
 flooded ones), on a seeded random corpus, and across the fallback edges
-(conjunctive, subset, hand-built index without max_sat, tiny k/corpus).
+(conjunctive, subset, tiny k/corpus).
 """
 from __future__ import annotations
 
@@ -107,16 +107,6 @@ def test_conjunctive_falls_back(spark, skewed):
     assert got == base
 
 
-def test_handbuilt_index_without_max_sat_falls_back(spark, skewed):
-    legacy = BM25Index(skewed.postings, skewed.doclens, skewed.n_docs,
-                       skewed.avgdl, skewed.tokenizer)
-    queries = spark.createDataFrame(
-        [(0, "rareterm common1 common2")], Q_SCHEMA)
-    base = _rows(legacy.search(queries, k=2, prune=False))
-    got = _rows(legacy.search(queries, k=2, prune=True))   # silent fallback
-    assert got == base
-
-
 def test_save_load_carries_max_sat(spark, skewed, tmp_path_factory):
     tmp = tmp_path_factory.mktemp("bm25prune")
     skewed.save(str(tmp / "idx"))
@@ -130,23 +120,24 @@ def test_save_load_carries_max_sat(spark, skewed, tmp_path_factory):
     assert loaded._last_prune["engaged"] is True
 
 
-def test_handbuilt_save_derives_max_sat(spark, skewed, tmp_path_factory):
-    """The incremental-merge path constructs BM25Index(term_stats=None);
-    save() must derive max_sat with the MERGED avgdl so a loaded updated
-    index prunes too."""
+def test_built_save_derives_max_sat(spark, tmp_path_factory):
+    """A built index's term_stats holds df only (max_sat is derived
+    lazily); save() must derive max_sat so the loaded store prunes, and
+    the bound must equal the lazily-derived in-memory one."""
     tmp = tmp_path_factory.mktemp("bm25prunederive")
-    legacy = BM25Index(skewed.postings, skewed.doclens, skewed.n_docs,
-                       skewed.avgdl, skewed.tokenizer)
-    legacy.save(str(tmp / "idx"))
+    docs = [(i, "common1 common2 filler" + (" rareterm" if i % 9 == 0
+                                              else "") + " common1" * (i % 3))
+            for i in range(60)]
+    built = BM25Index.build(spark.createDataFrame(docs, DOC_SCHEMA))
+    assert "max_sat" not in built.term_stats.columns
+    built.save(str(tmp / "idx"))
     loaded = BM25Index.load(spark, str(tmp / "idx"))
     assert "max_sat" in loaded.term_stats.columns
-    # derived bound equals the lazily-derived in-memory bound (same
-    # corpus, same avgdl); order-independent: force the derivation here
-    assert skewed._ensure_max_sat()
-    a = {(r.term, round(r.max_sat, 12))
+    built._ensure_max_sat()
+    a = {(r.term, r.df, round(r.max_sat, 12))
          for r in loaded.term_stats.collect()}
-    b = {(r.term, round(r.max_sat, 12))
-         for r in skewed.term_stats.collect()}
+    b = {(r.term, r.df, round(r.max_sat, 12))
+         for r in built.term_stats.collect()}
     assert a == b
 
 
@@ -180,53 +171,58 @@ def test_query_cap_falls_back(spark, skewed, monkeypatch):
     assert skewed._last_prune["engaged"] is True
 
 
-def test_in_place_resave_instance_stays_usable(spark, tmp_path_factory):
-    """r13 (ADVICE): after a LOADED index re-saves onto its own load
-    path, the SAME instance keeps working — save() re-points its frames
-    at the swapped-in store (the pre-swap part files are gone). Also pins
-    the swap hygiene: no staging or .old debris left next to the store."""
+def test_save_in_place_is_safe(spark, tmp_path_factory):
+    """save() refuses the store a loaded index reads from (its lazy
+    frames read those very files): the call raises, and the store still
+    loads and serves the same rows. A built index saved OVER an existing
+    store swaps it in with no staging or .old debris left behind."""
     import os
 
-    tmp = tmp_path_factory.mktemp("bm25repoint")
+    tmp = tmp_path_factory.mktemp("bm25inplace")
     docs = spark.createDataFrame(
         [(0, "apple banana apple"), (1, "banana cherry apple"),
          (2, "durian banana"), (3, "cherry cherry")], DOC_SCHEMA)
-    BM25Index.build(docs).save(str(tmp / "idx"))
-
-    loaded = BM25Index.load(spark, str(tmp / "idx"))
+    path = str(tmp / "idx")
+    BM25Index.build(docs).save(path)
     q = spark.createDataFrame([(0, "apple cherry")], Q_SCHEMA)
+
+    loaded = BM25Index.load(spark, path)
     base = _rows(loaded.search(q, k=4, prune=False))
-
-    loaded.save(str(tmp / "idx"))          # in-place re-save
-    assert _rows(loaded.search(q, k=4, prune=False)) == base  # still live
+    with pytest.raises(ValueError, match="loaded from"):
+        loaded.save(path + "/")
     assert _rows(loaded.search(q, k=4, prune=True)) == base
+    assert _rows(BM25Index.load(spark, path).search(q, k=4)) == base
 
+    other = spark.createDataFrame(
+        [(0, "cherry durian"), (5, "apple apple elder")], DOC_SCHEMA)
+    built = BM25Index.build(other)
+    want = _rows(built.search(q, k=4))
+    built.save(path)
+    assert _rows(BM25Index.load(spark, path).search(q, k=4)) == want
     debris = [d for d in os.listdir(tmp)
               if ".tmp-save" in d or ".old-" in d]
     assert debris == []
 
 
-def test_save_in_place_is_safe(spark, tmp_path_factory):
-    """Re-saving a LOADED index onto its own path (the in-place max_sat
-    upgrade) must not self-destruct: save() stages to a temp dir and
-    swaps, because a direct overwrite deletes the parquet files the
-    index's own lazy plans still read."""
-    tmp = tmp_path_factory.mktemp("bm25inplace")
+def test_load_rejects_store_without_term_stats_or_total_dl(
+        spark, tmp_path_factory):
+    """A store missing term_stats/ or meta total_dl was written by an
+    older format; load() asks for a rebuild instead of upgrading it."""
+    import json
+    import shutil
+
+    tmp = tmp_path_factory.mktemp("bm25oldformat")
     docs = spark.createDataFrame(
-        [(0, "apple banana apple"), (1, "banana cherry apple"),
-         (2, "durian banana"), (3, "cherry cherry")], DOC_SCHEMA)
-    idx = BM25Index.build(docs)
-    path = str(tmp / "idx")
-    idx.save(path)
-
-    loaded = BM25Index.load(spark, path)
-    legacy = BM25Index(loaded.postings, loaded.doclens, loaded.n_docs,
-                       loaded.avgdl, loaded.tokenizer)  # no stats at all
-    legacy.save(path)  # in-place upgrade derives term_stats + max_sat
-
-    upgraded = BM25Index.load(spark, path)
-    assert "max_sat" in upgraded.term_stats.columns
-    q = spark.createDataFrame([(0, "apple cherry")], Q_SCHEMA)
-    base = _rows(idx.search(q, k=4, prune=False))
-    assert _rows(upgraded.search(q, k=4, prune=False)) == base
-    assert _rows(upgraded.search(q, k=4, prune=True)) == base
+        [(0, "apple banana"), (1, "banana cherry")], DOC_SCHEMA)
+    no_stats, no_total = str(tmp / "no_stats"), str(tmp / "no_total")
+    BM25Index.build(docs).save(no_stats)
+    shutil.copytree(no_stats, no_total)
+    shutil.rmtree(f"{no_stats}/term_stats")
+    with open(f"{no_total}/meta.json") as f:
+        meta = json.load(f)
+    del meta["total_dl"]
+    with open(f"{no_total}/meta.json", "w") as f:
+        json.dump(meta, f)
+    for path in (no_stats, no_total):
+        with pytest.raises(ValueError, match="rebuild"):
+            BM25Index.load(spark, path)

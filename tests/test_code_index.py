@@ -466,3 +466,61 @@ def test_update_rejects_flat_units_snapshot(spark, idx, files_v2,
     flat = CodeIndex.load(spark, old)
     with pytest.raises(ValueError, match="rebuild"):
         flat.update(files_v2, str(base / "new"), rebuild_threshold=0)
+
+
+@pytest.fixture(scope="module")
+def clean_v2(spark, idx, files_v2, tmp_path_factory):
+    """An uncrashed incremental update of ``idx`` to the v2 tree."""
+    out = str(tmp_path_factory.mktemp("ci_clean") / "v2")
+    return idx.update(files_v2, out, rebuild_threshold=0)
+
+
+@pytest.mark.parametrize("crash_at", ["bm25_leg", "marker"])
+def test_update_crash_keeps_old_snapshot(spark, idx, files_v2, clean_v2,
+                                         tmp_path_factory, monkeypatch,
+                                         crash_at):
+    """A crash inside CodeIndex.update — in the BM25 leg, or at the code
+    index's own commit marker after both legs finished — leaves no
+    ``<out>/meta.json``; the old snapshot still loads and serves the same
+    rows, and a retry into a fresh dir equals an uncrashed update."""
+    import os
+
+    from next_plaid_spark.operators.bm25 import BM25Index
+    from next_plaid_spark.sources import tiered
+
+    qdf = spark.createDataFrame(
+        [(0, "parse configuration file"), (1, "http retry backoff")],
+        "query_id long, text string")
+
+    def rows(ci):
+        return sorted(map(tuple, ci.search_batch(
+            qdf, top_k=5, params=ci.exact_search_params(200)).collect()))
+
+    want_old = rows(CodeIndex.load(spark, idx.path))
+    base = tmp_path_factory.mktemp(f"ci_crash_{crash_at}")
+    out = str(base / "crashed")
+
+    def crash(*_a, **_k):
+        raise RuntimeError("injected crash")
+
+    if crash_at == "bm25_leg":
+        monkeypatch.setattr(BM25Index, "save_delta", crash)
+    else:
+        real = tiered.write_marker
+
+        def marker(path, text):
+            if path == os.path.join(out, "meta.json"):
+                crash()
+            real(path, text)
+
+        monkeypatch.setattr(tiered, "write_marker", marker)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        idx.update(files_v2, out, rebuild_threshold=0)
+    monkeypatch.undo()
+
+    assert not os.path.exists(os.path.join(out, "meta.json"))
+    assert rows(CodeIndex.load(spark, idx.path)) == want_old
+
+    got = idx.update(files_v2, str(base / "retry"), rebuild_threshold=0)
+    assert sorted(got.units.collect()) == sorted(clean_v2.units.collect())
+    assert rows(got) == rows(clean_v2)

@@ -4,6 +4,7 @@ a static eval set, and the quality gate."""
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from next_plaid_spark.operators.corpus import eval_shingle_set
@@ -562,9 +563,9 @@ def test_bloom_counts_delta_strict_underflow(spark):
 
 def test_bloom_vacuum_bits_mode(spark, tmp_path_factory):
     """r13 VERDICT item: vacuum compacts the per-batch small dirs — all
-    kept/b{id} into kept/b-1, the bit ledger's per-batch deltas into a
-    single new version — without changing the kept corpus, the set-bit
-    positions, or subsequent screen decisions."""
+    kept/b{id} into one generation kept/g0, the bit ledger's per-batch
+    deltas into a single new version — without changing the kept corpus,
+    the set-bit positions, or subsequent screen decisions."""
     from next_plaid_spark.streaming.curation import StreamingBloomDedup
 
     tmp = tmp_path_factory.mktemp("bloomvacbits")
@@ -628,37 +629,28 @@ def test_bloom_vacuum_counting_mode_preserves_retract(spark,
     assert 5 in {r.doc_id for r in dd.kept().collect()}
 
 
-def test_bloom_legacy_flat_layout_migrated(spark, tmp_path_factory):
-    """r12 ADVICE (medium): a pre-r12 sink root wrote flat parquet at
-    kept/ and bloom_ledger|bloom_counts/. Constructing a sink on such a
-    root must adopt the old state — kept() sees the legacy docs and a
-    re-ingest of a legacy doc is still screened — instead of silently
-    re-admitting everything previously kept."""
+def test_bloom_old_layout_rejected(spark, tmp_path_factory):
+    """No writer produces flat parquet at kept/ or at the ledger root, nor
+    a kept/b-1 dir; the readers would silently ignore such state and
+    re-admit everything it holds, so construction raises instead."""
     from next_plaid_spark.operators.dedup import bloom_bits, bloom_counts
     from next_plaid_spark.streaming.curation import StreamingBloomDedup
 
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    legacy_docs = [(1, base)]
     for counting, state_name, builder in (
             (False, "bloom_ledger", bloom_bits),
             (True, "bloom_counts", bloom_counts)):
-        tmp = tmp_path_factory.mktemp(f"bloomlegacy{counting}")
-        root = tmp / "root"
-        ldf = spark.createDataFrame(legacy_docs, DOC_SCHEMA)
-        ldf.write.parquet(str(root / "kept"))             # FLAT pre-r12 layout
-        builder(ldf, n=3).write.parquet(str(root / state_name))
-
-        dd = StreamingBloomDedup(spark, str(root), threshold=0.5,
-                                 counting=counting)
-        assert sorted(r.doc_id for r in dd.kept().collect()) == [1]
-        assert [os.path.basename(d) for d in dd._kept_dirs()] == ["b-1"]
-        assert dd._versions()[0][1] == -1  # migrated as builder id -1
-
-        dd.process_batch(spark.createDataFrame(
-            [(2, base),                                     # legacy dup
-             (3, "fresh unrelated words land in this batch")],
-            DOC_SCHEMA), 0)
-        assert sorted(r.doc_id for r in dd.kept().collect()) == [1, 3]
+        tmp = tmp_path_factory.mktemp(f"bloomold{counting}")
+        ldf = spark.createDataFrame([(1, base)], DOC_SCHEMA)
+        flat_kept, flat_state, kept_b1 = (
+            tmp / "flat_kept", tmp / "flat_state", tmp / "kept_b1")
+        ldf.write.parquet(str(flat_kept / "kept"))
+        builder(ldf, n=3).write.parquet(str(flat_state / state_name))
+        ldf.write.parquet(str(kept_b1 / "kept" / "b-1"))
+        for root in (flat_kept, flat_state, kept_b1):
+            with pytest.raises(ValueError, match="rebuild"):
+                StreamingBloomDedup(spark, str(root), threshold=0.5,
+                                    counting=counting)
 
 
 def test_bloom_replay_taint_truncates_below_stacked_b1(spark,
@@ -799,12 +791,12 @@ def test_bloom_kept_fold_crash_recovery(spark, tmp_path_factory):
     tmp_dir = dd._fold_tmp
     dd.kept().write.mode("overwrite").parquet(tmp_dir)
     with open(os.path.join(tmp_dir, "_FOLDED"), "w") as f:
-        f.write("\n".join(os.path.basename(d) for d in dirs))
+        f.write("\n".join(["dest=g0"] + [os.path.basename(d) for d in dirs]))
     shutil.rmtree(dirs[0])
 
     dd2 = StreamingBloomDedup(spark, str(tmp / "root"), threshold=0.5)
     assert sorted(r.doc_id for r in dd2.kept().collect()) == kept_before
-    assert [os.path.basename(d) for d in dd2._kept_dirs()] == ["b-1"]
+    assert [os.path.basename(d) for d in dd2._kept_dirs()] == ["g0"]
     assert not os.path.isdir(tmp_dir)
 
     # a manifest-less staging dir (crash before the manifest write) is
@@ -894,28 +886,30 @@ def test_semantic_dedup_crash_between_writes_replay_exact(spark,
     assert sorted(kept) == clean and len(kept) == len(set(kept))
 
 
-def test_text_dedup_vacuum_and_legacy_migration(spark, tmp_path_factory):
+def test_text_dedup_vacuum_and_old_layout_rejected(spark, tmp_path_factory):
     """The shared per-batch protocol's other two legs, on the text sink:
-    a pre-r13 flat root (kept/ and band_ledger/ holding parquet
-    directly) is adopted as b-1 at construction, and vacuum() folds the
-    per-batch dirs without changing the kept set or future decisions."""
+    a flat root (kept/ and band_ledger/ holding parquet directly) is
+    rejected at construction, and vacuum() folds the per-batch dirs
+    without changing the kept set or future decisions."""
     from next_plaid_spark.operators.dedup import minhash_band_ledger
     from next_plaid_spark.streaming.curation import StreamingTextDedup
 
-    tmp = tmp_path_factory.mktemp("txtvaclegacy")
-    root = tmp / "root"
+    tmp = tmp_path_factory.mktemp("txtvac")
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    legacy = spark.createDataFrame([(1, base)], DOC_SCHEMA)
-    legacy.write.parquet(str(root / "kept"))               # FLAT layout
-    minhash_band_ledger(legacy, n=3).write.parquet(str(root / "band_ledger"))
+    first = spark.createDataFrame([(1, base)], DOC_SCHEMA)
+    flat = tmp / "flat"
+    first.write.parquet(str(flat / "kept"))
+    minhash_band_ledger(first, n=3).write.parquet(str(flat / "band_ledger"))
+    with pytest.raises(ValueError, match="rebuild"):
+        StreamingTextDedup(spark, str(flat), threshold=0.5)
 
-    dd = StreamingTextDedup(spark, str(root), threshold=0.5)
-    assert sorted(r.doc_id for r in dd.kept().collect()) == [1]
-    # cross-batch near-dup of the LEGACY doc is screened; fresh doc kept
+    dd = StreamingTextDedup(spark, str(tmp / "root"), threshold=0.5)
+    dd.process_batch(first, 0)
+    # cross-batch near-dup of the first doc is screened; fresh doc kept
     dd.process_batch(spark.createDataFrame(
         [(2, base + " tail"),
          (3, "totally fresh words appear here nothing repeats")],
-        DOC_SCHEMA), 0)
+        DOC_SCHEMA), 1)
     assert sorted(r.doc_id for r in dd.kept().collect()) == [1, 3]
 
     stats = dd.vacuum()
@@ -925,8 +919,62 @@ def test_text_dedup_vacuum_and_legacy_migration(spark, tmp_path_factory):
     # decisions unchanged on the folded state
     dd.process_batch(spark.createDataFrame(
         [(4, base), (5, "yet another entirely distinct closing line")],
-        DOC_SCHEMA), 1)
+        DOC_SCHEMA), 2)
     assert sorted(r.doc_id for r in dd.kept().collect()) == [1, 3, 5]
+
+
+@pytest.fixture(scope="module")
+def tiny_index(spark, tmp_path_factory):
+    from next_plaid_spark.encoding import clustered_token_corpus
+    from next_plaid_spark.plans.builder import IndexBuilder
+
+    toks, _ = clustered_token_corpus(
+        spark, n_docs=40, tokens_per_doc=3, dim=8, n_clusters=4, seed=3)
+    return IndexBuilder(spark, k=4, bucket_tokens=2).build(
+        toks, str(tmp_path_factory.mktemp("tinyidx") / "v0"))
+
+
+def _open_sink(spark, request, name, root):
+    """A thunk constructing one of the five b{id}/g{seq} sinks on
+    ``root``."""
+    from next_plaid_spark.streaming.curation import (
+        StreamingSemanticDedup, StreamingTextDedup)
+    from next_plaid_spark.streaming.enrich import StreamingAsofEnricher
+    from next_plaid_spark.streaming.search import StreamingSearcher
+
+    if name == "curator":
+        return lambda: StreamingCurator(
+            spark, root, eval_docs=spark.createDataFrame(EVAL, SCHEMA))
+    if name == "semantic":
+        return lambda: StreamingSemanticDedup(spark, root, dim=4)
+    if name == "text":
+        return lambda: StreamingTextDedup(spark, root)
+    if name == "asof":
+        return lambda: StreamingAsofEnricher(
+            spark, root, keys=["k"], ts_col="ts", payload_cols=["v"],
+            left_filter=F.lit(True), right_filter=F.lit(True))
+    idx = request.getfixturevalue("tiny_index")
+    return lambda: StreamingSearcher(spark, idx, sink_path=root)
+
+
+_STATE_DIR = {"curator": "kept", "semantic": "kept", "text": "kept",
+              "asof": "enriched", "search": ""}
+
+
+@pytest.mark.parametrize("layout", ["flat", "b-1"])
+@pytest.mark.parametrize("sink", sorted(_STATE_DIR))
+def test_sink_rejects_old_state_layout(spark, tmp_path, request, sink,
+                                       layout):
+    """Every per-batch sink reads only b{id}/g{seq} dirs, so a state dir
+    holding parquet files directly, or a b-1 dir, would be silently
+    ignored; construction raises instead of adopting it."""
+    root = str(tmp_path / "root")
+    state = os.path.join(root, _STATE_DIR[sink]) if _STATE_DIR[sink] else root
+    rows = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    rows.write.parquet(state if layout == "flat"
+                       else os.path.join(state, "b-1"))
+    with pytest.raises(ValueError, match="rebuild"):
+        _open_sink(spark, request, sink, root)()
 
 
 # ---------------------------------------------------------------------------
@@ -1012,6 +1060,26 @@ def test_generational_fold_crash_recovery_new_manifest(spark,
     assert names == ["g4"]
     assert not os.path.isdir(tmp)
     assert spark.read.parquet(*_batch_dirs(root)).count() == 10
+
+
+def test_fold_recovery_rejects_manifest_without_dest(spark,
+                                                     tmp_path_factory):
+    """Every ``_stage_swap`` manifest names its destination first; a
+    complete staging dir whose manifest lacks the ``dest=`` line was not
+    written by it, so recovery raises rather than guess a target."""
+    from next_plaid_spark.streaming.curation import (_batch_dirs,
+                                                     _fold_tmp_path,
+                                                     _recover_fold)
+
+    root = str(tmp_path_factory.mktemp("foldnodest") / "state")
+    for i in range(2):
+        _write_ids(spark, os.path.join(root, f"b{i}"), 10 * i, 10 * i + 5)
+    tmp = _fold_tmp_path(root)
+    spark.read.parquet(*_batch_dirs(root)).write.parquet(tmp)
+    with open(os.path.join(tmp, "_FOLDED"), "w") as f:
+        f.write("b0\nb1")
+    with pytest.raises(ValueError, match="dest="):
+        _recover_fold(root)
 
 
 def test_curator_auto_vacuum_matches_unvacuumed(spark, tmp_path_factory):

@@ -69,10 +69,10 @@ def test_fold_sources_picks_generations_by_bytes(tmp_path):
     mkdir("g1", 200)
     mkdir("g3", 200)
     mkdir("g2", 300)
-    mkdir("b-1", 2000)               # legacy target counts as a generation
+    mkdir("g5", 2000)
     root = str(tmp_path)
     got = [os.path.basename(p) for p in _fold_sources(root, exclude_batch=5)]
-    # mass 150 → g1 (200 ≤ 300) → 350 → g3 → 550 → g2 → 850 → b-1
+    # mass 150 → g1 (200 ≤ 300) → 350 → g3 → 550 → g2 → 850 → g5
     # (2000 > 1700) settles, and so does g0
     assert got == ["b3", "b4", "g1", "g3", "g2"]
 
@@ -86,17 +86,27 @@ def test_fold_sources_picks_generations_by_bytes(tmp_path):
 # -- crash at the carry boundary ---------------------------------------------
 
 def verify_snapshot(spark, path: str) -> None:
-    """A snapshot's meta counts agree with its own files. PLAID: documents
-    and embeddings = doc_stats rows and Σ num_tokens. BM25: n_docs and
-    total_dl = doclens rows and Σ dl, and term_stats.df = postings per
-    term."""
+    """A snapshot's meta.json implies every component it commits exists,
+    and its counts agree with its own files. BM25: postings, doclens and
+    term_stats (positions iff with_positions); n_docs and total_dl =
+    doclens rows and Σ dl, and term_stats.df = postings per term. PLAID:
+    tokens_bucketed, doc_stats and centroids; documents and embeddings =
+    doc_stats rows and Σ num_tokens, and the centroid count is the
+    codebook size k."""
     with open(os.path.join(path, "meta.json")) as f:
         meta = json.load(f)
 
     def rd(name):
         return spark.read.parquet(os.path.join(path, name))
 
-    if "n_docs" in meta:
+    bm25 = "n_docs" in meta
+    want = ({"postings", "doclens", "term_stats"}
+            | ({"positions"} if meta["with_positions"] else set())
+            if bm25 else {"tokens_bucketed", "doc_stats", "centroids"})
+    dirs = {d for d in os.listdir(path)
+            if os.path.isdir(os.path.join(path, d))}
+    assert dirs == want, (path, sorted(dirs))
+    if bm25:
         n, s = rd("doclens").agg(F.count("*"), F.sum("dl")).first()
         assert (meta["n_docs"], meta["total_dl"]) == (n, s or 0)
         df = rd("postings").groupBy("term").agg(F.count("*").alias("df"))
@@ -106,6 +116,7 @@ def verify_snapshot(spark, path: str) -> None:
     else:
         n, s = rd("doc_stats").agg(F.count("*"), F.sum("num_tokens")).first()
         assert (meta["num_documents"], meta["num_embeddings"]) == (n, s or 0)
+        assert rd("centroids").count() == meta["k"]
 
 
 def _crash_carry(monkeypatch) -> list[int]:

@@ -46,9 +46,6 @@ def main() -> None:
     for rep_s, path in specs:
         replicas = int(rep_s)
         bm = BM25Index.load(spark, os.path.join(path, "bm25"))
-        if "max_sat" not in bm.term_stats.columns:
-            bm.save(os.path.join(path, "bm25"))
-            bm = BM25Index.load(spark, os.path.join(path, "bm25"))
 
         reps = spark.range(replicas).select(F.col("id").alias("rep"))
         docs = (

@@ -3,10 +3,8 @@
 VERDICT r11 item 6's "done" criterion: batch50 keyword-leg growth < x1.5
 for corpus x4 with the prune on (vs the x2.0 exhaustive growth SCALING
 recorded). Reuses CodeIndex artifacts already built by tools/
-probe_5x_build.py (pass their paths + replica counts), re-saving each
-index's BM25 sub-store first so term_stats carries the r12 ``max_sat``
-bound (indexes built before the prune landed lack it; the re-save derives
-it — the same path an incrementally-updated index takes).
+probe_5x_build.py (pass their paths + replica counts); every saved BM25
+store carries the ``max_sat`` bound the prune needs.
 
 Usage:
   python tools/probe_prune_scale.py 5:/tmp/probe5x_bX/index 20:/tmp/...
@@ -32,7 +30,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from next_plaid_spark import queries as q
-    from next_plaid_spark.operators.bm25 import BM25Index
     from next_plaid_spark.operators.code_index import CodeIndex
     from next_plaid_spark.plans.searcher import SearchParams
     from next_plaid_spark.session import get_spark
@@ -56,14 +53,6 @@ def main() -> None:
         with open(os.path.join(path, "meta.json")) as f:
             meta = json.load(f)
 
-        # upgrade the BM25 store in place: derive + persist max_sat
-        bm = BM25Index.load(spark, os.path.join(path, "bm25"))
-        if bm.term_stats is None or "max_sat" not in bm.term_stats.columns:
-            t0 = time.time()
-            bm.save(os.path.join(path, "bm25"))
-            print(json.dumps({"scale": f"{replicas}x",
-                              "bm25_resave_s": round(time.time() - t0, 2)}),
-                  flush=True)
         ci = CodeIndex(spark, path, meta)
 
         reps = spark.range(replicas).select(F.col("id").alias("rep"))
