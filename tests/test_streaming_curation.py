@@ -969,7 +969,7 @@ def test_sink_rejects_old_state_layout(spark, tmp_path, request, sink,
     holding parquet files directly, or a b-1 dir, would be silently
     ignored; construction raises instead of adopting it."""
     root = str(tmp_path / "root")
-    state = os.path.join(root, _STATE_DIR[sink]) if _STATE_DIR[sink] else root
+    state = os.path.join(root, _STATE_DIR[sink])
     rows = spark.createDataFrame([(1, "x")], "doc_id long, text string")
     rows.write.parquet(state if layout == "flat"
                        else os.path.join(state, "b-1"))
