@@ -204,6 +204,34 @@ def test_save_in_place_is_safe(spark, tmp_path_factory):
     assert debris == []
 
 
+def test_in_place_resave_instance_stays_usable(spark, tmp_path_factory):
+    """A LOADED index asked to re-save onto its own load path refuses
+    before touching the store, so the SAME instance keeps working: its
+    lazy frames still read intact part files, both search modes return
+    the pre-call rows, and no staging or .old debris is left behind."""
+    import os
+
+    tmp = tmp_path_factory.mktemp("bm25repoint")
+    docs = spark.createDataFrame(
+        [(0, "apple banana apple"), (1, "banana cherry apple"),
+         (2, "durian banana"), (3, "cherry cherry")], DOC_SCHEMA)
+    BM25Index.build(docs).save(str(tmp / "idx"))
+
+    loaded = BM25Index.load(spark, str(tmp / "idx"))
+    q = spark.createDataFrame([(0, "apple cherry")], Q_SCHEMA)
+    base = _rows(loaded.search(q, k=4, prune=False))
+
+    with pytest.raises(ValueError, match="loaded from"):
+        loaded.save(str(tmp / "idx"))      # in-place re-save is refused
+    assert _rows(loaded.search(q, k=4, prune=False)) == base  # still live
+    assert _rows(loaded.search(q, k=4, prune=True)) == base
+    assert loaded.doclens.count() == 4
+
+    debris = [d for d in os.listdir(tmp)
+              if ".tmp-save" in d or ".old-" in d]
+    assert debris == []
+
+
 def test_load_rejects_store_without_term_stats_or_total_dl(
         spark, tmp_path_factory):
     """A store missing term_stats/ or meta total_dl was written by an
