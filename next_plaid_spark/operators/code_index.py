@@ -150,22 +150,34 @@ class CodeIndex:
         from next_plaid_spark.plans.builder import IndexBuilder
 
         dim = dim or DEFAULT_DIM
+        # the parse runs once: build_call_graph reads its input three times
+        # (call edges, unit names, the join back), so an uncached input —
+        # the fresh build's mapInPandas parse — is cached here and released
+        # after the units/ write, as IndexBuilder.build does with its
+        # tokens; the update path's merged parse comes cached and stays
+        # the caller's to release
+        lvl = raw_units.storageLevel
+        own_cache = not (lvl.useMemory or lvl.useDisk)
+        if own_cache:
+            raw_units = raw_units.cache()
         # cached: with_unit_ids makes two passes over its input (per-file
         # counts + the id-attach join); without the cache each pass re-runs
-        # the call-graph aggregation — and in the fresh-build path the
-        # mapInPandas parse under it (r15, VERDICT r14 item 1)
+        # the call-graph aggregation (r15, VERDICT r14 item 1)
         units_cg = build_call_graph(raw_units).cache()
         units = build_embedding_text(with_unit_ids(units_cg))
         # file-hash-bucketed layout: one shuffle of the (metadata-sized)
         # unit table buys (a) parallel parquet encode out of the global-id
         # window's single partition and (b) delta-only rewrites in update()
         # — only buckets owning changed files are ever rewritten
-        (units.withColumn("ub", _units_bucket(F.col("file")))
-         .repartition(UNITS_BUCKETS, F.col("ub"))
+        (tiered.bucket_shuffle(
+            units.withColumn("ub", _units_bucket(F.col("file"))),
+            UNITS_BUCKETS, F.col("ub"))
          .write.partitionBy("ub").mode("overwrite")
          .parquet(os.path.join(path, "units")))
         state.write.mode("overwrite").parquet(os.path.join(path, "files"))
         units_cg.unpersist()
+        if own_cache:
+            raw_units.unpersist()
         units = spark.read.parquet(os.path.join(path, "units")).drop("ub")
 
         # the units artifact is often one file (unit ids come from a global
@@ -192,9 +204,13 @@ class CodeIndex:
 
         def _bm25_leg() -> None:
             spark.sparkContext.setJobDescription("ci-build: bm25")
-            BM25Index.build(units, id_col="unit_id", text_col="embed_text",
-                            tokenizer="identifier_aware").save(
-                os.path.join(path, "bm25"))
+            bm25 = BM25Index.build(units, id_col="unit_id",
+                                   text_col="embed_text",
+                                   tokenizer="identifier_aware")
+            bm25.save(os.path.join(path, "bm25"))
+            # the in-memory index's caches are spent once it is saved
+            for df in (bm25.postings, bm25.doclens, bm25.term_stats):
+                df.unpersist()
 
         from concurrent.futures import ThreadPoolExecutor
 
@@ -444,26 +460,42 @@ class CodeIndex:
           (U1-U4) with the existing codec — one fused bucket-aware snapshot
           hop (``update_index_delta``) that rewrites only the token buckets
           owning a delta doc and hardlinks the clean ones; BM25 stats are
-          re-aggregated from the merged doclens."""
+          re-aggregated from the merged doclens.
+
+        Every frame the update caches is released, and the calling
+        thread's job description restored, whether it returns or raises."""
+        if rebuild_threshold is None:
+            from next_plaid_spark.operators.update import REBUILD_THRESHOLD
+
+            rebuild_threshold = REBUILD_THRESHOLD
+        sc = self.spark.sparkContext
+        desc = sc.getLocalProperty("spark.job.description")
+        held: list[DataFrame] = []
+        try:
+            return self._update(new_files, out_path, rebuild_threshold, held)
+        finally:
+            for df in held:
+                df.unpersist()
+            sc.setLocalProperty("spark.job.description", desc)
+
+    def _update(self, new_files: DataFrame, out_path: str,
+                rebuild_threshold: int, held: list) -> "CodeIndex":
+        """``update``'s body; every frame it caches goes on ``held``."""
         from next_plaid_spark.operators.bm25 import BM25Index
         from next_plaid_spark.operators.code_parse import (
             build_call_graph,
             parse_code_units,
         )
         from next_plaid_spark.operators.colgrep import detect_changes, identifier_tokens
-        from next_plaid_spark.operators.update import (
-            REBUILD_THRESHOLD,
-            update_index_delta,
-        )
+        from next_plaid_spark.operators.update import update_index_delta
 
-        if rebuild_threshold is None:
-            rebuild_threshold = REBUILD_THRESHOLD
         spark = self.spark
         # labeled phases (guide §1.5) — the r14 profiles could not
         # attribute the update's stages without them
         spark.sparkContext.setJobDescription("ci-update: detect+parse+merge")
         new_state = file_state(new_files).cache()
         changes = detect_changes(self.files, new_state).cache()
+        held += [new_state, changes]
         gone_paths = changes.filter(
             F.col("change").isin("removed", "modified")).select("path")
         changed_paths = changes.filter(
@@ -482,20 +514,18 @@ class CodeIndex:
         # reused AND expensive to recompute)
         merged_raw = survivors.select(*_RAW_COLS).unionByName(
             new_raw.select(*_RAW_COLS)).cache()
+        held.append(merged_raw)
 
         # parse emits one row per unit, so the row count IS the unit count
         # ((file, line, name) is not guaranteed unique — one-line overloads)
         n_merged = merged_raw.count()
         if n_merged <= rebuild_threshold:
             # full rebuild keeps the stored bucket count
-            try:
-                return CodeIndex._build_from_units(
-                    spark, merged_raw, new_state, out_path,
-                    nbits=self.meta["nbits"], seed=self.meta["seed"],
-                    dim=self.meta["dim"],
-                    bucket_tokens=self.plaid.meta.n_buckets)
-            finally:
-                merged_raw.unpersist()
+            return CodeIndex._build_from_units(
+                spark, merged_raw, new_state, out_path,
+                nbits=self.meta["nbits"], seed=self.meta["seed"],
+                dim=self.meta["dim"],
+                bucket_tokens=self.plaid.meta.n_buckets)
 
         # -- incremental path ------------------------------------------------
         from next_plaid_spark.encoding import encode_tokens
@@ -526,6 +556,7 @@ class CodeIndex:
             (merged_o["file"] == old_ids["_f"]) & (merged_o["line"] == old_ids["_l"])
             & (merged_o["name"] == old_ids["_n"]) & (merged_o["_m"] == old_ids["_o"]),
             "left").drop("_f", "_l", "_n", "_o", "_m").cache()
+        held.append(joined)
         max_id = (old_units.agg(F.max("unit_id")).collect()[0][0] or 0)
         # fresh units take max_id + dense rank over the same global order —
         # computed distributed by with_unit_ids (per-file offsets + a
@@ -585,7 +616,7 @@ class CodeIndex:
             out_b = out_b.filter(F.col("ub").isin(*[int(b) for b in dirty]))
         else:
             out_b = out_b.filter(F.lit(False))
-        (out_b.repartition(max(len(dirty), 1), F.col("ub"))
+        (tiered.bucket_shuffle(out_b, max(len(dirty), 1), F.col("ub"))
          .write.partitionBy("ub").mode("overwrite").parquet(new_units_dir))
         for d in old_buckets:
             if int(d.split("=", 1)[1]) in dirty:
@@ -600,6 +631,7 @@ class CodeIndex:
         units_out = spark.read.parquet(new_units_dir).drop("ub")
         unchanged_ids = unchanged.select(
             F.col("unit_id").alias("doc_id")).cache()
+        held.append(unchanged_ids)
         reindex = units_out.join(
             unchanged_ids.withColumnRenamed("doc_id", "unit_id"),
             "unit_id", "left_anti")
@@ -661,11 +693,12 @@ class CodeIndex:
         # stats agg, and the postings/doclens/positions writes inside
         # save()); cached here so it runs once (r14 profile: ~4 × 5-6 s of
         # executor time per 2-file update). Built outside the leg closure
-        # so the post-legs cleanup can release it.
+        # so it can go on ``held``.
         toks_new = reindex.select(
             F.col("unit_id").cast("long").alias("doc_id"),
             F.posexplode(identifier_tokens(F.col("embed_text"))).alias(
                 "pos", "term")).cache()
+        held.append(toks_new)
 
         def _bm25_leg() -> None:
             # BM25 (r15, VERDICT r14 item 3): tiered-store delta instead of
@@ -705,11 +738,4 @@ class CodeIndex:
 
         tiered.write_marker(os.path.join(out_path, "meta.json"),
                             json.dumps(self.meta))
-        spark.sparkContext.setJobDescription(None)
-        merged_raw.unpersist()
-        joined.unpersist()
-        unchanged_ids.unpersist()
-        new_state.unpersist()
-        changes.unpersist()
-        toks_new.unpersist()
         return CodeIndex(spark, out_path, dict(self.meta))

@@ -337,9 +337,10 @@ def update_index_delta(
         # scheduling gaps back-fill with the other's tasks
         spark.sql(f"DROP TABLE IF EXISTS {bt_new}")
         (
-            # one partition per touched bucket → one new file per touched
-            # bucket (write_index's one-file-per-bucket write)
-            rows.repartition(max(len(touched), 1), bucket)
+            # every touched bucket's rows land in one write task → one new
+            # file per touched bucket (write_index's one-file-per-bucket
+            # write), at most one task per core
+            tiered.bucket_shuffle(rows, max(len(touched), 1), bucket)
             .write.mode("overwrite")
             .option("path", new_dir)
             .bucketBy(n, "doc_id")

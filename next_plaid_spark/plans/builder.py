@@ -15,8 +15,11 @@ seam *is* driver-coordinated map-reduce, and this builder follows it:
 Scale notes: steps 2-3 touch bounded samples regardless of corpus size; step
 4 is embarrassingly parallel (one GEMM per Arrow batch, centroids shipped
 once per executor); step 5's one all-data shuffle is the bucketed token
-write's (doc_id), which the doc_stats groupBy then reuses. No inverted
-file is written (B8): candidacy filters ``doc_stats.codes``.
+write's (doc_id): one file per bucket, written by at most one task per
+core. The doc_stats groupBy then reuses the bucket spec, and its per-doc
+rows are sized by their count (one file per ``tiered.ROWS_PER_FILE``
+docs), not by the bucket count. No inverted file is written (B8):
+candidacy filters ``doc_stats.codes``.
 Broadcast assignment holds to K≈1M (512 MB at dim=128 f32); past that,
 assignment becomes an LSH-bucketed join against a centroids table — hook
 left in assign_codes.

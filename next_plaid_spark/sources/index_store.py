@@ -5,10 +5,16 @@ One index = one directory of Parquet tables + a JSON sidecar, in one
 format:
 
     <path>/tokens_bucketed/  doc_id, token_idx, code, residual  (the
-                             corpus; a ``bucketBy(n, doc_id)`` table)
+                             corpus; a ``bucketBy(n, doc_id)`` table, one
+                             file per bucket)
     <path>/centroids/        code, vec                           (small)
     <path>/doc_stats/        doc_id, num_tokens, codes  (doclens + codes.npy
-                             analogs from one groupBy; readers column-prune)
+                             analogs from one groupBy; readers column-prune;
+                             one file per ``tiered.ROWS_PER_FILE`` docs)
+
+Each table is written at its own grain: the token table by bucket (every
+bucket's rows land in one write task, at most one task per core), the
+per-doc ``doc_stats`` by its row count, as every update hop sizes it.
     <path>/meta.json         k, dim, nbits, codec artifacts, counts, the
                              bucket table name + bucket count (written
                              last: the snapshot's commit marker)
@@ -229,12 +235,13 @@ def write_index(
         bt = bucket_table_name(path)
         spark.sql(f"DROP TABLE IF EXISTS {bt}")
         (
-            # repartition on the bucket column first: each task then writes
-            # exactly ONE file per bucket — the condition under which
-            # Spark's scan exposes the sortBy order to sort-merge joins
-            # (multiple files per bucket force a corpus re-sort above the
-            # scan), and it avoids the writers-x-buckets small-file blowup
-            tokens_coded.repartition(bucket_tokens, F.col("doc_id"))
+            # shuffle on the bucket column first: every bucket's rows then
+            # land in one task, which writes ONE file per bucket — the
+            # condition under which Spark's scan exposes the sortBy order
+            # to sort-merge joins (multiple files per bucket force a corpus
+            # re-sort above the scan), and it avoids the writers-x-buckets
+            # small-file blowup; one write task per core, not per bucket
+            tiered.bucket_shuffle(tokens_coded, bucket_tokens, F.col("doc_id"))
             .write.mode("overwrite")
             .option("path", os.path.join(path, "tokens_bucketed"))
             .bucketBy(bucket_tokens, "doc_id")
@@ -250,16 +257,22 @@ def write_index(
             cent_pool.shutdown()
 
     # B9 doclens + the per-doc distinct sorted codes (codes.npy analog) in
-    # ONE groupBy(doc_id) pass — no shuffle: the bucket spec satisfies the
-    # groupBy's distribution requirement; readers project just the column
-    # they need (Parquet pruning), so doclens consumers never touch the
-    # codes arrays
+    # ONE groupBy(doc_id) pass — no corpus shuffle: the bucket spec
+    # satisfies the groupBy's distribution requirement; readers project
+    # just the column they need (Parquet pruning), so doclens consumers
+    # never touch the codes arrays. The aggregate (one row per doc) is
+    # sized by its rows, like every update hop's write_doc_ranged: one
+    # file per ROWS_PER_FILE docs, not one per bucket. A round-robin
+    # repartition keeps the aggregate bucket-parallel (a coalesce would
+    # fold it into the writing tasks) and evaluates it once (a range
+    # repartition samples it first)
     (
         spark.table(bt).groupBy("doc_id")
         .agg(
             F.count("*").alias("num_tokens"),
             F.array_sort(F.collect_set("code")).alias("codes"),
         )
+        .repartition(max(1, meta.num_documents // tiered.ROWS_PER_FILE))
         .write.mode("overwrite").parquet(os.path.join(path, "doc_stats"))
     )
     tiered.write_marker(os.path.join(path, "meta.json"), meta.to_json())

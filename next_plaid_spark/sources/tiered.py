@@ -31,9 +31,22 @@ FOLD_RATIO = 2.0
 #: it every file counts as possibly holding a deleted doc
 GONE_CAP = 100_000
 
-#: merged rows per output file of one ``write_doc_ranged`` hop (one file is
-#: the tier; a corpus-sized fold splits so no one write task owns the store)
+#: rows per output file of one ``write_doc_ranged`` hop and of the build's
+#: ``doc_stats`` write (one file is the tier; a corpus-sized write splits so
+#: no one write task owns the store)
 ROWS_PER_FILE = 4_000_000
+
+
+def bucket_shuffle(df: DataFrame, n: int, col) -> DataFrame:
+    """``df`` hash-shuffled on ``col`` into ``n`` partitions, written by at
+    most one task per core. The shuffle puts every bucket's rows in exactly
+    one partition, so a ``bucketBy``/``partitionBy`` write gives each
+    bucket (or partition dir) one file; the coalesce only hands whole
+    partitions to fewer tasks, so that still holds, and it is a no-op once
+    cores ≥ ``n``."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    return df.repartition(n, col).coalesce(min(n, cores))
+
 
 def parquet_rows(path: str) -> int:
     """Row count from the parquet footer — a local metadata read

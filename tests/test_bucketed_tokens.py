@@ -27,6 +27,73 @@ def test_bucketed_tokens_skip_the_per_doc_shuffle(spark, tmp_path):
     assert bidx.meta.bucket_table and bidx.meta.n_buckets == 8
 
 
+def test_build_writes_each_table_at_its_grain(spark, tmp_path, monkeypatch):
+    """The build sizes doc_stats by its rows — ``max(1, n_docs //
+    ROWS_PER_FILE)`` files, as every update hop does — not by the bucket
+    count, with the same rows at any file count; and it keeps one token
+    file per non-empty bucket, each holding only its bucket's rows."""
+    import os
+    import re
+
+    from next_plaid_spark.sources import tiered
+
+    def data_files(d):
+        return sorted(f for f in os.listdir(d) if not f.startswith(("_", ".")))
+
+    def stats(idx):
+        return sorted((r.doc_id, r.num_tokens, tuple(r.codes))
+                      for r in idx._doc_stats.collect())
+
+    toks, _ = clustered_token_corpus(
+        spark, n_docs=200, tokens_per_doc=4, dim=8, n_clusters=8, seed=41
+    )
+    idx = IndexBuilder(spark, k=8, bucket_tokens=8).build(
+        toks, str(tmp_path / "one"))
+    assert len(data_files(str(tmp_path / "one" / "doc_stats"))) == 1
+
+    monkeypatch.setattr(tiered, "ROWS_PER_FILE", 50)
+    split = IndexBuilder(spark, k=8, bucket_tokens=8).build(
+        toks, str(tmp_path / "split"))
+    assert len(data_files(str(tmp_path / "split" / "doc_stats"))) == 200 // 50
+    assert stats(split) == stats(idx)
+
+    buckets = {r.b for r in toks.select(
+        F.pmod(F.hash("doc_id"), F.lit(8)).alias("b")).distinct().collect()}
+    tok_dir = str(tmp_path / "one" / "tokens_bucketed")
+    files = data_files(tok_dir)
+    by_bucket = {int(re.search(r"_(\d+)\.c\d+", f).group(1)): f
+                 for f in files}
+    assert len(files) == len(by_bucket) and set(by_bucket) == buckets
+    for b, f in by_bucket.items():
+        got = {r.b for r in spark.read.parquet(os.path.join(tok_dir, f))
+               .select(F.pmod(F.hash("doc_id"), F.lit(8)).alias("b"))
+               .distinct().collect()}
+        assert got == {b}
+
+
+def test_bucket_shuffle_one_file_per_bucket_one_task_per_core(spark,
+                                                              tmp_path):
+    """``tiered.bucket_shuffle`` writes in at most one task per core, and a
+    partitioned write through it still gives each partition dir one
+    file."""
+    import os
+
+    from next_plaid_spark.sources import tiered
+
+    n = 16
+    cores = spark.sparkContext.defaultParallelism
+    df = spark.range(400).withColumn("b", F.col("id") % n)
+    shuffled = tiered.bucket_shuffle(df, n, F.col("b"))
+    assert shuffled.rdd.getNumPartitions() == min(n, cores)
+    out = str(tmp_path / "parts")
+    shuffled.write.partitionBy("b").parquet(out)
+    dirs = [d for d in os.listdir(out) if d.startswith("b=")]
+    assert len(dirs) == n
+    for d in dirs:
+        assert len([f for f in os.listdir(os.path.join(out, d))
+                    if not f.startswith(("_", "."))]) == 1
+
+
 def test_bucketed_index_reloads_without_catalog(spark, tmp_path):
     """A session whose catalog lost the table (fresh cluster) must still
     read the bucketed FILES as plain parquet."""
@@ -288,13 +355,13 @@ def test_tiered_appends_spare_settled_files_and_bound_file_count(
     assert len(final_files) <= 12
 
     # doc_stats gets the same economy (r14): the base build's stats
-    # files all survive the FIRST append by inode (each holds far more
-    # rows than 2x the 12-doc batch, so no tier fold touches them; no
-    # delete fires here), and by chain end at least one fold has fired
-    # so the file count sits below the no-fold projection. (Unlike the
-    # per-bucket token files, base stats files are small enough that the
-    # accumulated append mass may LEGITIMATELY fold them later in the
-    # chain — that is the O(log) rewrite schedule, not a defect.)
+    # file (one, sized by its 300 rows) survives the FIRST append by
+    # inode (it holds far more rows than 2x the 12-doc batch, so no tier
+    # fold touches it; no delete fires here), and by chain end at least
+    # one fold has fired so the file count sits below the no-fold
+    # projection. (The accumulated append mass may LEGITIMATELY fold the
+    # base file later in the chain — that is the O(log) rewrite
+    # schedule, not a defect.)
     sd_dir = lambda i: str(tmp_path / f"v{i}" / "doc_stats")  # noqa: E731
     sd0 = files(sd_dir(0))
     assert set(sd0.values()) <= set(files(sd_dir(1)).values())
@@ -310,8 +377,8 @@ def test_tiered_appends_spare_settled_files_and_bound_file_count(
 
 def test_delete_folds_only_range_hit_stats_files(spark, tmp_path):
     """r14 doc_stats delete folds are pruned by parquet footer doc_id
-    min/max: deleting base-range docs folds the base build's stats files
-    (hash-partitioned, so their ranges span everything) but every
+    min/max: deleting base-range docs folds the base build's stats file
+    (one file of every base doc, so its range spans them all) but every
     append-tier stats file whose doc_id range is disjoint from the
     deleted ids survives by inode — a takedown must not rewrite the
     whole stats history. Values stay exact (doclens vs the expected
@@ -330,10 +397,10 @@ def test_delete_folds_only_range_hit_stats_files(spark, tmp_path):
     idx = IndexBuilder(spark, k=8, bucket_tokens=2).build(
         toks.filter(F.col("doc_id") < 300), str(tmp_path / "v0"))
     # one append: its 50-doc stats file has a [300, 349] footer range,
-    # disjoint from the base's hash-partitioned [0, 299]-spanning files
-    # (the base files are too big for the 50-doc tier fold, so all three
-    # coexist in v1 — a later same-size fold cascade would merge them,
-    # which is the legitimate O(log) schedule, just not this scenario)
+    # disjoint from the base's [0, 299]-spanning file (the base file is
+    # too big for the 50-doc tier fold, so both coexist in v1 — a later
+    # same-size fold cascade would merge them, which is the legitimate
+    # O(log) schedule, just not this scenario)
     idx = update_index(
         spark, idx,
         toks.filter(F.col("doc_id") >= 300), str(tmp_path / "v1"))

@@ -8,6 +8,8 @@ files on update.
 
 from __future__ import annotations
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -468,6 +470,59 @@ def test_update_rejects_flat_units_snapshot(spark, idx, files_v2,
         flat.update(files_v2, str(base / "new"), rebuild_threshold=0)
 
 
+@contextlib.contextmanager
+def _session_state_kept(spark):
+    """Assert the block leaves no RDD persisted that was not persisted
+    before it, and the calling thread's job description as it found it (a
+    caller's own description included). The check compares RDD ids, not
+    the count: the context cleaner may drop an earlier test's unreachable
+    RDD while the block runs."""
+    sc = spark.sparkContext
+
+    def persisted():
+        return set(sc._jsc.getPersistentRDDs().keys())
+
+    sc.setJobDescription("caller")
+    try:
+        before = persisted()
+        yield
+        assert persisted() - before == set()
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+
+
+def test_update_rebuild_releases_caches(spark, idx, files_v2,
+                                        tmp_path_factory):
+    """The small-corpus rebuild branch of update releases what it cached
+    (the new file state, the change set, the merged parse, and the
+    build's own caches) and restores the caller's job description."""
+    out = str(tmp_path_factory.mktemp("ci_rebuild_caches") / "v2")
+    with _session_state_kept(spark):
+        upd = idx.update(files_v2, out)
+    assert upd.plaid.meta.num_documents == upd.units.count()
+
+
+def test_build_writes_one_file_per_units_bucket(spark, idx):
+    """Each ``units/ub=*`` dir of a build holds one file, and the PLAID
+    snapshot's doc_stats is sized by its rows (one file below
+    ``ROWS_PER_FILE`` docs), not by the token bucket count."""
+    import glob
+    import os
+
+    from next_plaid_spark.sources import tiered
+
+    def data_files(d):
+        return [f for f in os.listdir(d) if not f.startswith(("_", "."))]
+
+    ub_dirs = glob.glob(os.path.join(idx.path, "units", "ub=*"))
+    assert ub_dirs
+    assert all(len(data_files(d)) == 1 for d in ub_dirs)
+    n_docs = idx.plaid.meta.num_documents
+    assert len(data_files(os.path.join(idx.path, "plaid", "doc_stats"))) == \
+        max(1, n_docs // tiered.ROWS_PER_FILE)
+
+
 @pytest.fixture(scope="module")
 def clean_v2(spark, idx, files_v2, tmp_path_factory):
     """An uncrashed incremental update of ``idx`` to the v2 tree."""
@@ -482,7 +537,9 @@ def test_update_crash_keeps_old_snapshot(spark, idx, files_v2, clean_v2,
     """A crash inside CodeIndex.update — in the BM25 leg, or at the code
     index's own commit marker after both legs finished — leaves no
     ``<out>/meta.json``; the old snapshot still loads and serves the same
-    rows, and a retry into a fresh dir equals an uncrashed update."""
+    rows, and a retry into a fresh dir equals an uncrashed update. The
+    failed call releases every frame it cached and restores the caller's
+    job description."""
     import os
 
     from next_plaid_spark.operators.bm25 import BM25Index
@@ -514,8 +571,9 @@ def test_update_crash_keeps_old_snapshot(spark, idx, files_v2, clean_v2,
             real(path, text)
 
         monkeypatch.setattr(tiered, "write_marker", marker)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        idx.update(files_v2, out, rebuild_threshold=0)
+    with _session_state_kept(spark):
+        with pytest.raises(RuntimeError, match="injected crash"):
+            idx.update(files_v2, out, rebuild_threshold=0)
     monkeypatch.undo()
 
     assert not os.path.exists(os.path.join(out, "meta.json"))
