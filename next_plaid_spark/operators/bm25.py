@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from next_plaid_spark.functions.text import tokenize_trigram, tokenize_unicode61
-from next_plaid_spark.session import local_df
+from next_plaid_spark.session import local_df, run_concurrently
 from next_plaid_spark.sources import tiered
 
 K1 = 1.2
@@ -185,7 +185,9 @@ class BM25Index:
         (e.g. ``CodeIndex``).
 
         Postings and positions are laid out range-partitioned by DOC_ID
-        across files with rows sorted by term inside each file.
+        across files with rows sorted by term inside each file. Every
+        component has one file per ``tiered.ROWS_PER_FILE`` rows, so the
+        layout depends on the store's size, not on the session's cores.
         Term-filtered scans (keyword join, phrase search) skip row groups
         via the per-row-group term min/max stats — the IO-skipping
         granularity is the row group either way, so the posting-list
@@ -253,37 +255,38 @@ class BM25Index:
         # them concurrently so each job's straggler tail back-fills with the
         # others' tasks (guide §2.6 overlap-independent-jobs; measured r14:
         # the save wall is job-dispatch-bound, not compute-bound, at any
-        # realistic index size). Job descriptions are thread-local, so each
-        # thread labels its own jobs; term_stats below waits for postings +
+        # realistic index size). Term_stats below waits for postings +
         # doclens (it derives from the staged files) but not positions.
+        # Each component is sized by its rows (tiered.n_files), bounded by
+        # totals the index holds: postings, positions and term_stats rows
+        # ≤ total_dl, doclens rows = n_docs. At one file the range
+        # partition is a single-partition shuffle with no sampling job.
+        n_token_files = tiered.n_files(self.total_dl)
+
         def _write_postings() -> None:
-            (self.postings.repartitionByRange(F.col("doc_id"))
+            (self.postings.repartitionByRange(n_token_files, F.col("doc_id"))
              .sortWithinPartitions("term", "doc_id")
              .write.mode("overwrite").parquet(os.path.join(path, "postings")))
             _heartbeat()
 
         def _write_doclens() -> None:
-            (self.doclens.repartitionByRange(F.col("doc_id"))
+            (self.doclens.repartitionByRange(tiered.n_files(self.n_docs),
+                                             F.col("doc_id"))
              .sortWithinPartitions("doc_id")
              .write.mode("overwrite").parquet(os.path.join(path, "doclens")))
             _heartbeat()
 
         def _write_positions() -> None:
-            (self.positions.repartitionByRange(F.col("doc_id"))
+            (self.positions.repartitionByRange(n_token_files, F.col("doc_id"))
              .sortWithinPartitions("term", "doc_id", "pos")
              .write.mode("overwrite").parquet(
                  os.path.join(path, "positions")))
             _heartbeat()
 
-        from concurrent.futures import ThreadPoolExecutor
-
         writers = [_write_postings, _write_doclens]
         if self.positions is not None:
             writers.append(_write_positions)
-        with ThreadPoolExecutor(len(writers)) as ex:
-            futs = [ex.submit(w) for w in writers]
-            for f in futs:  # re-raise the first failure; others complete
-                f.result()
+        run_concurrently(self.postings.sparkSession, *writers)
         # persist per-term stats (df + the max_sat prune bound) so a
         # loaded index never re-aggregates the postings per query. A built
         # index whose max_sat was never derived joins its df with the
@@ -303,7 +306,7 @@ class BM25Index:
                 .agg(F.max(_sat_expr(self.avgdl)).alias("max_sat")),
                 "term",
             )
-        (df_src.repartitionByRange(F.col("term"))
+        (df_src.repartitionByRange(n_token_files, F.col("term"))
          .sortWithinPartitions("term")
          .write.mode("overwrite").parquet(os.path.join(path, "term_stats")))
         _heartbeat()
@@ -397,8 +400,6 @@ class BM25Index:
 
         # the component writes are independent jobs over disjoint dirs —
         # overlap them (guide §2.6), same as save()
-        from concurrent.futures import ThreadPoolExecutor
-
         writers = [
             lambda: _write_component(
                 "postings", post_new.select("term", "doc_id", "tf"),
@@ -414,9 +415,7 @@ class BM25Index:
             writers.append(lambda: _write_component(
                 "positions", pos_new.select("term", "doc_id", "pos"),
                 ("term", "doc_id", "pos"), new_dl_sum))
-        with ThreadPoolExecutor(len(writers)) as ex:
-            for fut in [ex.submit(w) for w in writers]:
-                fut.result()
+        run_concurrently(spark, *writers)
 
         # -- meta by exact integer arithmetic. All of a gone doc's rows
         # live in files the doclens fold rewrote, so the gone mass is one
@@ -446,7 +445,7 @@ class BM25Index:
          .groupBy("term")
          .agg(F.count("*").alias("df"),
               F.max(_sat_expr(avgdl)).alias("max_sat"))
-         .repartitionByRange(F.col("term"))
+         .repartitionByRange(tiered.n_files(total_dl), F.col("term"))
          .sortWithinPartitions("term")
          .write.mode("overwrite")
          .parquet(os.path.join(out_path, "term_stats")))

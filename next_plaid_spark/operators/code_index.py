@@ -48,7 +48,7 @@ from next_plaid_spark.operators.colgrep import (
     apply_ranking,
     build_embedding_text,
 )
-from next_plaid_spark.session import local_df
+from next_plaid_spark.session import local_df, run_concurrently
 from next_plaid_spark.sources import tiered
 
 # reference query_length for code search (the gate oracles slice the same 16)
@@ -195,7 +195,8 @@ class CodeIndex:
         # the same written units parquet, each a chain of bounded jobs that
         # underfills the cluster between its shuffles — run them
         # concurrently so one leg's scheduling gaps back-fill with the
-        # other's tasks (guide §2.6; job descriptions are thread-local)
+        # other's tasks (guide §2.6; each leg runs in the caller's job group
+        # under its own description)
         def _plaid_leg() -> None:
             spark.sparkContext.setJobDescription("ci-build: plaid")
             IndexBuilder(spark, nbits=nbits, seed=seed,
@@ -212,12 +213,7 @@ class CodeIndex:
             for df in (bm25.postings, bm25.doclens, bm25.term_stats):
                 df.unpersist()
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(2) as ex:
-            futs = [ex.submit(_plaid_leg), ex.submit(_bm25_leg)]
-            for fut in futs:
-                fut.result()
+        run_concurrently(spark, _plaid_leg, _bm25_leg)
 
         meta = {"dim": dim, "doc_max_tokens": DOC_MAX_TOKENS,
                 "query_max_tokens": CODE_QUERY_MAX_TOKENS,
@@ -364,11 +360,7 @@ class CodeIndex:
         # "materialization"). Values are bit-identical: collect/local_df
         # round-trips doubles and longs exactly, and every downstream
         # window orders or sort-folds deterministically.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(2) as ex:
-            sem_fut, kw_fut = ex.submit(_sem_leg), ex.submit(_kw_leg)
-            sem_rows, kw_rows = sem_fut.result(), kw_fut.result()
+        sem_rows, kw_rows = run_concurrently(self.spark, _sem_leg, _kw_leg)
         # the collected rows are self-contained — release the funnel's
         # per-query caches NOW instead of at the next search() call
         if self._searcher is not None:
@@ -422,18 +414,14 @@ class CodeIndex:
 
         # overlap the two legs' construction-time driver round-trips —
         # same §2.6 treatment as single-query search above
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(2) as ex:
-            sem_fut = ex.submit(
-                lambda: self._searcher.search(
-                    qt, subset=subset, params=p).select(
-                    "query_id", "doc_id", "score"))
-            kw_fut = ex.submit(
-                lambda: self.bm25.search(
-                    queries, k=fetch_k, subset=subset).select(
-                    "query_id", "doc_id", "score"))
-            sem, kw = sem_fut.result(), kw_fut.result()
+        sem, kw = run_concurrently(
+            self.spark,
+            lambda: self._searcher.search(
+                qt, subset=subset, params=p).select(
+                "query_id", "doc_id", "score"),
+            lambda: self.bm25.search(
+                queries, k=fetch_k, subset=subset).select(
+                "query_id", "doc_id", "score"))
         fused = hybrid_search(
             sem, kw, mode="relative_score", alpha=alpha, k=fetch_k
         ).select("query_id", F.col("doc_id").alias("unit_id"), "score")
@@ -520,12 +508,13 @@ class CodeIndex:
         # ((file, line, name) is not guaranteed unique — one-line overloads)
         n_merged = merged_raw.count()
         if n_merged <= rebuild_threshold:
-            # full rebuild keeps the stored bucket count
+            # full rebuild with the bucket cap the index was built with (not
+            # the stored bucket count): exactly a fresh build's layout
             return CodeIndex._build_from_units(
                 spark, merged_raw, new_state, out_path,
                 nbits=self.meta["nbits"], seed=self.meta["seed"],
                 dim=self.meta["dim"],
-                bucket_tokens=self.plaid.meta.n_buckets)
+                bucket_tokens=self.meta["bucket_tokens"])
 
         # -- incremental path ------------------------------------------------
         from next_plaid_spark.encoding import encode_tokens
@@ -673,7 +662,8 @@ class CodeIndex:
         # and the old stores) and each is a cascade of bounded jobs whose
         # wall is dispatch-dominated at delta sizes — run them concurrently
         # so one leg's scheduling gaps back-fill with the other's tasks
-        # (guide §2.6; labels are thread-local, so each leg keeps its own)
+        # (guide §2.6; each leg runs in the caller's job group under its
+        # own description)
         def _plaid_leg() -> None:
             # PLAID: delete everything not kept verbatim, append re-encoded
             spark.sparkContext.setJobDescription("ci-update: plaid delta")
@@ -729,12 +719,7 @@ class CodeIndex:
                 post_new=post_new, dl_new=dl_new, pos_new=pos_new,
                 new_counts=(int(_m.np), int(_m.nd), int(_m.sdl)))
 
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(2) as ex:
-            futs = [ex.submit(_plaid_leg), ex.submit(_bm25_leg)]
-            for fut in futs:
-                fut.result()
+        run_concurrently(spark, _plaid_leg, _bm25_leg)
 
         tiered.write_marker(os.path.join(out_path, "meta.json"),
                             json.dumps(self.meta))

@@ -34,7 +34,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from next_plaid_spark.session import local_df
+from next_plaid_spark.session import local_df, run_concurrently
 from next_plaid_spark.operators.codec import assign_and_quantize
 from next_plaid_spark.operators.kmeans import lloyds
 from next_plaid_spark.sources.index_store import IndexMeta, PlaidIndex
@@ -138,11 +138,12 @@ def update_index(
         n_new_docs = new_doc_tokens.select("doc_id").distinct().count()
         if index.meta.num_documents + n_new_docs <= rebuild_threshold:
             # path (a): small corpus → rebuild everything with fresh k-means
+            # at the default bucket cap, so the rebuild has exactly a fresh
+            # build's layout (its bucket count follows its token count)
             from next_plaid_spark.plans.builder import IndexBuilder
 
             allt = full_rebuild_tokens.unionByName(new_doc_tokens)
-            return IndexBuilder(spark, nbits=index.meta.nbits, seed=seed,
-                                bucket_tokens=index.meta.n_buckets).build(
+            return IndexBuilder(spark, nbits=index.meta.nbits, seed=seed).build(
                 allt, out_path
             )
         return update_index_delta(spark, index, None, new_doc_tokens,
@@ -370,11 +371,7 @@ def update_index_delta(
         # write inside this leg
         write_centroids(spark, out_path, centroids)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(2) as ex:
-        for fut in [ex.submit(_tokens_leg), ex.submit(_stats_leg)]:
-            fut.result()
+    run_concurrently(spark, _tokens_leg, _stats_leg)
 
     # per-batch caches must not outlive the batch (a long-lived stream
     # would otherwise accumulate one cached frame set per ingest batch)

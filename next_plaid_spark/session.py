@@ -92,3 +92,22 @@ def local_df(spark: SparkSession, rows, schema):
 
     return spark.createDataFrame(pd.DataFrame(rows), schema)
 
+
+def run_concurrently(spark: SparkSession, *fns):
+    """Run each of ``fns`` on its own thread and return their results in
+    order; once every call has finished, the first failure re-raises.
+
+    Independent Spark jobs submitted this way back-fill each other's
+    scheduling gaps. Each thread starts with a copy of the caller's Spark
+    local properties (job group, description, scheduler pool), so its jobs
+    are attributed to the caller's job group; a thread that sets its own
+    description changes only its copy."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+
+    with ThreadPoolExecutor(len(fns)) as ex:
+        # one wrap per call: each wrap clones the properties once, and a
+        # clone shared by two threads would share their descriptions too
+        futs = [ex.submit(inheritable_thread_target(spark)(f)) for f in fns]
+        return [f.result() for f in futs]

@@ -11,13 +11,17 @@ format:
     <path>/doc_stats/        doc_id, num_tokens, codes  (doclens + codes.npy
                              analogs from one groupBy; readers column-prune;
                              one file per ``tiered.ROWS_PER_FILE`` docs)
-
-Each table is written at its own grain: the token table by bucket (every
-bucket's rows land in one write task, at most one task per core), the
-per-doc ``doc_stats`` by its row count, as every update hop sizes it.
     <path>/meta.json         k, dim, nbits, codec artifacts, counts, the
                              bucket table name + bucket count (written
                              last: the snapshot's commit marker)
+
+Each table is sized by its rows. A build's token table has one bucket per
+``tiered.TOKENS_PER_BUCKET`` tokens, ``bucket_tokens`` at most (so a
+corpus under 131,072 tokens has one bucket, and the default cap of 32
+binds from 32·65,536 tokens up); every bucket's rows land in one write
+task, at most one task per core. The per-doc ``doc_stats`` has one file per
+``tiered.ROWS_PER_FILE`` docs, as every update hop sizes it. Updates keep
+the snapshot's bucket count (``meta.n_buckets``).
 
 The token files are registered as a session catalog table, so per-doc
 groupBys/joins read the bucket spec instead of shuffling the corpus; a
@@ -46,7 +50,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from next_plaid_spark.session import local_df
+from next_plaid_spark.session import local_df, run_concurrently
 from next_plaid_spark.operators.codec import CodecArtifacts
 from next_plaid_spark.sources import tiered
 
@@ -213,17 +217,13 @@ def write_index(
     bucket_tokens: int = 32,
 ) -> PlaidIndex:
     os.makedirs(path, exist_ok=True)
-    from concurrent.futures import ThreadPoolExecutor
+    # the token table is sized by its rows: one bucket per
+    # TOKENS_PER_BUCKET tokens, ``bucket_tokens`` at most
+    n_buckets = min(bucket_tokens, max(
+        1, meta.num_embeddings // tiered.TOKENS_PER_BUCKET))
+    bt = bucket_table_name(path)
 
-    # centroids are a driver-local table with no dependency on the token
-    # write — overlap its (dispatch-dominated) job with the corpus-sized
-    # tokens write below (guide §2.6 overlap-independent-jobs)
-    cent_pool = ThreadPoolExecutor(1)
-    cent_fut = cent_pool.submit(write_centroids, spark, path, centroids)
-    # try/finally (r15, ADVICE): if the token write below raises, the
-    # centroids future must still be joined — otherwise its own exception
-    # is swallowed and the non-daemon pool thread leaks past the failure
-    try:
+    def _write_tokens() -> None:
         # doc_id-bucketed catalog table: ONE shuffle at write time buys
         # shuffle-free groupBy(doc_id)/join(doc_id) for every downstream
         # consumer (doc_stats build below, the rerank kernel's per-doc
@@ -232,7 +232,6 @@ def write_index(
         # catalog, so other sessions fall back to plain parquet reads of
         # the same files unless a persistent metastore carries it. An
         # in-place rebuild drops and overwrites both.
-        bt = bucket_table_name(path)
         spark.sql(f"DROP TABLE IF EXISTS {bt}")
         (
             # shuffle on the bucket column first: every bucket's rows then
@@ -241,20 +240,21 @@ def write_index(
             # to sort-merge joins (multiple files per bucket force a corpus
             # re-sort above the scan), and it avoids the writers-x-buckets
             # small-file blowup; one write task per core, not per bucket
-            tiered.bucket_shuffle(tokens_coded, bucket_tokens, F.col("doc_id"))
+            tiered.bucket_shuffle(tokens_coded, n_buckets, F.col("doc_id"))
             .write.mode("overwrite")
             .option("path", os.path.join(path, "tokens_bucketed"))
-            .bucketBy(bucket_tokens, "doc_id")
+            .bucketBy(n_buckets, "doc_id")
             .sortBy("doc_id")
             .saveAsTable(bt)
         )
-        meta.bucket_table = bt
-        meta.n_buckets = bucket_tokens
-    finally:
-        try:
-            cent_fut.result()
-        finally:
-            cent_pool.shutdown()
+
+    # centroids are a driver-local table with no dependency on the token
+    # write — overlap its (dispatch-dominated) job with the corpus-sized
+    # tokens write (guide §2.6 overlap-independent-jobs)
+    run_concurrently(spark, _write_tokens,
+                     lambda: write_centroids(spark, path, centroids))
+    meta.bucket_table = bt
+    meta.n_buckets = n_buckets
 
     # B9 doclens + the per-doc distinct sorted codes (codes.npy analog) in
     # ONE groupBy(doc_id) pass — no corpus shuffle: the bucket spec
@@ -272,7 +272,7 @@ def write_index(
             F.count("*").alias("num_tokens"),
             F.array_sort(F.collect_set("code")).alias("codes"),
         )
-        .repartition(max(1, meta.num_documents // tiered.ROWS_PER_FILE))
+        .repartition(tiered.n_files(meta.num_documents))
         .write.mode("overwrite").parquet(os.path.join(path, "doc_stats"))
     )
     tiered.write_marker(os.path.join(path, "meta.json"), meta.to_json())

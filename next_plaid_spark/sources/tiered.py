@@ -31,10 +31,21 @@ FOLD_RATIO = 2.0
 #: it every file counts as possibly holding a deleted doc
 GONE_CAP = 100_000
 
-#: rows per output file of one ``write_doc_ranged`` hop and of the build's
-#: ``doc_stats`` write (one file is the tier; a corpus-sized write splits so
-#: no one write task owns the store)
+#: rows per output file of one ``write_doc_ranged`` hop, of the build's
+#: ``doc_stats`` write and of every BM25 store component (one file is the
+#: tier; a corpus-sized write splits so no one write task owns the store)
 ROWS_PER_FILE = 4_000_000
+
+#: tokens per bucket of a PLAID build's token table: ``write_index`` writes
+#: ``min(bucket_tokens, max(1, num_embeddings // TOKENS_PER_BUCKET))``
+#: buckets, so the default cap of 32 binds from about 2.1M tokens up
+TOKENS_PER_BUCKET = 65_536
+
+
+def n_files(rows: int) -> int:
+    """Output files of a write of ``rows`` rows: one per
+    ``ROWS_PER_FILE``, at least one."""
+    return max(1, rows // ROWS_PER_FILE)
 
 
 def bucket_shuffle(df: DataFrame, n: int, col) -> DataFrame:
@@ -165,7 +176,7 @@ def write_doc_ranged(old_dir: str, new_dir: str, new_rows: DataFrame,
             kept = kept.join(gone, "doc_id", "left_anti")
         merged = kept.select(*new_rows.columns).unionByName(new_rows)
     n_merged = mass + sum(rows for p, rows, _mm in files if p in folded)
-    merged = merged.coalesce(max(1, n_merged // ROWS_PER_FILE))
+    merged = merged.coalesce(n_files(n_merged))
     if sort_cols:
         merged = merged.sortWithinPartitions(*sort_cols)
     merged.write.mode("overwrite").parquet(new_dir)

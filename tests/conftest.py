@@ -30,3 +30,13 @@ def documents(spark, sf_dir):
 @pytest.fixture(scope="session")
 def embeddings(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+
+
+@pytest.fixture
+def bucket_cap_binds(monkeypatch):
+    """A build sizes its token table at one bucket per token, so a test
+    corpus of at least ``bucket_tokens`` tokens gets exactly that many
+    buckets (the layout a corpus of 32·65,536 tokens or more gets)."""
+    from next_plaid_spark.sources import tiered
+
+    monkeypatch.setattr(tiered, "TOKENS_PER_BUCKET", 1)

@@ -3,11 +3,15 @@ groupBys/joins read the bucket spec instead of shuffling the corpus."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from next_plaid_spark.encoding import clustered_token_corpus
 from next_plaid_spark.plans.builder import IndexBuilder
 from next_plaid_spark.plans.searcher import BatchSearcher, SearchParams
+
+# the layout tests below need several buckets from small corpora
+pytestmark = pytest.mark.usefixtures("bucket_cap_binds")
 
 
 def _plan(df) -> str:
@@ -288,7 +292,9 @@ def test_update_index_delta_matches_two_step(spark, tmp_path):
 def test_full_rebuild_path_keeps_bucketed_layout(spark, tmp_path):
     """update_index path (a) (corpus <= rebuild_threshold with raw tokens
     provided) must rebuild a bucketed index BUCKETED — the layout is the
-    search contract, not a per-snapshot accident."""
+    search contract, not a per-snapshot accident — with a fresh build's
+    bucket count: the default cap over its own tokens, not the old
+    snapshot's count."""
     from next_plaid_spark.operators.update import update_index
 
     toks, _ = clustered_token_corpus(
@@ -302,7 +308,7 @@ def test_full_rebuild_path_keeps_bucketed_layout(spark, tmp_path):
     rebuilt = update_index(spark, bidx, new, str(tmp_path / "b1"),
                            full_rebuild_tokens=old)
     assert rebuilt.meta.num_documents == 60
-    assert rebuilt.meta.bucket_table and rebuilt.meta.n_buckets == 4
+    assert rebuilt.meta.bucket_table and rebuilt.meta.n_buckets == 32
     assert "Exchange" not in _plan(
         rebuilt.tokens.groupBy("doc_id").agg(F.count("*").alias("n"))
     )

@@ -400,10 +400,11 @@ def test_file_state_change_detection(spark, files_v1, files_v2):
 
 
 def test_update_rebuild_preserves_bucketed_layout(spark, files_v1, files_v2,
-                                                  tmp_path_factory):
-    """An update()-triggered full rebuild keeps the bucket count the code
+                                                  tmp_path_factory,
+                                                  bucket_cap_binds):
+    """An update()-triggered full rebuild keeps the bucket cap the code
     index was built with, and its search results equal a fresh build's
-    at the default bucket count (results do not depend on it)."""
+    at the default bucket cap (results do not depend on it)."""
     base = tmp_path_factory.mktemp("code_index_layout")
     idx_b = CodeIndex.build(files_v1, str(base / "v1"), bucket_tokens=8)
     assert idx_b.plaid.meta.n_buckets == 8
@@ -530,16 +531,17 @@ def clean_v2(spark, idx, files_v2, tmp_path_factory):
     return idx.update(files_v2, out, rebuild_threshold=0)
 
 
-@pytest.mark.parametrize("crash_at", ["bm25_leg", "marker"])
+@pytest.mark.parametrize("crash_at", ["units_write", "bm25_leg", "marker"])
 def test_update_crash_keeps_old_snapshot(spark, idx, files_v2, clean_v2,
                                          tmp_path_factory, monkeypatch,
                                          crash_at):
-    """A crash inside CodeIndex.update — in the BM25 leg, or at the code
-    index's own commit marker after both legs finished — leaves no
-    ``<out>/meta.json``; the old snapshot still loads and serves the same
-    rows, and a retry into a fresh dir equals an uncrashed update. The
-    failed call releases every frame it cached and restores the caller's
-    job description."""
+    """A crash inside CodeIndex.update — in its ``units/`` write (after
+    the dirty buckets are written, while the clean ones are being linked
+    forward), in the BM25 leg, or at the code index's own commit marker
+    after both legs finished — leaves no ``<out>/meta.json``; the old
+    snapshot still loads and serves the same rows, and a retry into a
+    fresh dir equals an uncrashed update. The failed call releases every
+    frame it cached and restores the caller's job description."""
     import os
 
     from next_plaid_spark.operators.bm25 import BM25Index
@@ -560,7 +562,16 @@ def test_update_crash_keeps_old_snapshot(spark, idx, files_v2, clean_v2,
     def crash(*_a, **_k):
         raise RuntimeError("injected crash")
 
-    if crash_at == "bm25_leg":
+    if crash_at == "units_write":
+        real_carry = tiered.carry
+
+        def carry(paths, dst_dir):
+            if dst_dir.startswith(os.path.join(out, "units")):
+                crash()
+            real_carry(paths, dst_dir)
+
+        monkeypatch.setattr(tiered, "carry", carry)
+    elif crash_at == "bm25_leg":
         monkeypatch.setattr(BM25Index, "save_delta", crash)
     else:
         real = tiered.write_marker
@@ -577,8 +588,32 @@ def test_update_crash_keeps_old_snapshot(spark, idx, files_v2, clean_v2,
     monkeypatch.undo()
 
     assert not os.path.exists(os.path.join(out, "meta.json"))
+    if crash_at == "units_write":
+        # the crash hit mid-write: dirty buckets written, clean ones not
+        assert os.path.isdir(os.path.join(out, "units"))
+        assert not os.path.exists(os.path.join(out, "plaid"))
     assert rows(CodeIndex.load(spark, idx.path)) == want_old
 
     got = idx.update(files_v2, str(base / "retry"), rebuild_threshold=0)
     assert sorted(got.units.collect()) == sorted(clean_v2.units.collect())
     assert rows(got) == rows(clean_v2)
+
+
+def test_build_and_search_run_in_the_callers_job_group(spark, files_v1,
+                                                       tmp_path_factory):
+    """Every job of a ``CodeIndex.build`` and of a search on it — those of
+    the concurrent PLAID/BM25 legs and of their nested writers included —
+    carries the job group the caller set, so none lands ungrouped."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("ci-caller", "caller's group")
+    try:
+        ci = CodeIndex.build(files_v1, str(
+            tmp_path_factory.mktemp("ci_group") / "v1"))
+        ci.search("parse configuration file", top_k=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert tracker.getJobIdsForGroup("ci-caller")

@@ -139,7 +139,8 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_update_index_delta_crash_at_carry(spark, tmp_path, monkeypatch):
+def test_update_index_delta_crash_at_carry(spark, tmp_path, monkeypatch,
+                                           bucket_cap_binds):
     from next_plaid_spark.encoding import clustered_token_corpus
     from next_plaid_spark.operators.update import update_index_delta
     from next_plaid_spark.plans.builder import IndexBuilder
@@ -166,10 +167,10 @@ def test_update_index_delta_crash_at_carry(spark, tmp_path, monkeypatch):
 
     want_old = search(PlaidIndex.load(spark, v0))
     v1 = str(tmp_path / "v1")
-    calls = _crash_carry(monkeypatch)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        delta(v1)
-    monkeypatch.undo()
+    with monkeypatch.context() as m:
+        calls = _crash_carry(m)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            delta(v1)
     assert max(calls) >= 2  # some files were linked before the crash
 
     assert not os.path.exists(os.path.join(v1, "meta.json"))
@@ -189,6 +190,9 @@ def test_update_index_delta_crash_at_carry(spark, tmp_path, monkeypatch):
 def test_bm25_save_delta_crash_at_carry(spark, tmp_path, monkeypatch):
     from next_plaid_spark.operators.bm25 import BM25Index, _tokenizer
 
+    # 8 doclens files and ~40 of postings and positions, so a delta both
+    # folds and carries files
+    monkeypatch.setattr(tiered, "ROWS_PER_FILE", 25)
     v1 = str(tmp_path / "v1")
     base = [(i, f"alpha w{i % 17} w{i % 5} beta w{i % 23}")
             for i in range(200)]
@@ -216,10 +220,10 @@ def test_bm25_save_delta_crash_at_carry(spark, tmp_path, monkeypatch):
 
     want_old = _rows(BM25Index.load(spark, v1).search(queries, k=5))
     v2 = str(tmp_path / "v2")
-    calls = _crash_carry(monkeypatch)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        delta(v2)
-    monkeypatch.undo()
+    with monkeypatch.context() as m:
+        calls = _crash_carry(m)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            delta(v2)
     assert max(calls) >= 2  # some files were linked before the crash
 
     assert not os.path.exists(os.path.join(v2, "meta.json"))

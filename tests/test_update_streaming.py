@@ -169,7 +169,8 @@ def test_expand_centroids_bounded_collect(spark):
     assert np.array_equal(expanded, again)
 
 
-def test_streaming_ingest_bucketed_delta(spark, documents, tmp_path_factory):
+def test_streaming_ingest_bucketed_delta(spark, documents, tmp_path_factory,
+                                        bucket_cap_binds):
     """With bucket_tokens set, every append micro-batch goes through the
     fused delta: snapshots stay bucketed, final state matches the batch
     build, and the second snapshot reuses (hardlinks) every settled token

@@ -148,6 +148,10 @@ def main() -> int:
     # which hides codegen annotation until runtime; the audit inspects the
     # static plan, so disable it here (planning invariants are unchanged)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
+    # the scan checks read each FileScan's table from its Location path;
+    # Spark abbreviates plan metadata to 100 characters by default, which
+    # cuts the table name off a long index path (the default oracle dir)
+    spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
     registry = q.queries()
 
     failures: list[str] = []
@@ -468,9 +472,6 @@ def main() -> int:
     except Exception as e:
         failures.append(f"A15 bucketed-tokens probe errored: {e}")
 
-    status = "ALL INVARIANTS HOLD" if not failures else "FAILURES:\n" + "\n".join(
-        f"- {f}" for f in failures
-    )
     # A16-legs (r15): the code_search entries collect their semantic and
     # keyword legs during construction, so the stored-index discipline is
     # asserted on the leg DataFrames directly — the funnel leg must scan
@@ -517,7 +518,9 @@ def main() -> int:
         "  are asserted on the leg plans above, the ranking tail on the\n"
         "  returned plans.\n")
 
-
+    status = "ALL INVARIANTS HOLD" if not failures else "FAILURES:\n" + "\n".join(
+        f"- {f}" for f in failures
+    )
     doc = (
         "# PLANS — physical-plan audit (generated by tools/plan_audit.py)\n\n"
         f"Scale factor dir: `{sf_dir}`. Invariants A1–A5 are described in the "
