@@ -186,8 +186,11 @@ class BM25Index:
 
         Postings and positions are laid out range-partitioned by DOC_ID
         across files with rows sorted by term inside each file. Every
-        component has one file per ``tiered.ROWS_PER_FILE`` rows, so the
-        layout depends on the store's size, not on the session's cores.
+        component is sized by its rows, so the layout depends on the
+        store's size, not on the session's cores: postings and positions
+        have one file per ``tiered.TOKENS_PER_BUCKET`` rows (the token
+        table's grain, so a delete rewrites a bounded slice of them),
+        doclens and term_stats one per ``tiered.ROWS_PER_FILE``.
         Term-filtered scans (keyword join, phrase search) skip row groups
         via the per-row-group term min/max stats — the IO-skipping
         granularity is the row group either way, so the posting-list
@@ -259,9 +262,14 @@ class BM25Index:
         # doclens (it derives from the staged files) but not positions.
         # Each component is sized by its rows (tiered.n_files), bounded by
         # totals the index holds: postings, positions and term_stats rows
-        # ≤ total_dl, doclens rows = n_docs. At one file the range
-        # partition is a single-partition shuffle with no sampling job.
-        n_token_files = tiered.n_files(self.total_dl)
+        # ≤ total_dl, doclens rows = n_docs. Postings and positions, the
+        # doc-ranged stores a delete folds file by file, take the token
+        # table's grain; the per-doc and per-term tables the coarse one
+        # (term_stats is rewritten whole by every save_delta anyway). At
+        # one file the range partition is a single-partition shuffle with
+        # no sampling job.
+        n_token_files = tiered.n_files(self.total_dl,
+                                       tiered.TOKENS_PER_BUCKET)
 
         def _write_postings() -> None:
             (self.postings.repartitionByRange(n_token_files, F.col("doc_id"))
@@ -306,7 +314,8 @@ class BM25Index:
                 .agg(F.max(_sat_expr(self.avgdl)).alias("max_sat")),
                 "term",
             )
-        (df_src.repartitionByRange(n_token_files, F.col("term"))
+        (df_src.repartitionByRange(tiered.n_files(self.total_dl),
+                                   F.col("term"))
          .sortWithinPartitions("term")
          .write.mode("overwrite").parquet(os.path.join(path, "term_stats")))
         _heartbeat()
@@ -392,18 +401,19 @@ class BM25Index:
             n_new_post = post_new.count()
 
         def _write_component(name: str, new_rows: DataFrame,
-                             sort_cols: tuple[str, ...], mass: int):
+                             sort_cols: tuple[str, ...], mass: int,
+                             per_file: int | None = None):
             tiered.write_doc_ranged(
                 os.path.join(old, name), os.path.join(out_path, name),
                 new_rows, mass, gone=gone_df, gone_ids=gone_rows,
-                sort_cols=sort_cols)
+                sort_cols=sort_cols, per_file=per_file)
 
         # the component writes are independent jobs over disjoint dirs —
         # overlap them (guide §2.6), same as save()
         writers = [
             lambda: _write_component(
                 "postings", post_new.select("term", "doc_id", "tf"),
-                ("term", "doc_id"), n_new_post),
+                ("term", "doc_id"), n_new_post, tiered.TOKENS_PER_BUCKET),
             lambda: _write_component(
                 "doclens", dl_new.select("doc_id", "dl"),
                 ("doc_id",), n_new_docs),
@@ -414,7 +424,8 @@ class BM25Index:
                                  "update can't silently drop phrase search")
             writers.append(lambda: _write_component(
                 "positions", pos_new.select("term", "doc_id", "pos"),
-                ("term", "doc_id", "pos"), new_dl_sum))
+                ("term", "doc_id", "pos"), new_dl_sum,
+                tiered.TOKENS_PER_BUCKET))
         run_concurrently(spark, *writers)
 
         # -- meta by exact integer arithmetic. All of a gone doc's rows

@@ -138,12 +138,13 @@ def update_index(
         n_new_docs = new_doc_tokens.select("doc_id").distinct().count()
         if index.meta.num_documents + n_new_docs <= rebuild_threshold:
             # path (a): small corpus → rebuild everything with fresh k-means
-            # at the default bucket cap, so the rebuild has exactly a fresh
-            # build's layout (its bucket count follows its token count)
+            # at the index's own bucket cap, so the rebuild has exactly a
+            # fresh build's layout (its bucket count follows its tokens)
             from next_plaid_spark.plans.builder import IndexBuilder
 
             allt = full_rebuild_tokens.unionByName(new_doc_tokens)
-            return IndexBuilder(spark, nbits=index.meta.nbits, seed=seed).build(
+            return IndexBuilder(spark, nbits=index.meta.nbits, seed=seed,
+                                bucket_tokens=index.meta.bucket_cap).build(
                 allt, out_path
             )
         return update_index_delta(spark, index, None, new_doc_tokens,
@@ -207,10 +208,16 @@ def update_index_delta(
     arrival batch wrote. doc_stats is doc_id-ranged
     (``tiered.write_doc_ranged``, one tier per hop); meta counts are
     arithmetic. No inverted file is stored, so nothing corpus-sized is
-    re-derived per hop. Centroid expansion follows the reference
-    (update.rs:95-108): at ``buffer_threshold`` or more new docs the
-    outlier tokens train new centroids, appended to the codebook, so
-    carried buckets' codes stay valid.
+    re-derived per hop. The bucket count follows the token count as a
+    build's does (``tiered.n_buckets`` up to ``meta.bucket_cap``), but
+    only in doublings: a hop whose tokens ask for at least twice the
+    snapshot's buckets folds every bucket and writes the table at the new
+    count. An index that starts small (a stream's first micro-batch) thus
+    grows its buckets with its tokens, and re-bucketing rewrites each
+    token O(1) times, amortised. Centroid expansion follows the
+    reference (update.rs:95-108): at ``buffer_threshold`` or more new
+    docs the outlier tokens train new centroids, appended to the
+    codebook, so carried buckets' codes stay valid.
 
     Preconditions: ``gone_docs`` ⊆ indexed docs; ``new_doc_tokens``
     doc_ids must not collide with kept docs (re-encoded docs appear in
@@ -300,6 +307,12 @@ def update_index_delta(
     gone_nt = sum(int(r.nt) for r in _dhist)
     new_per_bucket = {int(r.b): int(r.nt) for r in _hist}
 
+    n_docs = index.meta.num_documents - gone_nd + n_new_docs
+    n_tok = index.meta.num_embeddings - gone_nt + n_new_tokens
+    n_out = tiered.n_buckets(n_tok, index.meta.bucket_cap)
+    if n_out < 2 * n:  # no doubling due: keep the bucket count
+        n_out = n
+
     old_dir = os.path.join(index.path, "tokens_bucketed")
     by_bucket: dict[int, dict[str, int]] = {}
     for p, rows_in_file, _mm in tiered.list_files(old_dir):
@@ -313,8 +326,9 @@ def update_index_delta(
     # pruning of deletes needs the whole bucket read anyway
     folded: set[str] = set()
     for b, sizes in by_bucket.items():
-        folded |= tiered.fold_set(sizes, new_per_bucket.get(b, 0),
-                                  lambda _p, b=b: b in del_dirty)
+        folded |= (set(sizes) if n_out != n else  # re-bucket: fold all
+                   tiered.fold_set(sizes, new_per_bucket.get(b, 0),
+                                   lambda _p, b=b: b in del_dirty))
 
     cols = index.tokens.columns
     if folded:
@@ -328,7 +342,11 @@ def update_index_delta(
 
     bt_new = bucket_table_name(out_path)
     new_dir = os.path.join(out_path, "tokens_bucketed")
-    touched = del_dirty | set(new_per_bucket)
+    # every output bucket is written on a re-bucketing hop; otherwise
+    # only those the delta touched
+    n_written = (n_out if n_out != n
+                 else max(len(del_dirty | set(new_per_bucket)), 1))
+    bucket_out = F.pmod(F.hash(F.col("doc_id")), F.lit(n_out))
 
     def _tokens_leg() -> None:
         # the corpus-facing leg: bucketed delta write + hardlink carry.
@@ -341,10 +359,10 @@ def update_index_delta(
             # every touched bucket's rows land in one write task → one new
             # file per touched bucket (write_index's one-file-per-bucket
             # write), at most one task per core
-            tiered.bucket_shuffle(rows, max(len(touched), 1), bucket)
+            tiered.bucket_shuffle(rows, n_written, bucket_out)
             .write.mode("overwrite")
             .option("path", new_dir)
-            .bucketBy(n, "doc_id")
+            .bucketBy(n_out, "doc_id")
             .sortBy("doc_id")
             .saveAsTable(bt_new)
         )
@@ -381,13 +399,12 @@ def update_index_delta(
     if n_new_tokens:
         quantized.unpersist()
 
-    n_docs = index.meta.num_documents - gone_nd + n_new_docs
-    n_tok = index.meta.num_embeddings - gone_nt + n_new_tokens
     meta = IndexMeta(
         k=centroids.shape[0], dim=index.meta.dim, nbits=index.meta.nbits,
         num_documents=n_docs, num_embeddings=n_tok,
         avg_doclen=n_tok / max(n_docs, 1), codec=index.meta.codec,
-        bucket_table=bt_new, n_buckets=n,
+        bucket_table=bt_new, n_buckets=n_out,
+        bucket_cap=index.meta.bucket_cap,
     )
     tiered.write_marker(os.path.join(out_path, "meta.json"), meta.to_json())
     return PlaidIndex(spark, out_path, meta)

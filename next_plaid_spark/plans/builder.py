@@ -19,8 +19,10 @@ write's (doc_id): one bucket per ``tiered.TOKENS_PER_BUCKET`` tokens
 (``bucket_tokens`` at most), one file per bucket, written by at most one
 task per core. The doc_stats groupBy then reuses the bucket spec, and its
 per-doc rows are sized by their count (one file per
-``tiered.ROWS_PER_FILE`` docs), not by the bucket count. No inverted file is written (B8):
-candidacy filters ``doc_stats.codes``.
+``tiered.ROWS_PER_FILE`` docs), not by the bucket count. Updates grow the
+bucket count with the tokens, in doublings up to the same cap
+(``operators/update.py``). No inverted file is written (B8): candidacy
+filters ``doc_stats.codes``.
 Broadcast assignment holds to K≈1M (512 MB at dim=128 f32); past that,
 assignment becomes an LSH-bucketed join against a centroids table — hook
 left in assign_codes.

@@ -21,7 +21,9 @@ corpus under 131,072 tokens has one bucket, and the default cap of 32
 binds from 32·65,536 tokens up); every bucket's rows land in one write
 task, at most one task per core. The per-doc ``doc_stats`` has one file per
 ``tiered.ROWS_PER_FILE`` docs, as every update hop sizes it. Updates keep
-the snapshot's bucket count (``meta.n_buckets``).
+the snapshot's bucket count (``meta.n_buckets``) until the token count asks
+for twice as many, up to the build's cap (``meta.bucket_cap``); that hop
+re-buckets the whole table (``update_index_delta``).
 
 The token files are registered as a session catalog table, so per-doc
 groupBys/joins read the bucket spec instead of shuffling the corpus; a
@@ -75,9 +77,12 @@ class IndexMeta:
     avg_doclen: float
     codec: CodecArtifacts
     # the token table's catalog name + bucket count, set by the snapshot
-    # writer (write_index / update_index_delta)
+    # writer (write_index / update_index_delta), and the build's
+    # ``bucket_tokens`` cap, which every later snapshot keeps: updates
+    # re-bucket up to it and rebuilds build at it
     bucket_table: str | None = None
     n_buckets: int | None = None
+    bucket_cap: int | None = None
 
     def to_json(self) -> str:
         return json.dumps({
@@ -91,6 +96,7 @@ class IndexMeta:
             "next_plaid_spark_version": 1,
             "bucket_table": self.bucket_table,
             "n_buckets": self.n_buckets,
+            "bucket_cap": self.bucket_cap,
         })
 
     @classmethod
@@ -106,6 +112,9 @@ class IndexMeta:
             num_documents=d["num_documents"], num_embeddings=d["num_embeddings"],
             avg_doclen=d["avg_doclen"], codec=CodecArtifacts.from_dict(d["codec"]),
             bucket_table=d["bucket_table"], n_buckets=d["n_buckets"],
+            # a snapshot written before the cap was recorded has exactly
+            # its cap's bucket count
+            bucket_cap=d.get("bucket_cap") or d["n_buckets"],
         )
 
 
@@ -219,8 +228,7 @@ def write_index(
     os.makedirs(path, exist_ok=True)
     # the token table is sized by its rows: one bucket per
     # TOKENS_PER_BUCKET tokens, ``bucket_tokens`` at most
-    n_buckets = min(bucket_tokens, max(
-        1, meta.num_embeddings // tiered.TOKENS_PER_BUCKET))
+    n_buckets = tiered.n_buckets(meta.num_embeddings, bucket_tokens)
     bt = bucket_table_name(path)
 
     def _write_tokens() -> None:
@@ -255,6 +263,7 @@ def write_index(
                      lambda: write_centroids(spark, path, centroids))
     meta.bucket_table = bt
     meta.n_buckets = n_buckets
+    meta.bucket_cap = bucket_tokens
 
     # B9 doclens + the per-doc distinct sorted codes (codes.npy analog) in
     # ONE groupBy(doc_id) pass — no corpus shuffle: the bucket spec

@@ -32,20 +32,28 @@ FOLD_RATIO = 2.0
 GONE_CAP = 100_000
 
 #: rows per output file of one ``write_doc_ranged`` hop, of the build's
-#: ``doc_stats`` write and of every BM25 store component (one file is the
-#: tier; a corpus-sized write splits so no one write task owns the store)
+#: ``doc_stats`` write and of the BM25 ``doclens`` and ``term_stats`` (one
+#: file is the tier; a corpus-sized write splits so no one write task owns
+#: the store)
 ROWS_PER_FILE = 4_000_000
 
-#: tokens per bucket of a PLAID build's token table: ``write_index`` writes
-#: ``min(bucket_tokens, max(1, num_embeddings // TOKENS_PER_BUCKET))``
-#: buckets, so the default cap of 32 binds from about 2.1M tokens up
+#: token rows per bucket of a PLAID token table (``n_buckets``) and per
+#: file of the BM25 ``postings`` and ``positions``: the grain at which a
+#: delete rewrites a token-sized store
 TOKENS_PER_BUCKET = 65_536
 
 
-def n_files(rows: int) -> int:
-    """Output files of a write of ``rows`` rows: one per
-    ``ROWS_PER_FILE``, at least one."""
-    return max(1, rows // ROWS_PER_FILE)
+def n_files(rows: int, per_file: int | None = None) -> int:
+    """Output files of a write of ``rows`` rows: one per ``per_file``
+    (``ROWS_PER_FILE`` by default), at least one."""
+    return max(1, rows // (per_file or ROWS_PER_FILE))
+
+
+def n_buckets(tokens: int, cap: int) -> int:
+    """Buckets of a token table of ``tokens`` rows: one per
+    ``TOKENS_PER_BUCKET``, at least one and at most ``cap`` (so the default
+    cap of 32 binds from about 2.1M tokens up)."""
+    return min(cap, n_files(tokens, TOKENS_PER_BUCKET))
 
 
 def bucket_shuffle(df: DataFrame, n: int, col) -> DataFrame:
@@ -159,10 +167,11 @@ def write_marker(path: str, text: str) -> None:
 def write_doc_ranged(old_dir: str, new_dir: str, new_rows: DataFrame,
                      mass: int, *, gone: DataFrame | None,
                      gone_ids: list[int] | None,
-                     sort_cols: tuple[str, ...] = ()) -> None:
+                     sort_cols: tuple[str, ...] = (),
+                     per_file: int | None = None) -> None:
     """One hop of a doc_id-ranged component: the folded old files minus
-    ``gone`` plus ``new_rows`` (``mass`` rows), one file per
-    ``ROWS_PER_FILE``, sorted within by ``sort_cols``; then carry the rest.
+    ``gone`` plus ``new_rows`` (``mass`` rows), one file per ``per_file``
+    rows (``n_files``), sorted within by ``sort_cols``; then carry the rest.
     A file whose footer range may hold a gone doc must fold, so no stale
     row survives (and delete-then-re-add of one doc_id is safe)."""
     files = list_files(old_dir)
@@ -176,7 +185,7 @@ def write_doc_ranged(old_dir: str, new_dir: str, new_rows: DataFrame,
             kept = kept.join(gone, "doc_id", "left_anti")
         merged = kept.select(*new_rows.columns).unionByName(new_rows)
     n_merged = mass + sum(rows for p, rows, _mm in files if p in folded)
-    merged = merged.coalesce(n_files(n_merged))
+    merged = merged.coalesce(n_files(n_merged, per_file))
     if sort_cols:
         merged = merged.sortWithinPartitions(*sort_cols)
     merged.write.mode("overwrite").parquet(new_dir)

@@ -292,9 +292,9 @@ def test_update_index_delta_matches_two_step(spark, tmp_path):
 def test_full_rebuild_path_keeps_bucketed_layout(spark, tmp_path):
     """update_index path (a) (corpus <= rebuild_threshold with raw tokens
     provided) must rebuild a bucketed index BUCKETED — the layout is the
-    search contract, not a per-snapshot accident — with a fresh build's
-    bucket count: the default cap over its own tokens, not the old
-    snapshot's count."""
+    search contract, not a per-snapshot accident — at the build's own
+    ``bucket_tokens`` cap (``meta.bucket_cap``), as a fresh build with it
+    would be."""
     from next_plaid_spark.operators.update import update_index
 
     toks, _ = clustered_token_corpus(
@@ -308,7 +308,8 @@ def test_full_rebuild_path_keeps_bucketed_layout(spark, tmp_path):
     rebuilt = update_index(spark, bidx, new, str(tmp_path / "b1"),
                            full_rebuild_tokens=old)
     assert rebuilt.meta.num_documents == 60
-    assert rebuilt.meta.bucket_table and rebuilt.meta.n_buckets == 32
+    assert rebuilt.meta.bucket_table and rebuilt.meta.n_buckets == 4
+    assert rebuilt.meta.bucket_cap == 4
     assert "Exchange" not in _plan(
         rebuilt.tokens.groupBy("doc_id").agg(F.count("*").alias("n"))
     )

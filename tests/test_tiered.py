@@ -193,6 +193,7 @@ def test_bm25_save_delta_crash_at_carry(spark, tmp_path, monkeypatch):
     # 8 doclens files and ~40 of postings and positions, so a delta both
     # folds and carries files
     monkeypatch.setattr(tiered, "ROWS_PER_FILE", 25)
+    monkeypatch.setattr(tiered, "TOKENS_PER_BUCKET", 25)
     v1 = str(tmp_path / "v1")
     base = [(i, f"alpha w{i % 17} w{i % 5} beta w{i % 23}")
             for i in range(200)]
