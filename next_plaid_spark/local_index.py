@@ -215,17 +215,52 @@ class LocalIndex:
         """U1 dispatcher: rebuild / buffer-append / expand+append, then
         snapshot-advance (index.rs:1431). The metadata lands first: the
         snapshot's meta.json marks ``out`` complete, so a crash between the
-        two writes must leave it incomplete, never metadata-less."""
+        two writes must leave it incomplete, never metadata-less.
+
+        An append past the persisted ``max_documents`` cap evicts the
+        oldest docs (handlers/documents.rs:500-528) within the same
+        version: the append is staged in a hidden sibling dir that no
+        reader lists, and the eviction's snapshot of it becomes the next
+        version. A crash at any write leaves the previous version the
+        latest, and a retry writes the version an uncrashed call would."""
         out = self._next_path()
+        cap = self.get_config().get("max_documents")
+        if cap is not None and self.num_documents() + new_doc_tokens.select(
+                "doc_id").distinct().count() > int(cap):
+            return self._update_evicting(
+                new_doc_tokens, out, int(cap),
+                full_rebuild_tokens=full_rebuild_tokens, metadata=metadata,
+                seed=seed)
         self._write_meta(out, metadata)
         update_index(self.spark, self.index, new_doc_tokens, out,
                      full_rebuild_tokens=full_rebuild_tokens, seed=seed)
         self.reload()
-        # handlers/documents.rs:500-528 — the append path enforces the
-        # persisted max_documents cap by evicting the oldest docs
-        cap = self.get_config().get("max_documents")
-        if cap is not None:
-            self.evict_oldest(int(cap))
+        return self
+
+    def _update_evicting(self, new_doc_tokens: DataFrame, out: str,
+                         cap: int, *, full_rebuild_tokens: DataFrame | None,
+                         metadata: DataFrame | None,
+                         seed: int) -> "LocalIndex":
+        """``update`` past the cap: append into a staging dir, then evict
+        from it into ``out``; the staging dir and its catalog table go
+        whether or not that succeeds."""
+        import shutil
+
+        from next_plaid_spark.sources.index_store import bucket_table_name
+
+        stage = os.path.join(self.root, f".{os.path.basename(out)}.pre-evict")
+        shutil.rmtree(stage, ignore_errors=True)
+        try:
+            self._write_meta(stage, metadata)
+            self._index = update_index(
+                self.spark, self.index, new_doc_tokens, stage,
+                full_rebuild_tokens=full_rebuild_tokens, seed=seed)
+            # delete_with_options writes the next version, ``out``
+            self.delete_with_options(self._oldest(cap))
+        finally:
+            self.spark.sql(f"DROP TABLE IF EXISTS {bucket_table_name(stage)}")
+            shutil.rmtree(stage, ignore_errors=True)
+            self.reload()
         return self
 
     # index.rs:1604/1675 — same dispatcher, explicit names kept for parity
@@ -299,15 +334,19 @@ class LocalIndex:
         """evict_oldest_documents parity: when over the cap, drop the
         lowest doc_ids (the oldest — ids are assigned in arrival order)
         into a new snapshot. Returns the eviction count."""
+        ids = self._oldest(max_documents)
+        return self.delete_with_options(ids) if ids else 0
+
+    def _oldest(self, max_documents: int) -> list[int]:
+        """The lowest doc_ids past ``max_documents`` (none when under it)."""
         over = self.num_documents() - max_documents
         if over <= 0:
-            return 0
-        ids = [
+            return []
+        return [
             r.doc_id
             for r in self.index.doclens.select("doc_id")
             .orderBy("doc_id").limit(over).collect()
         ]
-        return self.delete_with_options(ids, delete_metadata=True)
 
     def delete(self, doc_ids: Sequence[int]) -> int:
         return self.delete_with_options(doc_ids, delete_metadata=True)

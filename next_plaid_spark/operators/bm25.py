@@ -28,7 +28,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -39,6 +39,13 @@ from next_plaid_spark.sources import tiered
 K1 = 1.2
 B = 0.75
 SCORE_DECIMALS = 6
+
+#: the columns of each saved store component. Every read of a store states
+#: them: a schema-less read runs a one-task footer-inference job first
+POSTINGS_SCHEMA = "term string, doc_id long, tf long"
+DOCLENS_SCHEMA = "doc_id long, dl long"
+TERM_STATS_SCHEMA = "term string, df long, max_sat double"
+POSITIONS_SCHEMA = "term string, doc_id long, pos int"
 
 # K1 tokenizer registry (text_search.rs:52-267): unicode61 (words), trigram
 # (substring search), identifier_aware (code; see operators/colgrep.py)
@@ -103,6 +110,20 @@ def _py_idf(n: float, df: int, score_mode: str) -> float:
     return math.log(1.0 + (n - df + 0.5) / (df + 0.5))
 
 
+def _terms_in(terms) -> Column:
+    """``term IN (terms…)``, a pushdown-able literal In filter built as ONE
+    SQL expression: a Column literal per term costs about four py4j
+    commands each, and a query batch names hundreds of terms. Each term
+    is a quoted SQL string literal (backslash and quote escaped)."""
+    terms = list(terms)
+    if not terms:
+        return F.lit(False)
+    lits = ",".join(
+        "'" + t.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        for t in terms)
+    return F.expr(f"term IN ({lits})")
+
+
 def _term_pruned(table: DataFrame, qterms: DataFrame) -> DataFrame:
     """``table`` filtered to the distinct terms of ``qterms`` with a
     pushdown-able literal In filter (see _TERM_PUSHDOWN_CAP)."""
@@ -110,7 +131,7 @@ def _term_pruned(table: DataFrame, qterms: DataFrame) -> DataFrame:
             .limit(_TERM_PUSHDOWN_CAP + 1).collect())
     if len(rows) > _TERM_PUSHDOWN_CAP:
         return table
-    return table.filter(F.col("term").isin([r["term"] for r in rows]))
+    return table.filter(_terms_in(r["term"] for r in rows))
 
 
 @dataclass
@@ -306,8 +327,10 @@ class BM25Index:
             df_src = self.term_stats
         else:
             spark = self.postings.sparkSession
-            staged_post = spark.read.parquet(os.path.join(path, "postings"))
-            staged_dl = spark.read.parquet(os.path.join(path, "doclens"))
+            staged_post = spark.read.schema(POSTINGS_SCHEMA).parquet(
+                os.path.join(path, "postings"))
+            staged_dl = spark.read.schema(DOCLENS_SCHEMA).parquet(
+                os.path.join(path, "doclens"))
             df_src = self.term_stats.select("term", "df").join(
                 staged_post.join(staged_dl, "doc_id")
                 .groupBy("term")
@@ -437,7 +460,8 @@ class BM25Index:
                         in tiered.list_files(os.path.join(old, "doclens"))
                         if tiered.may_hold(mm, gone_rows)]
             if gone_src:
-                _g = (spark.read.parquet(*sorted(gone_src))
+                _g = (spark.read.schema(DOCLENS_SCHEMA)
+                      .parquet(*sorted(gone_src))
                       .join(gone_df, "doc_id", "left_semi")
                       .agg(F.count("*").alias("n"),
                            F.sum("dl").alias("s")).collect()[0])
@@ -450,8 +474,10 @@ class BM25Index:
         # + the max_sat bound under the NEW avgdl), one fused aggregation —
         # postings are unique per (term, doc_id), so the doclens join is
         # 1:1 and count(*) IS df
-        staged_post = spark.read.parquet(os.path.join(out_path, "postings"))
-        staged_dl = spark.read.parquet(os.path.join(out_path, "doclens"))
+        staged_post = spark.read.schema(POSTINGS_SCHEMA).parquet(
+            os.path.join(out_path, "postings"))
+        staged_dl = spark.read.schema(DOCLENS_SCHEMA).parquet(
+            os.path.join(out_path, "doclens"))
         (staged_post.join(staged_dl, "doc_id")
          .groupBy("term")
          .agg(F.count("*").alias("df"),
@@ -486,15 +512,15 @@ class BM25Index:
                 f"BM25 store at {path} predates the current format (no "
                 "term_stats/ or no total_dl in meta.json); rebuild it with "
                 "BM25Index.build(...).save(...)")
-        positions = (
-            spark.read.parquet(os.path.join(path, "positions"))
-            if meta["with_positions"] else None
-        )
+        def read(name: str, schema: str) -> DataFrame:
+            return spark.read.schema(schema).parquet(os.path.join(path, name))
+
+        positions = (read("positions", POSITIONS_SCHEMA)
+                     if meta["with_positions"] else None)
         idx = cls(
-            spark.read.parquet(os.path.join(path, "postings")),
-            spark.read.parquet(os.path.join(path, "doclens")),
+            read("postings", POSTINGS_SCHEMA), read("doclens", DOCLENS_SCHEMA),
             int(meta["n_docs"]), float(meta["avgdl"]),
-            spark.read.parquet(stats_path), int(meta["total_dl"]),
+            read("term_stats", TERM_STATS_SCHEMA), int(meta["total_dl"]),
             meta["tokenizer"], positions,
         )
         # remembered so save() refuses to overwrite the files this
@@ -539,7 +565,7 @@ class BM25Index:
         term_list = sorted({r["term"] for r in rows})
         ts = {
             r["term"]: (r["df"], r["max_sat"])
-            for r in self.term_stats.filter(F.col("term").isin(term_list))
+            for r in self.term_stats.filter(_terms_in(term_list))
             .select("term", "df", "max_sat").collect()
         }
         if not ts:
@@ -566,7 +592,7 @@ class BM25Index:
             spark, [(t, d) for t, (d, _) in ts.items()], "term string, df long")
         p1 = (
             qterms.join(F.broadcast(tp_df), ["query_id", "term"])
-            .join(self.postings.filter(F.col("term").isin(theta_terms)),
+            .join(self.postings.filter(_terms_in(theta_terms)),
                   "term")
             .join(F.broadcast(df_local), "term")
             .join(self.doclens, "doc_id")
@@ -618,7 +644,7 @@ class BM25Index:
         cand = (
             F.broadcast(
                 local_df(spark, ess_pairs, "query_id long, term string"))
-            .join(self.postings.filter(F.col("term").isin(ess_terms))
+            .join(self.postings.filter(_terms_in(ess_terms))
                   .select("term", "doc_id"), "term")
             .select("query_id", "doc_id")
         )
@@ -713,7 +739,7 @@ class BM25Index:
         if len(rows) <= _TERM_PUSHDOWN_CAP:
             qterms = local_df(queries.sparkSession, rows, qterms.schema)
             postings_src = self.postings.filter(
-                F.col("term").isin(sorted({r["term"] for r in rows})))
+                _terms_in(sorted({r["term"] for r in rows})))
         else:
             postings_src = _term_pruned(self.postings, qterms)
         # stored per-term df pruned to the query's terms: a
@@ -934,10 +960,8 @@ class BM25Index:
                          for r in rows if r["term"] is not None]
             pterms = local_df(spark, term_rows,
                               "query_id long, pid int, j int, term string")
-            positions_src = self.positions.filter(
-                F.col("term").isin(
-                    sorted({r["term"] for r in rows
-                            if r["term"] is not None})))
+            positions_src = self.positions.filter(_terms_in(
+                sorted({r["term"] for r in rows if r["term"] is not None})))
             # phrase lengths and per-query phrase counts, driver-side from
             # the same rows (two fewer aggregation subtrees in the plan);
             # empty phrases carry no plens row (no occurrences possible)

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from next_plaid_spark.operators.code_parse import UNITS_OUT_SCHEMA
 from next_plaid_spark.operators.colgrep import (
     _glob_to_like,
     apply_ranking,
@@ -73,6 +74,20 @@ _RAW_COLS = [
     "return_type", "extends",
 ]
 
+#: the stored ``units/`` columns (the parse, the call graph's
+#: ``called_by``, the unit id, the embed text) and its ``ub`` partition
+#: column, and the ``files/`` change-probe state. Every read states them:
+#: a schema-less read runs a one-task footer-inference job first
+UNITS_SCHEMA = (UNITS_OUT_SCHEMA + ", called_by array<string>, "
+                "unit_id long, embed_text string, ub int")
+FILES_STATE_SCHEMA = "path string, content_hash string, size int"
+
+
+def _read_units(spark: SparkSession, path: str) -> DataFrame:
+    """The unit rows of the ``units/`` dir at ``path``; the file-hash
+    partition column is storage layout, not unit data."""
+    return spark.read.schema(UNITS_SCHEMA).parquet(path).drop("ub")
+
 
 def file_state(files: DataFrame, *, path_col: str = "path",
                content_col: str = "content") -> DataFrame:
@@ -99,17 +114,24 @@ class CodeIndex:
         self.plaid = PlaidIndex.load(spark, os.path.join(path, "plaid"))
         self.bm25 = BM25Index.load(spark, os.path.join(path, "bm25"))
         self._searcher = None
+        # a snapshot's dirs are immutable, so each table's lazy frame is
+        # built once per instance, as PlaidIndex memoizes its tables
+        self._units = self._files = None
 
     # -- tables --------------------------------------------------------------
     @property
     def units(self) -> DataFrame:
-        df = self.spark.read.parquet(os.path.join(self.path, "units"))
-        # the file-hash partition column is storage layout, not unit data
-        return df.drop("ub") if "ub" in df.columns else df
+        if self._units is None:
+            self._units = _read_units(self.spark,
+                                      os.path.join(self.path, "units"))
+        return self._units
 
     @property
     def files(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "files"))
+        if self._files is None:
+            self._files = self.spark.read.schema(FILES_STATE_SCHEMA).parquet(
+                os.path.join(self.path, "files"))
+        return self._files
 
     # -- build / load --------------------------------------------------------
     @classmethod
@@ -178,7 +200,7 @@ class CodeIndex:
         units_cg.unpersist()
         if own_cache:
             raw_units.unpersist()
-        units = spark.read.parquet(os.path.join(path, "units")).drop("ub")
+        units = _read_units(spark, os.path.join(path, "units"))
 
         # the units artifact is often one file (unit ids come from a global
         # window) — spread rows across cores before the Arrow encode pass
@@ -284,10 +306,11 @@ class CodeIndex:
         O(N) per query).
 
         Cache discipline: each call first releases the DataFrames the
-        PREVIOUS funnel search cached (query tokens, survivors; the subset
-        when filtered), so a long-lived serve-many-queries process
-        holds at most one query's caches — consume (collect/write) each
-        result before issuing the next search."""
+        PREVIOUS funnel search cached (the subset when filtered; the
+        funnel caches neither a single query's tokens nor its survivors),
+        so a long-lived serve-many-queries process holds at most one
+        query's caches — consume (collect/write) each result before
+        issuing the next search."""
         from next_plaid_spark.encoding import encode_queries
         from next_plaid_spark.operators.fusion import hybrid_search
         from next_plaid_spark.plans.searcher import BatchSearcher, SearchParams
@@ -617,7 +640,7 @@ class CodeIndex:
 
         new_state.write.mode("overwrite").parquet(
             os.path.join(out_path, "files"))
-        units_out = spark.read.parquet(new_units_dir).drop("ub")
+        units_out = _read_units(spark, new_units_dir)
         unchanged_ids = unchanged.select(
             F.col("unit_id").alias("doc_id")).cache()
         held.append(unchanged_ids)

@@ -156,13 +156,15 @@ def build_embedding_text(units: DataFrame) -> DataFrame:
     ``variables`` / ``imports``; older frames without them still work."""
     cols = set(units.columns)
 
+    # each labelled part is one SQL expression: composed from Column
+    # calls, a part cost about twenty py4j commands to build
     def arr_part(col: str, label: str):
-        return F.when(F.size(F.coalesce(col, F.array())) > 0,
-                      F.concat(F.lit(label), F.concat_ws(", ", col)))
+        return F.expr(f"CASE WHEN size(coalesce(`{col}`, array())) > 0 "
+                      f"THEN concat('{label}', concat_ws(', ', `{col}`)) END")
 
     def str_part(col: str, label: str):
-        return F.when(F.col(col).isNotNull() & (F.col(col) != ""),
-                      F.concat(F.lit(label), F.col(col)))
+        return F.expr(f"CASE WHEN `{col}` IS NOT NULL AND `{col}` != '' "
+                      f"THEN concat('{label}', `{col}`) END")
 
     type_label = F.when(F.col("unit_type") == "RawCode", F.lit("Code block")) \
         .otherwise(F.coalesce("unit_type", F.lit("Code")))
@@ -194,11 +196,15 @@ def build_embedding_text(units: DataFrame) -> DataFrame:
     ]
     structured = F.concat_ws("\n", *parts)
     raw = F.coalesce("code", F.lit(""))
+    # the untruncated text is one column that the truncation reads: the
+    # truncation references its input three times, and a projection of the
+    # whole structured concat_ws would generate that code three times over
+    # (Spark keeps the two projections apart rather than duplicate it)
     return units.withColumn(
         "embed_text",
-        F.when(F.col("unit_type").isin("RawCode", "Constant"),
-               _truncate_expr(raw)).otherwise(_truncate_expr(structured)),
-    )
+        F.when(F.col("unit_type").isin("RawCode", "Constant"), raw)
+        .otherwise(structured),
+    ).withColumn("embed_text", _truncate_expr(F.col("embed_text")))
 
 
 # -- R1-R5: ranking ------------------------------------------------------------

@@ -230,6 +230,7 @@ def update_index_delta(
 
     from next_plaid_spark.sources import tiered
     from next_plaid_spark.sources.index_store import (
+        TOKEN_SCHEMA,
         bucket_table_name,
         write_centroids,
     )
@@ -296,8 +297,7 @@ def update_index_delta(
     # single empty-result job (guide §5: driver round-trips are a
     # per-batch stream cost).
     _dhist = ([] if gone is None else
-              (spark.read.parquet(os.path.join(index.path, "doc_stats"))
-               .join(gone, "doc_id", "left_semi")
+              (index.doclens.join(gone, "doc_id", "left_semi")
                .select(bucket.alias("b"), "num_tokens")
                .groupBy("b")
                .agg(F.count("*").alias("nd"), F.sum("num_tokens").alias("nt"))
@@ -332,7 +332,7 @@ def update_index_delta(
 
     cols = index.tokens.columns
     if folded:
-        kept_rows = spark.read.parquet(*sorted(folded))
+        kept_rows = spark.read.schema(TOKEN_SCHEMA).parquet(*sorted(folded))
         if gone is not None:
             kept_rows = kept_rows.join(gone, "doc_id", "left_anti")
         kept_rows = kept_rows.select(*cols)

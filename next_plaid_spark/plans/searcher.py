@@ -163,11 +163,12 @@ class BatchSearcher:
         # centroid-score fold runs in double from source values
         self._centroids64 = np.ascontiguousarray(self._centroids,
                                                  dtype=np.float64)
-        # DataFrames cached by search() calls (query tokens, subset,
-        # survivors). They must stay cached while the returned lazy plan is
-        # being consumed, so search() can't unpersist them itself;
-        # long-lived sessions issuing many filtered searches should call
-        # release() between batches to drop them.
+        # DataFrames cached by search() calls (the subset of a filtered
+        # search; the query tokens of a batch past the broadcast budget).
+        # They must stay cached while the returned lazy plan is being
+        # consumed, so search() can't unpersist them itself; long-lived
+        # sessions issuing many filtered searches should call release()
+        # between batches to drop them.
         self._live_caches: list[DataFrame] = []
 
     def release(self) -> None:
@@ -389,21 +390,22 @@ class BatchSearcher:
         the padded fold is bit-identical to the unpadded one.
 
         The survivor pair list never hits the driver: it rides the plan as
-        a per-doc ``collect_list(query_id)`` broadcast-joined onto the
-        packed token lists, so the whole funnel stays ONE lazy Catalyst
-        plan (approx scan stays codes-only, metadata filters stay pushed —
-        plan-audit A1/A2 see the full lineage)."""
-        idx = self.index
+        a per-doc ``collect_list(query_id)``, broadcast ONCE and joined
+        onto the token rows, whose per-doc packing then carries each
+        doc's query list along (``first``: one list per doc). The
+        survivors are thus read by one consumer, so nothing is cached, and
+        the whole funnel stays ONE lazy Catalyst plan (approx scan stays
+        codes-only, metadata filters stay pushed — plan-audit A1/A2 see
+        the full lineage). The broadcast hash join keeps the token scan's
+        doc_id bucketing, so the packing groupBy shuffles nothing (A15)."""
         surv_by_doc = survivors.groupBy("doc_id").agg(
             F.collect_list("query_id").alias("qids")
         )
         packed = (
-            idx.tokens.join(
-                F.broadcast(surv_by_doc.select("doc_id")), "doc_id", "left_semi"
-            )
+            self.index.tokens.join(F.broadcast(surv_by_doc), "doc_id")
             .groupBy("doc_id")
-            .agg(F.collect_list(F.struct("code", "residual")).alias("crs"))
-            .join(F.broadcast(surv_by_doc), "doc_id")
+            .agg(F.collect_list(F.struct("code", "residual")).alias("crs"),
+                 F.first("qids").alias("qids"))
         )
         return self._rerank_kernel_over(packed, qt_pdf)
 
@@ -582,7 +584,7 @@ class BatchSearcher:
             # corpus): every candidate doc of every query survives the Q7/Q8
             # cut, so the whole approximate phase — the driver [V, K] score
             # matrix, the codes-only kernel, the rank window and the
-            # survivors cache — is a no-op selector whose scores are
+            # survivor broadcast — is a no-op selector whose scores are
             # entirely discarded. Q9 runs directly over all (query,
             # candidate-doc) pairs: under probe_all the candidates are
             # exactly the indexed docs (∩ subset), and the per-doc query
@@ -598,11 +600,10 @@ class BatchSearcher:
             qt_pdf, n_probe, p, subset, prune_to=cut,
             eligible_mask=eligible_mask, spread=spread,
         )
-        # Q7 + Q8: approx top n_full_scores, then decompress budget n/4.
-        # Cached: the Q9 kernel packs doc lists AND per-doc query lists from
-        # the survivors — uncached, Q1-Q7 would re-run per consumer. Bounded
-        # at n_queries · cut (query_id, doc_id) rows; released with the
-        # other per-query caches via release().
+        # Q7 + Q8: approx top n_full_scores, then decompress budget n/4 —
+        # at most n_queries · cut (query_id, doc_id) rows, whose per-doc
+        # aggregate is the rerank's one broadcast. Not cached: the Q9
+        # packing is their only consumer, so Q1-Q7 run once.
         w = Window.partitionBy("query_id").orderBy(
             F.col("approx_score").desc(), F.col("doc_id").asc()
         )
@@ -610,8 +611,7 @@ class BatchSearcher:
             approx.withColumn("arank", F.row_number().over(w))
             .filter(F.col("arank") <= cut)
             .select("query_id", "doc_id")
-        ).cache()
-        self._live_caches.append(survivors)
+        )
         # Q9 as one doc-parallel kernel, Q10 final top-k (deterministic
         # tie-break)
         return topk(self._rerank_broadcast(survivors, qt_pdf), p.top_k)
@@ -660,10 +660,6 @@ class BatchSearcher:
         so the union is bit-identical to one oversized funnel."""
         p = params or self.params
         idx = self.index
-        # query-batch-sized; read by the budget collect and, past the
-        # budget, by the chunk split and per-chunk collects
-        query_tokens = query_tokens.cache()
-        self._live_caches.append(query_tokens)
 
         n_probe = p.n_ivf_probe
         # exact configuration (every cell probed, t_cs off): Q4 probe
@@ -717,6 +713,8 @@ class BatchSearcher:
         # rows — the pdf itself is [ntok, dim], dim ≪ K times smaller than
         # the score matrix the budget admits, so within-cap collection is
         # affordable by construction; cap+1 rows back means over budget.
+        # Within the budget this collect is the query tokens' only read, so
+        # they are not cached.
         cap = max(1, self.broadcast_budget_bytes // (idx.meta.k * 8))
         pdf = query_tokens.select(*_QT_COLS).limit(cap + 1).toPandas()
         if len(pdf) <= cap:
@@ -724,9 +722,13 @@ class BatchSearcher:
                 ["query_id", "token_idx"], kind="stable"
             ).reset_index(drop=True))
 
-        # Over budget: chunks of whole queries. One job sizes the split
-        # (n_queries rows back); the whole token pdf is collected once when
-        # it fits the budget, else each chunk collects its own slice.
+        # Over budget: chunks of whole queries. The query tokens are read
+        # again from here on (the split, then the whole or per-chunk
+        # collects), so they are cached. One job sizes the split (n_queries
+        # rows back); the whole token pdf is collected once when it fits
+        # the budget, else each chunk collects its own slice.
+        query_tokens = query_tokens.cache()
+        self._live_caches.append(query_tokens)
         counts = query_tokens.groupBy("query_id").count().collect()
         qids = sorted(r["query_id"] for r in counts)
         ntok = sum(r["count"] for r in counts)

@@ -3,6 +3,15 @@
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]``; the same configs are the
 ones we would set on a real cluster (AQE on, sensible shuffle partitions,
 Arrow enabled for pandas UDF stages).
+
+PySpark's DataFrame-debugging call-site capture is off
+(``spark.python.sql.dataFrameDebugging.enabled=false``). When on, every
+wrapped ``Column``/``functions`` call walks the Python stack, retries a
+missing ``import ipykernel`` (a fresh ``sys.path`` scan each time) and
+sends about ten py4j commands to record the call site; the first such call
+also imports IPython into the Python process. The only loss is the Python
+call-site context that an ``AnalysisException`` message would otherwise
+carry; the JVM-side error and its Python traceback are unchanged.
 """
 
 from __future__ import annotations
@@ -48,6 +57,7 @@ def get_spark(app_name: str = "next-plaid-spark", shuffle_partitions: int | None
         # set fits 8g with room; raise via env only for bigger SFs
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
         # the driver's events.parquet carries TIMESTAMP(NANOS) which Spark
         # rejects by default; read as long (ns since epoch) and do exact

@@ -59,6 +59,11 @@ from next_plaid_spark.sources import tiered
 #: the token table's columns — the catalog-less read states them, since a
 #: snapshot whose every doc was deleted has no token file to infer them from
 TOKEN_SCHEMA = "doc_id long, token_idx int, code long, residual binary"
+#: the ``doc_stats`` and ``centroids`` columns. Every read of a table the
+#: engine wrote states its schema: a schema-less read runs a one-task
+#: footer-inference job first
+DOC_STATS_SCHEMA = "doc_id long, num_tokens long, codes array<bigint>"
+CENTROIDS_SCHEMA = "code long, vec array<float>"
 
 
 def bucket_table_name(path: str) -> str:
@@ -126,27 +131,21 @@ class PlaidIndex:
         self.spark = spark
         self.path = path
         self.meta = meta
-        # per-instance memos (r14 opt): a snapshot's dirs are immutable
-        # once the PlaidIndex over them exists (updates/deletes/evictions
-        # always write a NEW snapshot dir and return a NEW handle), so the
-        # file-listing + footer-inference job `spark.read.parquet` runs on
-        # every property access — one small Spark job per call, several
-        # calls per search — resolves to the same frame every time. Memoize
-        # the lazy DataFrame per dir (plan reuse only: every action still
-        # scans the parquet files). The catalog-table branch of `tokens` is
-        # NOT memoized — catalog state is session-mutable and the lookup
-        # runs no job.
+        # per-instance memos: a snapshot's dirs are immutable once the
+        # PlaidIndex over them exists (updates/deletes/evictions always
+        # write a NEW snapshot dir and return a NEW handle), so each dir's
+        # lazy frame is built once (plan reuse only: every action still
+        # scans the parquet files). Every read states its table's schema,
+        # so building a frame lists files but runs no job. The
+        # catalog-table branch of `tokens` is NOT memoized — catalog state
+        # is session-mutable and the lookup runs no job.
         self._df_memo: dict = {}
         self._centroids_memo = None
 
-    def _read_memo(self, key: str, path: str,
-                   schema: str | None = None) -> DataFrame:
+    def _read_memo(self, key: str, path: str, schema: str) -> DataFrame:
         df = self._df_memo.get(key)
         if df is None:
-            reader = self.spark.read
-            if schema is not None:
-                reader = reader.schema(schema)
-            df = reader.parquet(path)
+            df = self.spark.read.schema(schema).parquet(path)
             self._df_memo[key] = df
         return df
 
@@ -166,11 +165,13 @@ class PlaidIndex:
 
     @property
     def centroids_df(self) -> DataFrame:
-        return self._read_memo("centroids", os.path.join(self.path, "centroids"))
+        return self._read_memo("centroids", os.path.join(self.path, "centroids"),
+                               CENTROIDS_SCHEMA)
 
     @property
     def _doc_stats(self) -> DataFrame:
-        return self._read_memo("doc_stats", os.path.join(self.path, "doc_stats"))
+        return self._read_memo("doc_stats", os.path.join(self.path, "doc_stats"),
+                               DOC_STATS_SCHEMA)
 
     @property
     def doclens(self) -> DataFrame:
@@ -292,7 +293,7 @@ def write_centroids(spark: SparkSession, path: str, centroids: np.ndarray) -> No
     cdf = local_df(
         spark,
         [(int(i), [float(x) for x in row]) for i, row in enumerate(centroids)],
-        "code long, vec array<float>",
+        CENTROIDS_SCHEMA,
     )
     cdf.coalesce(1).write.mode("overwrite").parquet(os.path.join(path, "centroids"))
 

@@ -180,7 +180,8 @@ def write_doc_ranged(old_dir: str, new_dir: str, new_rows: DataFrame,
                       lambda p: may_hold(ranges[p], gone_ids))
     merged = new_rows
     if folded:
-        kept = new_rows.sparkSession.read.parquet(*sorted(folded))
+        kept = (new_rows.sparkSession.read.schema(new_rows.schema)
+                .parquet(*sorted(folded)))
         if gone is not None:
             kept = kept.join(gone, "doc_id", "left_anti")
         merged = kept.select(*new_rows.columns).unionByName(new_rows)

@@ -73,6 +73,68 @@ def test_max_documents_eviction(catalog, spark, documents):
     cat.delete_index("evict")
 
 
+@pytest.mark.parametrize("crash_at", ["append", "evict"])
+def test_eviction_crash_keeps_previous_version(spark, documents, tmp_path,
+                                               monkeypatch, crash_at):
+    """A crash inside an update that evicts down to ``max_documents`` —
+    in its staged append or in the eviction's snapshot write — leaves the
+    previous version the latest: it loads and serves the same rows, no
+    staging dir is left behind, and a retry equals an uncrashed update."""
+    import os
+
+    from next_plaid_spark.encoding import encode_queries
+    from next_plaid_spark.sources import index_store
+
+    docs = documents.filter(F.col("doc_id") < 40)
+    toks = encode_documents(docs)
+    meta = docs.select("doc_id", "lang", "source")
+    queries = encode_queries(documents.filter(F.col("doc_id") < 3).select(
+        F.col("doc_id").alias("query_id"), "text"))
+
+    def fresh(name):
+        cat = IndexCatalog(spark, str(tmp_path / name))
+        cat.create("ix", toks.filter(F.col("doc_id") < 20),
+                   metadata=meta.filter(F.col("doc_id") < 20))
+        cat.update_config("ix", max_documents=25)
+        return cat
+
+    def run(cat):
+        new = F.col("doc_id") >= 20
+        return cat.open("ix").update(toks.filter(new),
+                                     metadata=meta.filter(new))
+
+    def state(li):
+        return (os.path.basename(li.path), li.num_documents(),
+                sorted(map(tuple, li.metadata().df.collect())),
+                sorted(map(tuple, li.index.doclens.collect())),
+                sorted(map(tuple, li.search_batch(queries).collect())))
+
+    cat = fresh("crashed")
+    before = state(cat.open("ix"))
+    real = index_store.write_centroids
+    calls = []
+
+    def crash(*a, **kw):
+        # every snapshot hop writes its centroids after its tokens and
+        # doc_stats and before its meta.json marker
+        calls.append(1)
+        if len(calls) == {"append": 1, "evict": 2}[crash_at]:
+            raise RuntimeError("injected crash")
+        real(*a, **kw)
+
+    monkeypatch.setattr(index_store, "write_centroids", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run(cat)
+    monkeypatch.undo()
+
+    root = os.path.join(str(tmp_path / "crashed"), "ix")
+    assert not any(d.startswith(".") for d in os.listdir(root))
+    assert state(cat.open("ix")) == before
+    retried = state(run(cat))
+    assert retried == state(run(fresh("clean")))
+    assert retried[:2] == ("v1", 25)
+
+
 def test_vacuum_keeps_serving_snapshot(catalog, spark, documents):
     import os
 

@@ -12,6 +12,8 @@ invariants that make them viable at 100 TB:
       joins — the postings corpus never shuffles by doc.
   A4  no CartesianProduct in the listed relational entries.
   A5  relational aggregation entries run inside WholeStageCodegen.
+  A17 the semantic and filtered funnels broadcast their survivor set once
+      and cache no survivors.
 
 Writes PLANS.md (scan schemas, join strategies, codegen presence per query)
 and exits non-zero if any invariant fails. The report holds no run-specific
@@ -109,6 +111,24 @@ def tokens_scan_shuffles(plan: str,
                 shuffled += "Exchange hashpartitioning(doc_id" in lines[j]
                 break
     return n_scans, shuffled
+
+
+def survivor_nodes(plan: str, node: str) -> int:
+    """``node`` operators (e.g. ``BroadcastExchange``) whose subtree holds
+    the funnel's survivor cut — the ``arank`` rank window of Q7/Q8."""
+    lines = plan.splitlines()
+    depth = [len(ln) - len(ln.lstrip(" :+-")) for ln in lines]
+    n = 0
+    for i, ln in enumerate(lines):
+        if node not in ln:
+            continue
+        j = i + 1
+        while j < len(lines) and depth[j] > depth[i]:
+            if "arank" in lines[j]:
+                n += 1
+                break
+            j += 1
+    return n
 
 
 def _no_ids(columns: str) -> str:
@@ -471,6 +491,42 @@ def main() -> int:
         )
     except Exception as e:
         failures.append(f"A15 bucketed-tokens probe errored: {e}")
+
+    # A17: the Q9 rerank reads the survivor set once — its per-doc
+    # aggregate is broadcast ONCE onto the token rows, and nothing caches
+    # the survivors between the cut and the rerank
+    try:
+        from next_plaid_spark.encoding import encode_queries
+        from next_plaid_spark.plans.searcher import (
+            BatchSearcher as _BS17,
+            SearchParams as _SP17,
+        )
+
+        docs17 = q._t(spark, sf_dir, "documents")
+        qt17 = encode_queries(docs17.filter(SF.col("doc_id") < 50).select(
+            SF.col("doc_id").alias("query_id"), "text"))
+        s17 = _BS17(q._plaid_index(spark, sf_dir),
+                    _SP17(top_k=10, n_full_scores=256))
+        rows17 = []
+        for label, sub in (
+                ("semantic", None),
+                ("filtered", docs17.filter(SF.col("doc_id") % 2 == 0)
+                 .select("doc_id"))):
+            p17 = plan_of(s17.search(qt17, subset=sub))
+            s17.release()
+            n_b = survivor_nodes(p17, "BroadcastExchange")
+            n_c = survivor_nodes(p17, "InMemoryRelation")
+            if n_b != 1:
+                failures.append(f"A17 {label}: {n_b} survivor broadcasts "
+                                "(expected 1)")
+            if n_c:
+                failures.append(f"A17 {label}: {n_c} cached survivor sets")
+            rows17.append(f"- {label}: survivor broadcasts {n_b} (gate: 1), "
+                          f"cached survivor sets {n_c} (gate: 0)\n")
+        sections.append("## survivor set (A17, one broadcast, no cache)\n\n"
+                        + "".join(rows17))
+    except Exception as e:
+        failures.append(f"A17 survivor probe errored: {e}")
 
     # A16-legs (r15): the code_search entries collect their semantic and
     # keyword legs during construction, so the stored-index discipline is
